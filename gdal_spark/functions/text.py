@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from gdal_spark.session import spread_for_kernel
+
 # Tiny per-language stopword marker sets for the heuristic language id.
 LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "in"],
@@ -253,10 +255,7 @@ def _passage_win_frame(df, text_col: str, key_col: str, window: int,
                 out["c"] = np.concatenate(cs)
             yield pd.DataFrame(out)
 
-    src = df.select(key_col, text_col)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = spread_for_kernel(df.select(key_col, text_col))
     return src.mapInPandas(kernel, schema)
 
 
@@ -446,10 +445,7 @@ def remove_duplicate_passages(df, text_col: str = "text",
         IntegerType, LongType, StringType, StructField, StructType,
     )
 
-    src = df.select(key_col, text_col)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = spread_for_kernel(df.select(key_col, text_col))
     norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)),
                                    r"\s+", " "))
     toks = F.split(norm, " ")

@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructField, StructType
 )
 
+from gdal_spark.session import spread_for_kernel
+
 # --- exact -----------------------------------------------------------
 
 
@@ -145,13 +147,7 @@ def minhash_signatures(
                 "sig": [s.tolist() for s in sig_rows],
             })
 
-    src = df.select(key_col, text_col)
-    # small inputs arrive in a handful of parquet splits; spread the
-    # CPU-bound kernel (at 100-TB scale inputs already have thousands
-    # of partitions and this is a no-op)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = spread_for_kernel(df.select(key_col, text_col))
     return src.mapInPandas(kernel, schema)
 
 
@@ -793,11 +789,7 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
                       F.col(text_col).alias("text_a"))
     tb = texts.select(F.col(key_col).alias("b"),
                       F.col(text_col).alias("text_b"))
-    joined = pairs.join(ta, "a").join(tb, "b")
-    # AQE coalesces the small join output to one partition, which
-    # serializes the CPU-bound shingle kernel — spread it explicitly
-    joined = joined.repartition(
-        df.sparkSession.sparkContext.defaultParallelism)
+    joined = spread_for_kernel(pairs.join(ta, "a").join(tb, "b"))
     schema = StructType(
         [StructField("a", joined.schema["a"].dataType),
          StructField("b", joined.schema["b"].dataType),

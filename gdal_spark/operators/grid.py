@@ -367,12 +367,9 @@ def _grid_all_points(points: DataFrame, grid: GridSpec, algorithm: str,
 
     src = points.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"),
                         F.col(v_col).alias("v"))
+    # exactly par partials: the shuffle below is n_partials x raster bytes
     par = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() != par:
-        # cap partial count (shuffle = n_partials x raster bytes) and
-        # spread small inputs across the cluster
-        src = src.repartition(par)
-    part = src.mapInPandas(partials, _PARTIAL_GRID_SCHEMA)
+    part = src.repartition(par).mapInPandas(partials, _PARTIAL_GRID_SCHEMA)
 
     def reduce_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])

@@ -33,6 +33,7 @@ from gdal_spark.geometry.packed import geom_area, ring_signed_area
 from gdal_spark.geometry.wkb import (
     multipolygon_wkb, parse_wkb, polygon_wkb,
 )
+from gdal_spark.session import spread_for_kernel
 
 
 def clip_ring_convex(ring: np.ndarray, clip: np.ndarray) -> np.ndarray:
@@ -301,9 +302,7 @@ def overlay_lines(spark: SparkSession, lines_df: DataFrame,
         raise ValueError(f"unknown line overlay op {op!r}")
     idx = _method_index(method_pdf, geom_col)
     bc = spark.sparkContext.broadcast(idx)
-    par = spark.sparkContext.defaultParallelism
-    if lines_df.rdd.getNumPartitions() < par:
-        lines_df = lines_df.repartition(par)
+    lines_df = spread_for_kernel(lines_df)
     want_isect = op in {"intersection", "clip", "identity"}
     want_erase = op in {"erase", "identity"}
 
@@ -748,12 +747,7 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
             & (F.col("_my0") <= F.col(y1c)),
             "left_semi")
 
-    # a single-split source (one parquet file, or AQE-coalesced join
-    # output) would serialize the CPU-bound GH kernel into one task;
-    # widen to the session's parallelism before mapInPandas
-    par = spark.sparkContext.defaultParallelism
-    if input_df.rdd.getNumPartitions() < par:
-        input_df = input_df.repartition(par)
+    input_df = spread_for_kernel(input_df)
 
     want_isect = op in {"intersection", "clip", "identity", "union"}
     want_leftover = op in {"erase", "identity", "union",

@@ -60,6 +60,7 @@ import shlex
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gdal_spark.functions import geo
+from gdal_spark.session import spread_for_kernel
 
 
 def run_vector_pipeline(spark: SparkSession, pipeline: str,
@@ -386,15 +387,10 @@ def _geom_map(df: DataFrame, fn, geom_col: str = "geometry",
               drop_empty: bool = False) -> DataFrame:
     """Apply ``fn(Geom) -> wkb bytes | None`` to every feature.
 
-    The kernel is CPU-bound per feature; a narrow upstream (a
-    one-split parquet scan, an AQE-coalesced join output) would
-    serialize it on one core — spread to defaultParallelism first
-    (the q45 single-partition buffer read 20 s on one core, ~1 s
-    spread)."""
+    The kernel is CPU-bound per feature (the q45 single-partition
+    buffer read 20 s on one core, ~1 s spread)."""
     schema = df.schema
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    df = spread_for_kernel(df)
 
     def kernel(batches):
         import pandas as pd
@@ -622,14 +618,9 @@ def _mk_clip_bbox(x0: float, y0: float, x1: float, y1: float):
 
 def _explode_parts(df: DataFrame, geom_col: str = "geometry"
                    ) -> DataFrame:
-    """Multi-part -> one row per part (gdalalg_vector_explode.cpp).
-
-    Same narrow-upstream spread as _geom_map: the per-feature python
-    kernel must not run serialized on a one-split scan."""
+    """Multi-part -> one row per part (gdalalg_vector_explode.cpp)."""
     schema = df.schema
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    df = spread_for_kernel(df)
 
     def kernel(batches):
         import pandas as pd
@@ -675,9 +666,7 @@ def _check_geometry(df: DataFrame, geom_col: str = "geometry"
     # filterable with the dialect's integer comparisons
     schema = StructType(list(df.schema.fields)
                         + [StructField("geom_valid", IntegerType())])
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    df = spread_for_kernel(df)
 
     def kernel(batches):
         from gdal_spark.geometry import wkb as W

@@ -45,16 +45,50 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(key)
 
 
+# logical operators planned over an exchange (a shuffle or a broadcast)
+_EXCHANGE_OPS = frozenset({
+    "Aggregate", "Join", "Window", "RepartitionByExpression", "GlobalLimit",
+    "Offset", "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas"})
+
+
+def _has_exchange(plan) -> bool:
+    """Whether a JVM logical plan, subqueries included, plans an exchange."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if (name in _EXCHANGE_OPS
+                or name == "Repartition" and node.shuffle()
+                or name == "Sort" and getattr(node, "global")()):
+            return True
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return False
+
+
 def spread_for_kernel(df):
-    """Repartition a single-partition DataFrame to
-    defaultParallelism.  CPU-bound python kernels (format encoders)
-    otherwise serialize on a one-split scan — a single small parquet
-    file reads as ONE partition regardless of row count.  Inputs
-    with >1 partition are left alone: parts-mode writers emit one
-    file per partition, so an explicit user repartition(N) keeps
-    producing exactly N parts."""
+    """The engine's one partition-width rule in front of a CPU-bound
+    python kernel.  It reads ``df``'s optimized logical plan and runs
+    no Spark job:
+
+    1. The nearest width-setting node, looking through Project and
+       Filter, is ``repartition(n)``, ``coalesce(n)`` or a fixed-count
+       RepartitionByExpression: ``df`` is kept, the caller chose.
+    2. The plan has an exchange (Aggregate, Join, Window, global Sort,
+       grouped pandas): ``df.repartition(defaultParallelism)``; under
+       AQE a partition count would run the shuffle stages twice.
+    3. Otherwise ``df`` is spread to defaultParallelism when its
+       partition count, which then runs no job, is lower (one small
+       parquet file scans as ONE partition)."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if par > 1 and df.rdd.getNumPartitions() == 1:
+    plan = top = df._jdf.queryExecution().optimizedPlan()
+    while top.getClass().getSimpleName() in ("Project", "Filter"):
+        top = top.child()
+    name = top.getClass().getSimpleName()
+    if name == "Repartition" or (name == "RepartitionByExpression"
+                                 and top.optNumPartitions().isDefined()):
+        return df
+    if _has_exchange(plan) or df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
 

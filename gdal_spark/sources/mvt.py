@@ -54,6 +54,7 @@ from pyspark.sql.types import (
 )
 
 from gdal_spark.functions.geo import MERC_LAT_MAX, ORIGIN
+from gdal_spark.session import spread_for_kernel
 
 # ---------------------------------------------------------------------
 # protobuf wire primitives (public protobuf encoding spec)
@@ -819,8 +820,6 @@ def _mvt_prepare_packed(df: DataFrame, geometry_col: str, minzoom: int,
         if rows_b:
             yield pd.DataFrame({"bucket": rows_b, "blob": rows_d})
 
-    from gdal_spark.session import spread_for_kernel
-
     return (spread_for_kernel(df).mapInPandas(pack, pack_schema)
             .repartition(par, "bucket")
             .sortWithinPartitions("bucket"))
@@ -1157,8 +1156,6 @@ def _mvt_prepare(df: DataFrame, geometry_col: str, minzoom: int,
                                 rows = []
             if rows:
                 yield pd.DataFrame(rows)
-
-    from gdal_spark.session import spread_for_kernel
 
     spark = df.sparkSession
     par = max(spark.sparkContext.defaultParallelism, 8)

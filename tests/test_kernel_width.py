@@ -1,0 +1,128 @@
+"""The partition-width rule in front of python kernels
+(``gdal_spark.session.spread_for_kernel``): building a kernel's
+frame runs no Spark job, even over a shuffle, and a caller's explicit
+width reaches the parts-mode writers unchanged."""
+
+import os
+import uuid
+
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from gdal_spark.geometry.wkb import linestring_wkb, point_wkb, polygon_wkb
+
+
+def _jobs_run(spark, build):
+    """Spark job ids that ``build()`` runs, read from its own group."""
+    sc = spark.sparkContext
+    group = f"kernel-width-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _grouped_lines(spark):
+    pdf = pd.DataFrame({
+        "fid": np.arange(40, dtype=np.int64),
+        "geometry": [linestring_wkb(np.array([(i, 0.0), (i + 1.0, 1.0)]))
+                     for i in range(40)],
+    })
+    return (spark.createDataFrame(pdf).groupBy("fid")
+            .agg(F.first("geometry").alias("geometry")))
+
+
+def _grouped_text(spark):
+    pdf = pd.DataFrame({
+        "doc_id": np.arange(40, dtype=np.int64),
+        "text": [f"the quick brown fox {i} jumps over the lazy dog"
+                 for i in range(40)],
+    })
+    return (spark.createDataFrame(pdf).groupBy("doc_id")
+            .agg(F.first("text").alias("text")))
+
+
+def _pipeline(verb):
+    def build(spark):
+        from gdal_spark.plans.pipeline import run_vector_pipeline
+
+        return run_vector_pipeline(spark, f"read input ! {verb}",
+                                   {"input": _grouped_lines(spark)})
+    return build
+
+
+def _minhash(spark):
+    from gdal_spark.operators.dedup import minhash_signatures
+
+    return minhash_signatures(_grouped_text(spark), num_hashes=16)
+
+
+def _passage_windows(spark):
+    from gdal_spark.functions.text import _passage_win_frame
+
+    return _passage_win_frame(_grouped_text(spark), "text", "doc_id", 3,
+                              with_pos=False)
+
+
+def _overlay_lines(spark):
+    from gdal_spark.operators.layer_algebra import overlay_lines
+
+    sq = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0), (0.0, 0.0)]
+    method = pd.DataFrame({"fid": np.array([0], dtype=np.int64),
+                           "geometry": [polygon_wkb([np.array(sq)])]})
+    return overlay_lines(spark, _grouped_lines(spark), method, "clip")
+
+
+@pytest.mark.parametrize("build", [
+    _pipeline("buffer 0.5"),            # _geom_map
+    _pipeline("explode"),               # _explode_parts
+    _pipeline("check-geometry"),        # _check_geometry
+    _minhash,
+    _passage_windows,
+    _overlay_lines,
+], ids=["geom_map", "explode_parts", "check_geometry",
+        "minhash_signatures", "passage_win_frame", "overlay_lines"])
+def test_kernel_over_shuffle_builds_without_a_job(spark, build):
+    """A groupBy result into a kernel site: the width decision reads
+    the plan, so building the lazy frame runs no Spark job (a
+    partition-count probe would run the upstream shuffle stage here
+    and again at the real action)."""
+    assert _jobs_run(spark, lambda: build(spark)) == []
+
+
+def _writers():
+    from gdal_spark.sources.flatgeobuf import write_flatgeobuf
+    from gdal_spark.sources.geojson import write_geojson
+    from gdal_spark.sources.geopackage import write_gpkg
+    from gdal_spark.sources.shapefile import write_shapefile
+    from gdal_spark.sources.xmlgeo import write_gpx
+
+    return [(write_geojson, ".geojsonl"), (write_shapefile, ".shp"),
+            (write_flatgeobuf, ".fgb"), (write_gpkg, ".gpkg"),
+            (write_gpx, ".gpx")]
+
+
+@pytest.mark.parametrize("writer,ext", _writers(),
+                         ids=["geojson", "shapefile", "flatgeobuf",
+                              "geopackage", "gpx"])
+@pytest.mark.parametrize("width", [1, 2])
+def test_parts_writer_keeps_explicit_width(spark, tmp_path, writer, ext,
+                                           width):
+    """coalesce(1) into a parts-mode writer writes exactly one part
+    file and repartition(2) exactly two: a width the caller set is
+    never spread."""
+    pdf = pd.DataFrame({
+        "geometry": [point_wkb(float(i % 50), float(-(i % 25)))
+                     for i in range(300)],
+        "ele": np.arange(300, dtype=np.float64),
+    })
+    df = spark.createDataFrame(pdf)
+    df = df.coalesce(1) if width == 1 else df.repartition(2)
+    out = str(tmp_path / "parts")
+    writer(df, out)
+    files = [f for f in os.listdir(out) if f.endswith(ext)]
+    assert len(files) == width

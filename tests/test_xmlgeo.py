@@ -257,7 +257,9 @@ def test_parts_writer_spreads_one_split_input(spark, tmp_path):
                      for i in range(300)],
         "ele": np.arange(300, dtype=np.float64),
     })
-    df = spark.createDataFrame(pdf).coalesce(1)
+    src = str(tmp_path / "one_split.parquet")
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(src)
+    df = spark.read.parquet(src)
     out = str(tmp_path / "spread_gpx")
     write_gpx(df, out, layer="waypoints")
     files = [f for f in os.listdir(out) if f.endswith(".gpx")]

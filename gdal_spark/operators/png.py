@@ -12,8 +12,19 @@ consumable by any slippy-map client.
 
 Supported: 8-bit greyscale (h, w), RGB (h, w, 3), RGBA (h, w, 4).
 encode_png is vectorized across rows (all five filter candidates
-compute as whole-image arrays); decode_png exists for the golden
-round-trip tests and for reading small tiles back.
+compute as arrays over every row that needs a search); decode_png
+exists for the golden round-trip tests and for reading small tiles
+back.
+
+All-zero rows skip the filter search.  Such a row costs 0 under
+filter None, and filter None is candidate 0, so the min-sum argmin
+(which takes the first minimum) already picks it and writes a zero
+filter byte plus zero data.  encode_png therefore builds candidates
+only for the non-zero rows (each still predicted from its true row
+above, zero or not) and scatters them into a zeroed scanline
+buffer: the output is byte-identical to searching every row, and
+the per-tile cost follows the non-zero rows of the sparse density
+tiles rather than the tile size.
 """
 
 from __future__ import annotations
@@ -58,30 +69,33 @@ def encode_png(arr: np.ndarray, level: int = 6) -> bytes:
     bpp = ch  # bytes per pixel (8-bit only)
 
     flat = np.ascontiguousarray(a).reshape(h, w * ch)
-    # neighbors for the whole image at once
-    left = np.zeros_like(flat)
-    left[:, bpp:] = flat[:, :-bpp]
-    up = np.zeros_like(flat)
-    up[1:] = flat[:-1]
-    upleft = np.zeros_like(flat)
-    upleft[1:, bpp:] = flat[:-1, :-bpp]
+    # only non-zero rows need the filter search (module docstring);
+    # their neighbours come from the full image, zeros above row 0
+    nz = np.flatnonzero(flat.any(axis=1))
+    cur = flat[nz]
+    up = flat[np.maximum(nz - 1, 0)]
+    up[nz == 0] = 0
+    left = np.zeros_like(cur)
+    left[:, bpp:] = cur[:, :-bpp]
+    upleft = np.zeros_like(cur)
+    upleft[:, bpp:] = up[:, :-bpp]
 
     cands = np.stack([
-        flat,
-        flat - left,
-        flat - up,
-        flat - ((left.astype(np.uint16) + up.astype(np.uint16)) // 2
-                ).astype(np.uint8),
-        flat - _paeth(left, up, upleft),
-    ])  # (5, h, w*ch) — uint8 arithmetic wraps mod 256 per the spec
+        cur,
+        cur - left,
+        cur - up,
+        cur - ((left.astype(np.uint16) + up.astype(np.uint16)) // 2
+               ).astype(np.uint8),
+        cur - _paeth(left, up, upleft),
+    ])  # (5, rows, w*ch) — uint8 arithmetic wraps mod 256 per the spec
     # min sum of |signed byte| per row picks the filter (spec 12.8)
     signed = cands.astype(np.int16)
     cost = np.where(signed < 128, signed, 256 - signed).sum(axis=2)
-    pick = cost.argmin(axis=0)  # (h,)
+    pick = cost.argmin(axis=0)  # (rows,)
 
-    rows = np.empty((h, 1 + w * ch), dtype=np.uint8)
-    rows[:, 0] = pick
-    rows[:, 1:] = cands[pick, np.arange(h)]
+    rows = np.zeros((h, 1 + w * ch), dtype=np.uint8)
+    rows[nz, 0] = pick
+    rows[nz, 1:] = cands[pick, np.arange(len(nz))]
     raw = rows.tobytes()
 
     ihdr = struct.pack(">IIBBBBB", w, h, 8, _COLOR_TYPE[ch], 0, 0, 0)

@@ -902,6 +902,65 @@ def tile_y_file(tiles: DataFrame, convention: str = "xyz") -> DataFrame:
     )
 
 
+def _to_byte(arr: np.ndarray) -> np.ndarray:
+    """Clip + round to Byte (the translate -ot Byte convention).
+    Rounding is the identity on integers, so integer tiles skip the
+    float pass."""
+    if arr.dtype == np.uint8:
+        return arr
+    if arr.dtype.kind in "iu":
+        return np.clip(arr, 0, 255).astype(np.uint8)
+    return np.clip(np.round(arr.astype(np.float64)),
+                   0, 255).astype(np.uint8)
+
+
+def _by_tile(tiles: DataFrame, y_col: str) -> DataFrame:
+    """Hash-partition on the tile key at defaultParallelism and sort
+    so a tile's bands are adjacent for _tile_rows' carry
+    (groupBy().applyInPandas would pay ~ms per tile at millions of
+    tiles — CLAUDE.md small-groups lesson)."""
+    par = tiles.sparkSession.sparkContext.defaultParallelism
+    return (tiles.repartition(par, "zoom", "tile_x", y_col)
+            .sortWithinPartitions("zoom", "tile_x", y_col, "band"))
+
+
+def _tile_rows(batches: Iterator[pd.DataFrame], y_col: str,
+               ok_bands: tuple, format: str, to_byte: bool,
+               emit, columns: list) -> Iterator[pd.DataFrame]:
+    """Carry each tile's bands across the batches of a _by_tile
+    frame: stack them into one (h, w[, c]) image (Byte when
+    ``to_byte``) and yield, per input batch, a frame of
+    ``emit((zoom, tile_x, y), tile_size, img)`` rows for the tiles
+    it completed."""
+    cur = None
+    chans: list = []
+    cur_ts = 0
+
+    def done():
+        if len(chans) not in ok_bands:
+            raise ValueError(f"{format} tile needs bands in {ok_bands}; "
+                             f"got {len(chans)}")
+        img = chans[0] if len(chans) == 1 else np.stack(chans, axis=-1)
+        return emit(cur, cur_ts, img)
+
+    for b in batches:
+        rows = []
+        for z, tx, ty, data, dts, ts in zip(
+                b["zoom"], b["tile_x"], b[y_col], b["data"], b["dtype"],
+                b["tile_size"]):
+            key = (int(z), int(tx), int(ty))
+            if key != cur:
+                if cur is not None:
+                    rows.append(done())
+                cur, chans, cur_ts = key, [], int(ts)
+            arr = decode_tile(data, dts, cur_ts)
+            chans.append(_to_byte(arr) if to_byte else arr)
+        if rows:
+            yield pd.DataFrame(rows, columns=columns)
+    if cur is not None:
+        yield pd.DataFrame([done()], columns=columns)
+
+
 def tile_blob_frame(tiles: DataFrame, format: str = "png",
                     quality: int = 75) -> DataFrame:
     """TILE_SCHEMA -> DataFrame(zoom, tile_x, tile_y, blob,
@@ -932,55 +991,13 @@ def tile_blob_frame(tiles: DataFrame, format: str = "png",
         StructField("blob", BinaryType()),
         StructField("tile_size", IntegerType()),
     ])
-    spark = tiles.sparkSession
-    par = max(spark.sparkContext.defaultParallelism, 8)
-    wt = (tiles.repartition(par, "zoom", "tile_x", "tile_y")
-          .sortWithinPartitions("zoom", "tile_x", "tile_y", "band"))
+    wt = _by_tile(tiles, "tile_y")
 
     def encode_kernel(batches: Iterator[pd.DataFrame]
                       ) -> Iterator[pd.DataFrame]:
-        cur = None
-        chans: list = []
-        cur_ts = 0
-
-        def flush(rows):
-            if cur is None:
-                return
-            if len(chans) not in ok_bands:
-                raise ValueError(
-                    f"{format} tile needs bands in {ok_bands}; "
-                    f"got {len(chans)}")
-            img = chans[0] if len(chans) == 1 \
-                else np.stack(chans, axis=-1)
-            rows["zoom"].append(cur[0])
-            rows["tile_x"].append(cur[1])
-            rows["tile_y"].append(cur[2])
-            rows["blob"].append(enc(img))
-            rows["tile_size"].append(cur_ts)
-
-        for b in batches:
-            rows = {"zoom": [], "tile_x": [], "tile_y": [],
-                    "blob": [], "tile_size": []}
-            for _, r in b.iterrows():
-                key = (int(r["zoom"]), int(r["tile_x"]),
-                       int(r["tile_y"]))
-                if key != cur:
-                    flush(rows)
-                    cur = key
-                    chans = []
-                    cur_ts = int(r["tile_size"])
-                arr = decode_tile(r["data"], r["dtype"], cur_ts)
-                if arr.dtype != np.uint8:
-                    arr = np.clip(np.round(arr.astype(np.float64)),
-                                  0, 255).astype(np.uint8)
-                chans.append(arr)
-            if rows["zoom"]:
-                yield pd.DataFrame(rows)
-        rows = {"zoom": [], "tile_x": [], "tile_y": [],
-                "blob": [], "tile_size": []}
-        flush(rows)
-        if rows["zoom"]:
-            yield pd.DataFrame(rows)
+        yield from _tile_rows(
+            batches, "tile_y", ok_bands, format, True,
+            lambda key, ts, img: (*key, enc(img), ts), out_schema.names)
 
     return wt.mapInPandas(encode_kernel, out_schema)
 
@@ -1061,7 +1078,7 @@ def write_tiles(tiles: DataFrame, path: str, convention: str = "xyz",
 
         shutil.rmtree(path, ignore_errors=True)
     elif mode != "append":
-        raise ValueError(f"unknown png sink mode {mode!r}")
+        raise ValueError(f"unknown {format} sink mode {mode!r}")
 
     from pyspark.sql.types import LongType, StructField
 
@@ -1085,79 +1102,34 @@ def write_tiles(tiles: DataFrame, path: str, convention: str = "xyz",
         StructField("file_y", IntegerType()),
         StructField("nbytes", LongType()),
     ])
-    wt = tile_y_file(tiles, convention)
-    spark = tiles.sparkSession
-    par = max(spark.sparkContext.defaultParallelism, 8)
-    # hash-partition by tile key + sort so a tile's bands are
-    # adjacent; one mapInPandas with a cross-batch carry writes
-    # files (groupBy().applyInPandas would pay ~ms per tile at
-    # millions of tiles — CLAUDE.md small-groups lesson)
-    wt = wt.repartition(par, "zoom", "tile_x", "file_y") \
-        .sortWithinPartitions("zoom", "tile_x", "file_y", "band")
+    wt = _by_tile(tile_y_file(tiles, convention), "file_y")
+
+    def write_file(key, ts, img):
+        import os
+
+        z, tx, fy = key
+        d = os.path.join(path, str(z), str(tx))
+        os.makedirs(d, exist_ok=True)
+        if format == "gtiff":
+            # native dtype + EPSG:3857 georeferencing derived from the
+            # tile key (the reference tile writer's GeoTIFF output path)
+            ty = fy if convention == "xyz" else (1 << z) - 1 - fy
+            size = 2.0 * geo.ORIGIN / (1 << z)
+            px = size / ts
+            gt = (-geo.ORIGIN + tx * size, px, 0.0,
+                  geo.ORIGIN - ty * size, 0.0, -px)
+            data = encode_gtiff(img, geotransform=gt, epsg=3857)
+        else:
+            data = enc(img)
+        with open(os.path.join(d, f"{fy}.{ext}"), "wb") as fh:
+            fh.write(data)
+        return z, tx, fy, len(data)
 
     def write_files(batches: Iterator[pd.DataFrame]
                     ) -> Iterator[pd.DataFrame]:
-        import os
-
-        cur = None          # (zoom, tile_x, file_y)
-        chans: list = []
-        cur_ts = 0
-
-        def flush(rows):
-            if cur is None:
-                return
-            z, tx, fy = cur
-            if len(chans) not in ok_bands:
-                raise ValueError(
-                    f"{format} tile needs bands in {ok_bands}; "
-                    f"got {len(chans)}")
-            img = chans[0] if len(chans) == 1 \
-                else np.stack(chans, axis=-1)
-            d = os.path.join(path, str(z), str(tx))
-            os.makedirs(d, exist_ok=True)
-            if format == "gtiff":
-                # native dtype + EPSG:3857 georeferencing derived
-                # from the tile key (the reference tile writer's
-                # GeoTIFF output path)
-                ty = fy if convention == "xyz" \
-                    else (1 << z) - 1 - fy
-                size = 2.0 * geo.ORIGIN / (1 << z)
-                px = size / cur_ts
-                gt = (-geo.ORIGIN + tx * size, px, 0.0,
-                      geo.ORIGIN - ty * size, 0.0, -px)
-                data = encode_gtiff(img, geotransform=gt, epsg=3857)
-            else:
-                data = enc(img)
-            with open(os.path.join(d, f"{fy}.{ext}"), "wb") as fh:
-                fh.write(data)
-            rows["zoom"].append(z)
-            rows["tile_x"].append(tx)
-            rows["file_y"].append(fy)
-            rows["nbytes"].append(len(data))
-
-        for b in batches:
-            rows = {"zoom": [], "tile_x": [], "file_y": [],
-                    "nbytes": []}
-            for _, r in b.iterrows():
-                key = (int(r["zoom"]), int(r["tile_x"]),
-                       int(r["file_y"]))
-                if key != cur:
-                    flush(rows)
-                    cur = key
-                    chans = []
-                    cur_ts = int(r["tile_size"])
-                arr = decode_tile(r["data"], r["dtype"], cur_ts)
-                if arr.dtype != np.uint8 and format != "gtiff":
-                    # png/jpeg are Byte formats (translate -ot Byte
-                    # convention); gtiff keeps the native dtype
-                    arr = np.clip(np.round(arr.astype(np.float64)),
-                                  0, 255).astype(np.uint8)
-                chans.append(arr)
-            if rows["zoom"]:
-                yield pd.DataFrame(rows)
-        rows = {"zoom": [], "tile_x": [], "file_y": [], "nbytes": []}
-        flush(rows)
-        if rows["zoom"]:
-            yield pd.DataFrame(rows)
+        # png/jpeg are Byte formats; gtiff keeps the native dtype
+        yield from _tile_rows(batches, "file_y", ok_bands, format,
+                              format != "gtiff", write_file,
+                              out_schema.names)
 
     wt.mapInPandas(write_files, out_schema).count()

@@ -9,11 +9,22 @@ Re-creates the reference's spatial filter/join semantics
             of the bbox pretest; cells play the role GDAL gives its
             Hilbert/R-tree indexes, packedrtree.cpp:73-132)
   stage 2 — rectangle fast-accept when the polygon IS a rectangle
-            (ogrlayer.cpp:3922 rectangle detection) — pure JVM-side
-            range predicates, no Python at all
+            (ogrlayer.cpp:3922 rectangle detection) — a JVM-side range
+            predicate; a rectangle candidate outside it is dropped
+            before any Python
+  stage 2b — interior-cell fast accept: a candidate in a cover cell
+            wholly inside its polygon needs no exact test
   stage 3 — exact vectorized ray-cast PIP over packed coordinate
             arrays (ogrlinearring.cpp:452-521 semantics) inside an
             Arrow-batched mapInPandas kernel.
+
+Stages 2 and 2b do not form a separate output arm: they compute an
+``_exact`` flag column, and every surviving candidate goes through
+the ONE stage-3 kernel, which passes unflagged rows through and
+ray-casts only the flagged ones.  A JVM arm unioned beside a Python
+arm would re-run the whole upstream (scan, render, cell assign,
+candidate join) once per arm, since no exchange below a broadcast
+join is reused.
 
 Scale notes (100 TB design point):
 * the polygon layer (admin boundaries etc.) is broadcast — the big
@@ -92,6 +103,57 @@ def _cells_full_in(g, txs: np.ndarray, tys: np.ndarray, res: int
     return (~touches) & inside
 
 
+def _cell_range(bbox, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Tile x and tile y (flattened) of every resolution-*res* cell a
+    lon/lat bbox touches: the GetTileIndices math of point->cell
+    assignment (apps/gdalalg_raster_tile.cpp:457-480), so floor
+    monotonicity makes it a superset of the cells of any point in the
+    bbox."""
+    n = 1 << res
+    span = geo.tile_span(res)
+    minx, miny, maxx, maxy = bbox
+
+    def tile(m: float) -> int:
+        return int(np.clip(np.floor(m / span + 1e-3), 0, n - 1))
+
+    txs, tys = np.meshgrid(
+        np.arange(tile(_merc_x(minx) + geo.ORIGIN),
+                  tile(_merc_x(maxx) + geo.ORIGIN) + 1),
+        np.arange(tile(geo.ORIGIN - _merc_y(maxy)),
+                  tile(geo.ORIGIN - _merc_y(miny)) + 1))
+    return txs.ravel(), tys.ravel()
+
+
+def _cover_pdf(fids, wkbs, res: int) -> tuple[pd.DataFrame, np.ndarray]:
+    """The polygon_cell_cover_pdf rows of (fid, WKB) pairs, plus each
+    row's position in the input."""
+    n = 1 << res
+    rows = {"cell": [], "fid": [], "minx": [], "miny": [],
+            "maxx": [], "maxy": [], "is_rect": [], "full_in": []}
+    src = []
+    for k, (fid, wkb) in enumerate(zip(fids, wkbs)):
+        g = parse_wkb(bytes(wkb))
+        bbox = g.bbox()
+        rect = _is_axis_rect(g)
+        txs, tys = _cell_range(bbox, res)
+        m = len(txs)
+        full = (np.zeros(m, dtype=bool) if rect
+                else _cells_full_in(g, txs.astype(np.float64),
+                                    tys.astype(np.float64), res))
+        rows["cell"].extend((txs * n + tys).tolist())
+        rows["fid"].extend([int(fid)] * m)
+        for name, v in zip(("minx", "miny", "maxx", "maxy"), bbox):
+            rows[name].extend([v] * m)
+        rows["is_rect"].extend([rect] * m)
+        rows["full_in"].extend(full.tolist())
+        src.extend([k] * m)
+    dtypes = {"cell": np.int64, "fid": np.int64, "is_rect": bool,
+              "full_in": bool}
+    return (pd.DataFrame({c: np.array(v, dtype=dtypes.get(c, np.float64))
+                          for c, v in rows.items()}),
+            np.array(src, dtype=np.int64))
+
+
 def polygon_cell_cover_pdf(polys_pdf: pd.DataFrame, res: int,
                            fid_col: str = "fid",
                            geom_col: str = "geometry") -> pd.DataFrame:
@@ -99,53 +161,90 @@ def polygon_cell_cover_pdf(polys_pdf: pd.DataFrame, res: int,
     bbox at resolution *res*.
 
     Uses the same GetTileIndices math as point->cell assignment
-    (apps/gdalalg_raster_tile.cpp:457-480), so floor monotonicity
-    guarantees the cover is a superset of matching cells.  The bbox
-    columns enable the JVM-side envelope reject; ``is_rect`` marks
-    polygons whose bbox IS the geometry (fast accept,
+    (``_cell_range``), so the cover is a superset of matching cells.
+    The bbox columns enable the JVM-side envelope reject; ``is_rect``
+    marks polygons whose bbox IS the geometry (fast accept,
     ogrlayer.cpp:3922); ``full_in`` marks INTERIOR cells — every point
     assigned there is inside regardless of ray-cast edge rules, so
-    those rows accept JVM-side and only boundary cells pay the exact
-    Python kernel (the interior/boundary split of a prepared-geometry
+    those rows accept without a ray cast and only boundary cells pay
+    the exact test (the interior/boundary split of a prepared-geometry
     containment index).
     """
-    n = 1 << res
-    span = geo.tile_span(res)
-    rows = {"cell": [], "fid": [], "minx": [], "miny": [],
-            "maxx": [], "maxy": [], "is_rect": [], "full_in": []}
-    for fid, wkb in zip(polys_pdf[fid_col], polys_pdf[geom_col]):
-        g = parse_wkb(bytes(wkb))
-        minx, miny, maxx, maxy = g.bbox()
-        rect = _is_axis_rect(g)
-        mx0, mx1 = _merc_x(minx), _merc_x(maxx)
-        my0, my1 = _merc_y(miny), _merc_y(maxy)
-        tx0 = int(np.clip(np.floor((mx0 + geo.ORIGIN) / span + 1e-3), 0, n - 1))
-        tx1 = int(np.clip(np.floor((mx1 + geo.ORIGIN) / span + 1e-3), 0, n - 1))
-        ty0 = int(np.clip(np.floor((geo.ORIGIN - my1) / span + 1e-3), 0, n - 1))
-        ty1 = int(np.clip(np.floor((geo.ORIGIN - my0) / span + 1e-3), 0, n - 1))
-        txs, tys = np.meshgrid(np.arange(tx0, tx1 + 1),
-                               np.arange(ty0, ty1 + 1))
-        txs = txs.ravel()
-        tys = tys.ravel()
-        full = (np.zeros(len(txs), dtype=bool) if rect
-                else _cells_full_in(g, txs.astype(np.float64),
-                                    tys.astype(np.float64), res))
-        rows["cell"].extend((txs * n + tys).tolist())
-        rows["fid"].extend([int(fid)] * len(txs))
-        rows["minx"].extend([minx] * len(txs))
-        rows["miny"].extend([miny] * len(txs))
-        rows["maxx"].extend([maxx] * len(txs))
-        rows["maxy"].extend([maxy] * len(txs))
-        rows["is_rect"].extend([rect] * len(txs))
-        rows["full_in"].extend(full.tolist())
-    return pd.DataFrame({
-        "cell": np.array(rows["cell"], dtype=np.int64),
-        "fid": np.array(rows["fid"], dtype=np.int64),
-        "minx": rows["minx"], "miny": rows["miny"],
-        "maxx": rows["maxx"], "maxy": rows["maxy"],
-        "is_rect": rows["is_rect"],
-        "full_in": np.array(rows["full_in"], dtype=bool),
-    })
+    return _cover_pdf(polys_pdf[fid_col], polys_pdf[geom_col], res)[0]
+
+
+def _polygon_cell_cover(polys: DataFrame, res: int, fid_col: str,
+                        geom_col: str) -> DataFrame:
+    """polygon_cell_cover_pdf's rows computed by a distributed Arrow
+    kernel, the fid column named *fid_col*, each row carrying its
+    polygon's WKB in *geom_col*."""
+    from pyspark.sql.types import (
+        BinaryType, BooleanType, DoubleType, LongType, StructField,
+        StructType,
+    )
+
+    schema = StructType([
+        StructField("cell", LongType()), StructField(fid_col, LongType()),
+        StructField("minx", DoubleType()), StructField("miny", DoubleType()),
+        StructField("maxx", DoubleType()), StructField("maxy", DoubleType()),
+        StructField("is_rect", BooleanType()),
+        StructField("full_in", BooleanType()),
+        StructField(geom_col, BinaryType()),
+    ])
+
+    def cover_kernel(batches: Iterator[pd.DataFrame]
+                     ) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            wkbs = [bytes(w) for w in b[geom_col]]
+            cover, src = _cover_pdf(b[fid_col], wkbs, res)
+            if len(cover):
+                cover[geom_col] = [wkbs[k] for k in src]
+                yield cover.rename(columns={"fid": fid_col})
+
+    return polys.select(fid_col, geom_col).mapInPandas(cover_kernel, schema)
+
+
+def _flag_candidates(cand: DataFrame, lon: str, lat: str) -> DataFrame:
+    """Stages 1-2b over cell-joined (point x cover row) candidates:
+    the envelope reject and the rectangle rule filter, and the
+    ``_exact`` flag marks the rows the stage-3 kernel must ray-cast."""
+    # envelope pretest must be a SUPERSET of ray-cast-inside: a point
+    # exactly on the leftmost/bottom edge IS strictly-inside by the
+    # crossing rule (the 0-distance crossing is not counted, the far
+    # one is), so the reject uses inclusive bounds
+    in_bbox = (
+        (F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
+        & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy"))
+    )
+    # a rectangle's bbox IS the geometry: ray casting it admits exactly
+    # [x0, x1) x [y0, y1) (left/bottom edges in, right/top out), and
+    # this predicate replicates that
+    rect_in = (
+        (F.col(lon) >= F.col("minx")) & (F.col(lon) < F.col("maxx"))
+        & (F.col(lat) >= F.col("miny")) & (F.col(lat) < F.col("maxy"))
+    )
+    return (cand.filter(in_bbox & (~F.col("is_rect") | rect_in))
+            .withColumn("_exact", ~F.col("is_rect") & ~F.col("full_in")))
+
+
+def _exact_pass(b: pd.DataFrame, lon: str, lat: str, fid_col: str,
+                rings_of) -> pd.DataFrame:
+    """Stage 3 on one Arrow batch of flagged candidates: rows whose
+    ``_exact`` is false pass through; flagged rows stay only when the
+    ray cast puts them inside ``rings_of(fid, row)`` (``row`` is the
+    position of that fid's first flagged row).  Drops ``_exact``."""
+    flag = b["_exact"].to_numpy(dtype=bool)
+    keep = ~flag
+    rows = np.flatnonzero(flag)
+    if len(rows):
+        px = b[lon].to_numpy(dtype=np.float64)
+        py = b[lat].to_numpy(dtype=np.float64)
+        fids = b[fid_col].to_numpy()[rows]
+        for fid, idx in pd.Series(rows).groupby(fids).indices.items():
+            r = rows[idx]
+            keep[r] = points_in_rings(px[r], py[r],
+                                      rings_of(int(fid), r[0]))
+    return b[keep].drop(columns="_exact")
 
 
 def bounded_layer_pdf(df: DataFrame, row_bound: int,
@@ -195,69 +294,32 @@ def spatial_join_points_in_polygons(
     """
     cover = spark.createDataFrame(polygon_cell_cover_pdf(polys_pdf, res))
     pts = points.withColumn("cell", geo.cell_id(lon, lat, res))
+    out_cols = [c for c in points.columns if c != "cell"] + ["fid"]
     # stage 1 (bbox reject) entirely JVM-side: cell equi-join + the
     # envelope predicate (ogrlayer.cpp:4004 envelope pretest)
-    # envelope pretest must be a SUPERSET of ray-cast-inside: a point
-    # exactly on the leftmost/bottom edge IS strictly-inside by the
-    # crossing rule (the 0-distance crossing is not counted, the far
-    # one is), so the reject uses inclusive bounds
-    in_bbox = (
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy"))
-    )
-    cand = pts.join(F.broadcast(cover), "cell", "inner").filter(in_bbox)
-    out_cols = [c for c in points.columns if c != "cell"] + ["fid"]
-    # stage 2 (rectangle fast accept, ogrlayer.cpp:3922): bbox IS the
-    # geometry -> accepted without touching Python.  Ray casting a
-    # rectangle admits exactly [x0, x1) x [y0, y1) (left/bottom edges
-    # in, right/top out) — the JVM predicate replicates that
-    rect_in = (
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) < F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) < F.col("maxy"))
-    )
-    # stage 2b: interior-cell fast accept — the candidate's cell is
-    # wholly inside the polygon, no exact test needed (JVM-only).
-    # Rect accepts and interior-cell accepts are DISJOINT conditions
-    # on the same candidate frame, so one filter covers both: a
-    # branch per condition would re-evaluate the whole scan+join
-    # subtree per branch (no exchange below the broadcast join means
-    # nothing is reused across union arms)
-    jvm_hits = cand.filter(
-        (F.col("is_rect") & rect_in)
-        | (~F.col("is_rect") & F.col("full_in"))
-    ).select(*out_cols)
-    # stage 3: exact ray-cast kernel for boundary cells only
-    nonrect = cand.filter(~F.col("is_rect") & ~F.col("full_in")) \
-        .select(*out_cols)
+    flagged = _flag_candidates(
+        pts.join(F.broadcast(cover), "cell", "inner"), lon, lat
+    ).select(*out_cols, "_exact")
 
-    rings_by_fid = {
-        int(fid): [np.ascontiguousarray(r) for r in
-                   parse_wkb(bytes(wkb)).rings()]
-        for fid, wkb in zip(polys_pdf["fid"], polys_pdf["geometry"])
-        if not _is_axis_rect(parse_wkb(bytes(wkb)))
-    }
+    rings_by_fid = {}
+    for fid, wkb in zip(polys_pdf["fid"], polys_pdf["geometry"]):
+        g = parse_wkb(bytes(wkb))
+        if not _is_axis_rect(g):
+            rings_by_fid[int(fid)] = [np.ascontiguousarray(r)
+                                      for r in g.rings()]
     if not rings_by_fid:
-        return jvm_hits
+        return flagged.drop("_exact")
     bc = spark.sparkContext.broadcast(rings_by_fid)
-    schema = nonrect.schema
 
     def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         polys = bc.value
         for b in batches:
-            if len(b) == 0:
-                continue
-            keep = np.zeros(len(b), dtype=bool)
-            px = b[lon].to_numpy(dtype=np.float64)
-            py = b[lat].to_numpy(dtype=np.float64)
-            for fid, idx in b.groupby("fid").indices.items():
-                rings = polys.get(int(fid))
-                if rings:
-                    keep[idx] = points_in_rings(px[idx], py[idx], rings)
-            out = b[keep]
+            out = _exact_pass(b, lon, lat, "fid",
+                              lambda fid, row: polys[fid])
             if len(out):
                 yield out
 
-    return jvm_hits.unionByName(nonrect.mapInPandas(exact, schema))
+    return flagged.mapInPandas(exact, flagged.drop("_exact").schema)
 
 
 def spatial_join_big_polygons(
@@ -275,125 +337,47 @@ def spatial_join_big_polygons(
     The distributed rendering of the same FilterGeometry plan:
 
       stage 1 — the polygon layer is exploded into its cell cover
-        (an Arrow kernel computing the same bbox/tile math as
-        polygon_cell_cover_pdf, distributed), carrying bbox columns
-        and the WKB; the candidate join is a plain shuffle equi-join
-        on cell — Catalyst/AQE pick the strategy and split skewed
-        cells;
-      stage 2 — JVM envelope reject + rectangle fast accept;
-      stage 3 — exact PIP per (cell) cogroup: each task sees its
-        cell's points and its cell's polygons, so no polygon index
-        needs to fit in memory anywhere.
+        (an Arrow kernel computing polygon_cell_cover_pdf's rows,
+        distributed), carrying bbox columns and the WKB; the
+        candidate join is a plain shuffle equi-join on cell —
+        Catalyst/AQE pick the strategy and split skewed cells;
+      stage 2 — JVM envelope reject + rectangle rule + ``_exact`` flag;
+      stage 3 — one exact PIP kernel over every candidate; only the
+        flagged rows carry their polygon's WKB and are ray-cast, so
+        no polygon index needs to fit in memory anywhere.
 
     Output: points columns + fid (same rows as the broadcast path).
     """
-    n = 1 << res
-    span = geo.tile_span(res)
-
-    from pyspark.sql.types import (
-        BinaryType, BooleanType, DoubleType, LongType, StructField,
-        StructType,
-    )
-
-    cover_schema = StructType([
-        StructField("cell", LongType()), StructField(fid_col, LongType()),
-        StructField("minx", DoubleType()), StructField("miny", DoubleType()),
-        StructField("maxx", DoubleType()), StructField("maxy", DoubleType()),
-        StructField("is_rect", BooleanType()),
-        StructField("full_in", BooleanType()),
-        StructField(geom_col, BinaryType()),
-    ])
-
-    def cover_kernel(batches: Iterator[pd.DataFrame]
-                     ) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {f.name: [] for f in cover_schema.fields}
-            for fid, wkb in zip(b[fid_col], b[geom_col]):
-                g = parse_wkb(bytes(wkb))
-                minx, miny, maxx, maxy = g.bbox()
-                rect = _is_axis_rect(g)
-                mx0, mx1 = _merc_x(minx), _merc_x(maxx)
-                my0, my1 = _merc_y(miny), _merc_y(maxy)
-                tx0 = int(np.clip(np.floor((mx0 + geo.ORIGIN) / span
-                                           + 1e-3), 0, n - 1))
-                tx1 = int(np.clip(np.floor((mx1 + geo.ORIGIN) / span
-                                           + 1e-3), 0, n - 1))
-                ty0 = int(np.clip(np.floor((geo.ORIGIN - my1) / span
-                                           + 1e-3), 0, n - 1))
-                ty1 = int(np.clip(np.floor((geo.ORIGIN - my0) / span
-                                           + 1e-3), 0, n - 1))
-                txs, tys = np.meshgrid(np.arange(tx0, tx1 + 1),
-                                       np.arange(ty0, ty1 + 1))
-                txs = txs.ravel()
-                tys = tys.ravel()
-                full = (np.zeros(len(txs), dtype=bool) if rect
-                        else _cells_full_in(g, txs.astype(np.float64),
-                                            tys.astype(np.float64),
-                                            res))
-                rows["cell"].extend((txs * n + tys).tolist())
-                rows[fid_col].extend([int(fid)] * len(txs))
-                rows["minx"].extend([minx] * len(txs))
-                rows["miny"].extend([miny] * len(txs))
-                rows["maxx"].extend([maxx] * len(txs))
-                rows["maxy"].extend([maxy] * len(txs))
-                rows["is_rect"].extend([rect] * len(txs))
-                rows["full_in"].extend(full.tolist())
-                rows[geom_col].extend([bytes(wkb)] * len(txs))
-            if rows["cell"]:
-                yield pd.DataFrame(rows)
-
-    cover = polys.select(fid_col, geom_col).mapInPandas(
-        cover_kernel, cover_schema)
+    cover = _polygon_cell_cover(polys, res, fid_col, geom_col)
 
     pts = points.withColumn("cell", geo.cell_id(lon, lat, res))
-    # envelope pretest must be a SUPERSET of ray-cast-inside: a point
-    # exactly on the leftmost/bottom edge IS strictly-inside by the
-    # crossing rule (the 0-distance crossing is not counted, the far
-    # one is), so the reject uses inclusive bounds
-    in_bbox = (
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy"))
-    )
-    cand = (
-        pts.join(cover, "cell", "inner")
-        .filter(in_bbox)
-    )
-    out_cols = [c for c in points.columns] + [fid_col]
-    rect_in = (
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) < F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) < F.col("maxy"))
-    )
-    # disjoint JVM accepts merged into ONE filter (see the broadcast
-    # path: a branch per condition re-evaluates the candidate join)
-    jvm_hits = cand.filter(
-        (F.col("is_rect") & rect_in)
-        | (~F.col("is_rect") & F.col("full_in"))
-    ).select(*out_cols)
-    nonrect = cand.filter(~F.col("is_rect") & ~F.col("full_in")) \
-        .select(*(out_cols + [geom_col]))
-    schema = nonrect.drop(geom_col).schema
+    out_cols = list(points.columns) + [fid_col]
+    cand = _flag_candidates(pts.join(cover, "cell", "inner"), lon, lat)
+    # only rows the kernel ray-casts ship their polygon's WKB to Python
+    flagged = cand.select(
+        *out_cols, "_exact",
+        F.when(F.col("_exact"), F.col(geom_col)).alias(geom_col))
 
     def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ring_cache: dict[int, list[np.ndarray]] = {}
+
+        def rings_of(fid: int, wkb) -> list[np.ndarray]:
+            rings = ring_cache.get(fid)
+            if rings is None:
+                rings = parse_wkb(bytes(wkb)).rings()
+                if len(ring_cache) < 4096:
+                    ring_cache[fid] = rings
+            return rings
+
         for b in batches:
-            if len(b) == 0:
-                continue
-            keep = np.zeros(len(b), dtype=bool)
-            px = b[lon].to_numpy(dtype=np.float64)
-            py = b[lat].to_numpy(dtype=np.float64)
-            for fid, idx in b.groupby(fid_col).indices.items():
-                rings = ring_cache.get(int(fid))
-                if rings is None:
-                    rings = parse_wkb(
-                        bytes(b[geom_col].iloc[idx[0]])).rings()
-                    if len(ring_cache) < 4096:
-                        ring_cache[int(fid)] = rings
-                keep[idx] = points_in_rings(px[idx], py[idx], rings)
-            out = b[keep].drop(columns=[geom_col])
+            geoms = b[geom_col]
+            out = _exact_pass(b, lon, lat, fid_col,
+                              lambda fid, row: rings_of(fid, geoms.iat[row])
+                              ).drop(columns=[geom_col])
             if len(out):
                 yield out
 
-    return jvm_hits.unionByName(nonrect.mapInPandas(exact, schema))
+    return flagged.mapInPandas(exact, cand.select(*out_cols).schema)
 
 
 def brute_force_join_pdf(points_pdf: pd.DataFrame, polys_pdf: pd.DataFrame,
@@ -423,7 +407,6 @@ def _geom_cell_cover(df: DataFrame, res: int, fid_col: str,
     )
 
     n = 1 << res
-    span = geo.tile_span(res)
     sfx = out_fid
     schema = StructType([
         StructField("cell", LongType()), StructField(sfx, LongType()),
@@ -440,20 +423,7 @@ def _geom_cell_cover(df: DataFrame, res: int, fid_col: str,
             for fid, wkb in zip(b[fid_col], b[geom_col]):
                 g = parse_wkb(bytes(wkb))
                 minx, miny, maxx, maxy = g.bbox()
-                mx0, mx1 = _merc_x(minx), _merc_x(maxx)
-                my0, my1 = _merc_y(miny), _merc_y(maxy)
-                tx0 = int(np.clip(np.floor((mx0 + geo.ORIGIN) / span
-                                           + 1e-3), 0, n - 1))
-                tx1 = int(np.clip(np.floor((mx1 + geo.ORIGIN) / span
-                                           + 1e-3), 0, n - 1))
-                ty0 = int(np.clip(np.floor((geo.ORIGIN - my1) / span
-                                           + 1e-3), 0, n - 1))
-                ty1 = int(np.clip(np.floor((geo.ORIGIN - my0) / span
-                                           + 1e-3), 0, n - 1))
-                txs, tys = np.meshgrid(np.arange(tx0, tx1 + 1),
-                                       np.arange(ty0, ty1 + 1))
-                txs = txs.ravel()
-                tys = tys.ravel()
+                txs, tys = _cell_range((minx, miny, maxx, maxy), res)
                 k = len(txs)
                 rows["cell"].extend((txs * n + tys).tolist())
                 rows[sfx].extend([int(fid)] * k)

@@ -549,8 +549,10 @@ def read_gpkg(spark, path: str, table: str | None = None, *,
                                                "part-*.gpkg")))
         if not files:
             raise FileNotFoundError(f"{path}: no part-*.gpkg")
-    else:
+    elif os.path.exists(path):
         files = [path]
+    else:
+        raise FileNotFoundError(f"{path}: no such file or directory")
 
     meta0 = None
     tasks = []        # (file, table, geom_col, pk, lo, hi, fid_off)

@@ -79,6 +79,8 @@ def zarr_info(path: str) -> dict:
     """Store metadata: an array store returns its .zarray dict; a
     group store lists member arrays (the reference's multi-band
     group layout, e.g. byte_cf1.zarr/Band1)."""
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"{path}: no such file or directory")
     if os.path.exists(os.path.join(path, ".zarray")):
         return {"kind": "array", "arrays": {"": _parse_zarray(path)}}
     if os.path.exists(os.path.join(path, ".zgroup")):

@@ -1,0 +1,206 @@
+"""Point-in-polygon joins as ONE kernel arm: the executed plan runs the
+points upstream once, and the JVM accept rules plus the flagged exact
+pass agree with the brute-force PIP oracle on the edge cases."""
+
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from gdal_spark.functions import geo
+from gdal_spark.geometry.wkb import polygon_wkb
+from gdal_spark.operators.spatial_join import (
+    _geom_cell_cover, _polygon_cell_cover, brute_force_join_pdf,
+    polygon_cell_cover_pdf, spatial_join_big_polygons,
+    spatial_join_points_in_polygons,
+)
+from gdal_spark.sources.pages import pages_df, with_extracted_geo
+from gdal_spark.sources.polygons import poly_fixture_pdf, random_polygons
+
+PTS_SCHEMA = "i long, lon double, lat double"
+
+
+def _final_plan(df) -> str:
+    """Executed plan of *df* after an action: AQE's final plan only."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _geocoded(spark, n):
+    return with_extracted_geo(pages_df(spark, n, partitions=3)).select(
+        "i", F.col("geo_lon").alias("lon"), F.col("geo_lat").alias("lat"))
+
+
+def test_broadcast_join_runs_upstream_once(spark):
+    """The render kernel, the broadcast join and no Union: one arm.
+    A JVM-accept arm unioned beside the kernel arm (the earlier
+    two-arm join) shows the render kernel and the broadcast join
+    twice, and fails here."""
+    df = spatial_join_points_in_polygons(
+        spark, _geocoded(spark, 2000), poly_fixture_pdf(), res=6)
+    assert len(df.collect()) > 0
+    plan = _final_plan(df)
+    assert plan.count("MapInPandas render(") == 1, plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert "Union" not in plan, plan
+
+
+def test_shuffle_join_runs_upstream_once(spark):
+    """The non-broadcast join at a shuffle strategy: one join, one
+    render kernel, no Union.  The earlier two-arm join re-ran the
+    sort-merge join per Union arm, and fails here."""
+    polys = spark.createDataFrame(poly_fixture_pdf()[["fid", "geometry"]])
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = spatial_join_big_polygons(spark, _geocoded(spark, 2000),
+                                       polys, res=6)
+        assert len(df.collect()) > 0
+    finally:
+        spark.conf.set(key, old)
+    plan = _final_plan(df)
+    assert plan.count("MapInPandas render(") == 1, plan
+    assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") \
+        == 1, plan
+    assert "Union" not in plan, plan
+
+
+def _join(path, spark, pts, polys_pdf, res):
+    if path == "broadcast":
+        return spatial_join_points_in_polygons(spark, pts, polys_pdf, res=res)
+    polys = spark.createDataFrame(polys_pdf[["fid", "geometry"]])
+    return spatial_join_big_polygons(spark, pts, polys, res=res)
+
+
+def _pairs(pdf) -> set:
+    return set(zip(pdf["i"].astype(int), pdf["fid"].astype(int)))
+
+
+def _check_against_oracle(path, spark, pts_pdf, polys_pdf, res):
+    pts = spark.createDataFrame(pts_pdf, PTS_SCHEMA)
+    out = _join(path, spark, pts, polys_pdf, res)
+    assert out.columns == ["i", "lon", "lat", "fid"]
+    got = out.toPandas()
+    assert len(got) == len(_pairs(got))
+    assert _pairs(got) == _pairs(brute_force_join_pdf(pts_pdf, polys_pdf))
+    return out, _pairs(got)
+
+
+def _layer(*rings_list) -> pd.DataFrame:
+    return pd.DataFrame({
+        "fid": np.arange(len(rings_list), dtype=np.int64),
+        "geometry": [polygon_wkb([np.array(r, dtype=np.float64)
+                                  for r in rings]) for rings in rings_list],
+    })
+
+
+def _points(xy) -> pd.DataFrame:
+    xy = np.asarray(xy, dtype=np.float64).reshape(-1, 2)
+    return pd.DataFrame({"i": np.arange(len(xy), dtype=np.int64),
+                         "lon": xy[:, 0], "lat": xy[:, 1]})
+
+
+RECT = [(1.0, 1.0), (3.0, 1.0), (3.0, 2.0), (1.0, 2.0), (1.0, 1.0)]
+# a non-rectangular outer ring (the extra vertex keeps it off the
+# rectangle path) with a rectangular hole
+OUTER = [(-8.0, -8.0), (8.0, -8.0), (8.0, 8.0), (0.0, 9.0), (-8.0, 8.0),
+         (-8.0, -8.0)]
+HOLE = [(-2.0, -2.0), (2.0, -2.0), (2.0, 2.0), (-2.0, 2.0), (-2.0, -2.0)]
+
+
+def _box_edges(x0, y0, x1, y1):
+    """Vertices, edge midpoints and the center of an axis box."""
+    xm, ym = (x0 + x1) / 2, (y0 + y1) / 2
+    return [(x0, y0), (x1, y0), (x1, y1), (x0, y1),
+            (xm, y0), (x1, ym), (xm, y1), (x0, ym), (xm, ym)]
+
+
+@pytest.mark.parametrize("path", ["broadcast", "shuffle"])
+def test_rectangle_edges_half_open(spark, path):
+    """Left/bottom edges are in, right/top edges are out, on the
+    rectangle fast path and next to a non-rectangle that takes the
+    exact kernel."""
+    polys = _layer([RECT], [OUTER, HOLE])
+    pts = _points(_box_edges(1.0, 1.0, 3.0, 2.0)
+                  + [(0.5, 1.5), (3.5, 1.5), (2.0, 0.5), (2.0, 2.5)])
+    _, got = _check_against_oracle(path, spark, pts, polys, res=6)
+    rect_hits = {i for i, fid in got if fid == 0}
+    # (x0,y0), bottom midpoint, left midpoint, center
+    assert rect_hits == {0, 4, 7, 8}
+
+
+@pytest.mark.parametrize("path", ["broadcast", "shuffle"])
+@pytest.mark.parametrize("res", [4, 8])
+def test_hole_boundary(spark, path, res):
+    """Points on the hole's edges and vertices, on the outer ring and
+    on an interior grid (whose cells are fully inside at res 8, so a
+    batch mixes pass-through and flagged rows)."""
+    polys = _layer([OUTER, HOLE])
+    grid = [(x, y) for x in np.arange(-7.5, 8.0, 0.75)
+            for y in np.arange(-7.5, 8.0, 0.75)]
+    pts = _points(_box_edges(-2.0, -2.0, 2.0, 2.0)
+                  + [(-8.0, 0.0), (8.0, 0.0), (0.0, -8.0), (4.0, 8.5)]
+                  + grid)
+    _, got = _check_against_oracle(path, spark, pts, polys, res=res)
+    assert 0 < len(got) < len(pts)
+
+
+@pytest.mark.parametrize("path", ["broadcast", "shuffle"])
+def test_rectangles_only_layer(spark, path):
+    """A layer of rectangles only: the broadcast join returns the
+    filtered candidates with no Python kernel."""
+    polys = _layer([RECT], [[(x + 10.0, y) for x, y in RECT]])
+    pts = _points(_box_edges(1.0, 1.0, 3.0, 2.0)
+                  + _box_edges(11.0, 1.0, 13.0, 2.0) + [(5.0, 1.5)])
+    out, got = _check_against_oracle(path, spark, pts, polys, res=6)
+    assert len(got) == 8
+    if path == "broadcast":
+        assert "MapInPandas" not in _final_plan(out)
+
+
+@pytest.mark.parametrize("path", ["broadcast", "shuffle"])
+def test_all_candidates_accepted_on_jvm(spark, path):
+    """Every candidate lies in a cover cell fully inside its polygon,
+    so every kernel batch holds no flagged row."""
+    res = 8
+    polys = _layer([OUTER])
+    pts_pdf = _points([(x, y) for x in np.linspace(-3.0, 3.0, 9)
+                       for y in np.linspace(-3.0, 3.0, 9)])
+    cells = spark.createDataFrame(pts_pdf, PTS_SCHEMA).select(
+        geo.cell_id("lon", "lat", res).alias("cell")).toPandas()["cell"]
+    cover = polygon_cell_cover_pdf(polys, res).set_index("cell")
+    assert cover.loc[cells.to_numpy(), "full_in"].all()
+    _, got = _check_against_oracle(path, spark, pts_pdf, polys, res=res)
+    assert len(got) == len(pts_pdf)
+
+
+@pytest.mark.parametrize("path", ["broadcast", "shuffle"])
+def test_empty_points(spark, path):
+    pts = spark.createDataFrame([], PTS_SCHEMA)
+    out = _join(path, spark, pts, poly_fixture_pdf(), res=6)
+    assert out.columns == ["i", "lon", "lat", "fid"]
+    assert out.count() == 0
+
+
+@pytest.mark.parametrize("res", [3, 6])
+def test_distributed_covers_match_driver_cover(spark, res):
+    """Both distributed cell covers produce polygon_cell_cover_pdf's
+    rows (the shared bbox -> cell-range rule)."""
+    polys = random_polygons(spark, 300)
+    want = (polygon_cell_cover_pdf(polys.toPandas(), res)
+            .sort_values(["fid", "cell"]).reset_index(drop=True))
+    got = (_polygon_cell_cover(polys, res, "fid", "geometry")
+           .drop("geometry").toPandas()
+           .sort_values(["fid", "cell"]).reset_index(drop=True))
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    sfx = "fid_a"
+    bbox = (_geom_cell_cover(polys, res, "fid", "geometry", sfx)
+            .select("cell", F.col(sfx).alias("fid"),
+                    *[F.col(f"{c}_{sfx}").alias(c)
+                      for c in ("minx", "miny", "maxx", "maxy")])
+            .toPandas().sort_values(["fid", "cell"])
+            .reset_index(drop=True))
+    pd.testing.assert_frame_equal(
+        bbox, want[["cell", "fid", "minx", "miny", "maxx", "maxy"]],
+        check_exact=True)

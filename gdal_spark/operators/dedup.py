@@ -345,22 +345,40 @@ def minhash_lsh_dedup(
     return df.join(drop, key_col, "left_anti")
 
 
+COLLECT_CAP = 2_000_000
+
+
+def min_label_roots(n: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Connected components of nodes 0..n-1 under edges (u[i], v[i]):
+    each node's component minimum, by vectorized min-label propagation
+    with pointer jumping (l2 = l2[l2]) — no per-edge python loop."""
+    e = np.unique(u * np.int64(n) + v)     # edges often repeat
+    u, v = e // max(n, 1), e % max(n, 1)
+    lab = np.arange(n, dtype=np.int64)
+    while True:
+        l2 = lab.copy()
+        np.minimum.at(l2, u, lab[v])
+        np.minimum.at(l2, v, lab[u])
+        l2 = l2[l2]
+        if np.array_equal(l2, lab):
+            return lab
+        lab = l2
+
+
 def duplicate_clusters(pairs: DataFrame, key_a: str = "a",
                        key_b: str = "b", max_iters: int = 20,
-                       collect_cap: int = 2_000_000) -> DataFrame:
+                       collect_cap: int = COLLECT_CAP) -> DataFrame:
     """Connected components over verified duplicate pairs ->
     (doc_id, cluster_id) with cluster_id = min doc_id in the
     component.
 
     Bounded-collect gate first (the spatial_join "broadcast if
-    provably small, else distributed" pattern): pair sets up to
-    ``collect_cap`` edges — every fixture/raster-border workload, and
-    most dedup outputs — resolve in ONE driver pass of vectorized
-    min-label propagation instead of 3 joins + localCheckpoint +
-    convergence count PER ROUND (each round is two Spark actions;
-    the loop dominated polygonize/sieve cold runs).  Larger pair
-    sets pay one extra pairs materialization for the probe and fall
-    back to the iterative join loop, which never collects.
+    provably small, else distributed" pattern): up to ``collect_cap``
+    pairs resolve in ONE driver pass (min_label_roots) instead of 3
+    joins + localCheckpoint + convergence count PER ROUND (two Spark
+    actions each).  Larger pair sets pay one extra pairs
+    materialization for the probe and fall back to the iterative join
+    loop, which never collects.
 
     Iterative min-label propagation as DataFrame joins (the classic
     large-scale CC pattern — each round joins every node's label with
@@ -386,18 +404,9 @@ def duplicate_clusters(pairs: DataFrame, key_a: str = "a",
             nodes, inv = np.unique(np.concatenate([u, v]),
                                    return_inverse=True)
             ui, vi = inv[:len(u)], inv[len(u):]
-            # vectorized min-label propagation + pointer jumping;
             # labels are indices into the SORTED node array, so the
-            # converged min index IS the min doc_id of the component
-            lab = np.arange(len(nodes), dtype=np.int64)
-            while True:
-                l2 = lab.copy()
-                np.minimum.at(l2, ui, lab[vi])
-                np.minimum.at(l2, vi, lab[ui])
-                l2 = l2[l2]
-                if np.array_equal(l2, lab):
-                    break
-                lab = l2
+            # component min index IS the min doc_id of the component
+            lab = min_label_roots(len(nodes), ui, vi)
             return spark.createDataFrame(
                 pd.DataFrame({"doc_id": nodes,
                               "cluster_id": nodes[lab]}),

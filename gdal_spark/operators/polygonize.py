@@ -7,10 +7,14 @@ union-find merge, alg/polygonize_polygonizer.cpp ring assembly):
 * per-tile connected-component labeling of equal-valued pixels
   (4- or 8-connected; nodata masked), via row-run union-find — the
   same run-merge structure as the reference's ProcessLine;
-* cross-tile merge: a label-adjacency graph over shared tile edges,
-  reduced by distributed min-label propagation with pointer jumping
-  (dedup.duplicate_clusters) — border-pair count grows with total
-  polygon perimeter, so nothing is ever collected to the driver;
+* cross-tile merge: the runs on a tile's edge rows or columns are
+  collected ONCE through the bounded-collect gate (up to BORDER_CAP
+  rows, duplicate_clusters' cap) and paired on the driver in numpy
+  (_border_pairs); components resolve by vectorized min-label
+  propagation with pointer jumping, and the label -> root mapping
+  rides a broadcast join.  A raster whose border runs exceed the cap
+  pairs them in a kernel grouped by border line and resolves the
+  pairs through dedup.duplicate_clusters;
 * polygons are assembled from each global component's pixel *runs*
   (y, x0, x1) grouped by final label: boundary edges are stitched
   into closed rings; at vertex pinches (boundaries meeting at a
@@ -40,6 +44,10 @@ from pyspark.sql.types import (
 )
 
 from gdal_spark.geometry.wkb import polygon_wkb
+from gdal_spark.operators.dedup import (
+    COLLECT_CAP, duplicate_clusters, min_label_roots,
+)
+from gdal_spark.operators.tiling import decode_tile
 
 
 # --------------------------------------------------------------------
@@ -90,13 +98,11 @@ def label_tile(arr: np.ndarray, nodata: float | None = None,
         | (~valid[:, :-1])
     run_id = np.cumsum(newrun.ravel()).reshape(h, w) - 1
     n_runs = int(run_id.max()) + 1 if h * w else 0
-    # vertical adjacency edges (4-conn; diagonals for 8-conn), then
-    # vectorized min-label propagation with pointer jumping instead
-    # of a per-edge python union-find loop (~16-35 ms/tile -> ~1 ms;
-    # component roots become the MIN run id, a relabeling that leaves
-    # every component partition — and thus every polygon — unchanged)
-    us: list[np.ndarray] = []
-    vs: list[np.ndarray] = []
+    # vertical adjacency edges (4-conn; diagonals for 8-conn); roots
+    # become the MIN run id, a relabeling that leaves every component
+    # partition — and thus every polygon — unchanged
+    us = [np.zeros(0, np.int64)]
+    vs = [np.zeros(0, np.int64)]
     if h > 1:
         eq = (arr[1:, :] == arr[:-1, :]) & valid[1:, :] & valid[:-1, :]
         us.append(run_id[1:, :][eq])
@@ -110,25 +116,7 @@ def label_tile(arr: np.ndarray, nodata: float | None = None,
                 & valid[:-1, 1:]
             us.append(run_id[1:, :-1][eq])
             vs.append(run_id[:-1, 1:][eq])
-    roots = np.arange(max(n_runs, 1), dtype=np.int64)[:n_runs]
-    u = np.concatenate(us) if us else np.zeros(0, np.int64)
-    if len(u):
-        v = np.concatenate(vs)
-        # many pixel adjacencies repeat the same run pair: dedupe
-        key = np.unique(u.astype(np.int64) * np.int64(n_runs)
-                        + v.astype(np.int64))
-        u = key // n_runs
-        v = key % n_runs
-        lab = roots
-        while True:
-            l2 = lab.copy()
-            np.minimum.at(l2, u, lab[v])
-            np.minimum.at(l2, v, lab[u])
-            l2 = l2[l2]
-            if np.array_equal(l2, lab):
-                break
-            lab = l2
-        roots = lab
+    roots = min_label_roots(n_runs, np.concatenate(us), np.concatenate(vs))
     labels = roots[run_id]
     labels[~valid] = -1
     return labels, n_runs
@@ -202,10 +190,10 @@ def rings_from_runs(ys: np.ndarray, x0s: np.ndarray, x1s: np.ndarray,
             else:
                 merged.append((s, e))
         by_row[y] = merged
-    edges: dict[tuple[int, int], list[tuple[int, int]]] = {}
+    edge_pool: dict[tuple[int, int], list[tuple[int, int]]] = {}
 
     def add_edge(p, q):
-        edges.setdefault(p, []).append(q)
+        edge_pool.setdefault(p, []).append(q)
 
     for y, ivs in by_row.items():
         above = by_row.get(y - 1, [])
@@ -226,43 +214,9 @@ def rings_from_runs(ys: np.ndarray, x0s: np.ndarray, x1s: np.ndarray,
             add_edge((s, y + 1), (s, y))
             add_edge((e, y), (e, y + 1))
 
-    # left/right verticals above assume no same-row adjacency at run
-    # ends — true by construction (runs are maximal), except runs
-    # from *different* rows never share a vertical edge; nothing to fix.
-
-    # split long horizontal edges into unit steps? Not needed: walk
-    # operates on whole edges; corner-touch resolution needs vertex
-    # granularity only at edge endpoints, which is where touches occur.
-
     rings: list[np.ndarray] = []
     # deterministic walk order
-    starts = sorted(edges.keys())
-    used: dict[tuple[int, int], int] = {k: 0 for k in edges}
-
-    def pick_next(vertex, din):
-        outs = edges.get(vertex)
-        if not outs:
-            return None
-        avail = [q for q in outs if used[vertex] < len(outs)]
-        if not avail:
-            return None
-        cands = outs[:]
-        # remove already-consumed (multiset semantics)
-        # turn rule: 4-conn -> rightmost turn, 8-conn -> leftmost
-        def angle(q):
-            dout = (q[0] - vertex[0], q[1] - vertex[1])
-            # cross/dot of incoming vs outgoing (y-down coords)
-            cross = din[0] * dout[1] - din[1] * dout[0]
-            dot = din[0] * dout[0] + din[1] * dout[1]
-            return np.arctan2(cross, dot)
-
-        cands.sort(key=angle)
-        return cands[0]
-
-    edge_pool: dict[tuple[int, int], list[tuple[int, int]]] = {
-        k: list(v) for k, v in edges.items()
-    }
-    for start in starts:
+    for start in sorted(edge_pool):
         while edge_pool.get(start):
             first = edge_pool[start].pop(
                 edge_pool[start].index(sorted(edge_pool[start])[0]))
@@ -326,7 +280,7 @@ def assemble_polygons(ys, x0s, x1s, gt: list[float],
     for r in rings:
         gx = gt[0] + r[:, 0] * gt[1] + r[:, 1] * gt[2]
         gy = gt[3] + r[:, 0] * gt[4] + r[:, 1] * gt[5]
-        geo_rings.append((np.column_stack([gx, gy]), _ring_signed_area(r)))
+        geo_rings.append(np.column_stack([gx, gy]))
     # y-down pixel space: outer rings have negative... determine by
     # even-odd nesting: ring is a hole iff contained in an odd number
     # of other rings
@@ -334,15 +288,14 @@ def assemble_polygons(ys, x0s, x1s, gt: list[float],
     holes: list[np.ndarray] = []
     from gdal_spark.geometry.pip import points_in_rings
 
-    px_rings = rings
-    for i, r in enumerate(px_rings):
+    for i, r in enumerate(rings):
         pt = r[0] + (r[1] - r[0]) * 0.5  # midpoint of first edge
         # nudge inward perpendicular to the edge
         d = r[1] - r[0]
         nrm = np.array([-d[1], d[0]])
         nrm = nrm / max(np.hypot(*nrm), 1e-12) * 1e-3
         inside_cnt = 0
-        for j, other in enumerate(px_rings):
+        for j, other in enumerate(rings):
             if i == j:
                 continue
             if points_in_rings(np.array([pt[0] + nrm[0], pt[0] - nrm[0]]),
@@ -357,24 +310,24 @@ def assemble_polygons(ys, x0s, x1s, gt: list[float],
     poly_px_outer: list[int] = []
     owner: dict[int, int] = {}
     for oi in outers:
-        polys.append([geo_rings[oi][0]])
+        polys.append([geo_rings[oi]])
         poly_px_outer.append(oi)
         owner[oi] = len(polys) - 1
     for hi in holes:
         # assign hole to the smallest containing outer
         best, best_area = None, np.inf
-        pt = px_rings[hi][0]
+        pt = rings[hi][0]
         for oi in outers:
             if points_in_rings(np.array([pt[0] + 0.001]),
                                np.array([pt[1] + 0.001]),
-                               [px_rings[oi]])[0]:
-                a = abs(_ring_signed_area(px_rings[oi]))
+                               [rings[oi]])[0]:
+                a = abs(_ring_signed_area(rings[oi]))
                 if a < best_area:
                     best, best_area = oi, a
         if best is not None:
-            polys[owner[best]].append(geo_rings[hi][0])
+            polys[owner[best]].append(geo_rings[hi])
         else:
-            polys.append([geo_rings[hi][0]])
+            polys.append([geo_rings[hi]])
             poly_px_outer.append(hi)
     # per-polygon pixel counts: attribute each run to the smallest
     # containing outer ring (the usual case is one polygon per label,
@@ -389,9 +342,9 @@ def assemble_polygons(ys, x0s, x1s, gt: list[float],
         assigned = np.zeros(len(cx), dtype=bool)
         order = sorted(
             range(len(polys)),
-            key=lambda p: abs(_ring_signed_area(px_rings[poly_px_outer[p]])))
+            key=lambda p: abs(_ring_signed_area(rings[poly_px_outer[p]])))
         for p in order:
-            inside = points_in_rings(cx, cy, [px_rings[poly_px_outer[p]]])
+            inside = points_in_rings(cx, cy, [rings[poly_px_outer[p]]])
             take = inside & ~assigned
             npix[p] = int(lens[take].sum())
             assigned |= take
@@ -410,7 +363,7 @@ RUNS_SCHEMA = StructType([
     StructField("y", LongType()),          # global pixel row
     StructField("x0", LongType()),
     StructField("x1", LongType()),
-    StructField("ts", IntegerType()),      # tile size (probe column)
+    StructField("ts", IntegerType()),      # tile size (no probe job)
 ])
 
 POLY_SCHEMA = StructType([
@@ -420,12 +373,70 @@ POLY_SCHEMA = StructType([
 ])
 
 
+BORDER_CAP = COLLECT_CAP     # border runs the driver merge collects
+
+
+def _overlap_pairs(kp, p0, p1, ks, s0, s1):
+    """Index pairs (i, j) with kp[i] == ks[j] whose half-open intervals
+    [p0[i], p1[i]) and [s0[j], s1[j]) overlap.  The s-intervals of one
+    key must be disjoint: sorted by (key, start), their ends sort too,
+    so each probe's matches are one searchsorted range."""
+    _, g = np.unique(np.concatenate([kp, ks]), return_inverse=True)
+    base = min(p0.min(initial=0), s0.min(initial=0))
+    width = max(p1.max(initial=0), s1.max(initial=0)) - base + 1
+    gp, gs = g[:len(kp)] * width - base, g[len(kp):] * width - base
+    order = np.lexsort((s0, gs))
+    lo = np.searchsorted((gs + s1)[order], gp + p0, side="right")
+    hi = np.searchsorted((gs + s0)[order], gp + p1, side="left")
+    cnt = hi - lo
+    i = np.repeat(np.arange(len(kp)), cnt)
+    j = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt) + np.arange(len(i))
+    return i, order[j]
+
+
+def _border_pairs(pdf: pd.DataFrame, ts: int,
+                  connectedness: int = 4) -> pd.DataFrame:
+    """Label pairs (a, b) of equal-valued runs adjacent across a tile
+    border — the single definition of cross-tile adjacency.
+
+    ``pdf`` holds runs (label, value, y, x0, x1) in global pixels.
+    Horizontal borders: a run in row y (y % ts == 0) meets a run in
+    row y - 1 whose x span overlaps it — strictly under 4-connectivity,
+    touching ends included under 8.  Vertical borders: a run starting
+    at column c (c % ts == 0) meets a run ending at c in a row at most
+    ``d`` away (0 under 4-, 1 under 8-connectivity).  Runs of one pixel
+    row are disjoint, so each side of a border line is a sorted
+    interval list and the match is vectorized (no loop per run)."""
+    lab, y, x0, x1 = (pdf[c].to_numpy(np.int64)
+                      for c in ("label", "y", "x0", "x1"))
+    _, code = np.unique(pdf["value"].to_numpy(np.float64),
+                        return_inverse=True)
+    # group key (value, border line): lines are rows or columns < span
+    span = max(y.max(initial=0), x1.max(initial=0)) + 2
+    key = code.astype(np.int64) * span
+    d = 1 if connectedness == 8 else 0
+    # horizontal: top-row runs probe the bottom-row runs above them
+    t = np.flatnonzero(y % ts == 0)
+    b = np.flatnonzero((y + 1) % ts == 0)
+    i, j = _overlap_pairs(key[t] + y[t], x0[t] - d, x1[t] + d,
+                          key[b] + y[b] + 1, x0[b], x1[b])
+    # vertical: right-edge runs probe the left-edge runs starting there
+    r = np.flatnonzero(x1 % ts == 0)
+    le = np.flatnonzero(x0 % ts == 0)
+    k, m = _overlap_pairs(key[r] + x1[r], y[r] - d, y[r] + 1 + d,
+                          key[le] + x0[le], y[le], y[le] + 1)
+    return pd.DataFrame({"a": np.concatenate([lab[t[i]], lab[le[m]]]),
+                         "b": np.concatenate([lab[b[j]], lab[r[k]]])})
+
+
 def global_label_runs(
     tiles: DataFrame, nodata: float | None = None,
     connectedness: int = 4,
 ) -> tuple[DataFrame, int]:
     """Stages 1+2 of polygonize, shared with sieve: per-tile CCL ->
-    labeled runs, then distributed cross-tile label merge.
+    labeled runs, then the cross-tile label merge: border runs collected
+    once (up to BORDER_CAP) and paired on the driver, or over the cap
+    paired per border line and resolved by dedup.duplicate_clusters.
 
     Returns (runs with globally-merged labels, tile_size)."""
 
@@ -437,8 +448,6 @@ def global_label_runs(
                 ts = int(b["tile_size"].iloc[i])
                 tx = int(b["tile_x"].iloc[i])
                 ty = int(b["tile_y"].iloc[i])
-                from gdal_spark.operators.tiling import decode_tile
-
                 arr = decode_tile(b["data"].iloc[i],
                                   b["dtype"].iloc[i], ts)
                 labels, _ = label_tile(arr, nodata, connectedness)
@@ -458,76 +467,56 @@ def global_label_runs(
                     k: np.concatenate(v) for k, v in rows.items()
                 })
 
-    # ONE materialization of the upstream (tiles decode + per-tile
-    # CCL): localCheckpoint instead of cache — the runs frame feeds
-    # FIVE consumers (border joins x4, final label join) plus the
-    # tile-size probe, and a .cache() here was a session-lifetime
-    # CacheManager leak (no unpersist point exists after return —
-    # the r6 minhash signatures-leak class).  Checkpoint blocks are
-    # freed by RDD GC when the frame goes out of scope.
+    # ONE materialization of the per-tile CCL (it feeds the border
+    # collect and the label join): localCheckpoint, not .cache() — no
+    # unpersist point exists after return (r6 minhash leak class)
     runs = tiles.mapInPandas(tile_runs, RUNS_SCHEMA).localCheckpoint()
 
     # --- stage 2: adjacency across tile borders ---
-    # runs touching a horizontal tile border pair with runs in the
-    # adjacent tile row; overlap in x AND equal value => same polygon.
-    # tile size probes the CHECKPOINT via the carried ts column (a
-    # tiles.first() here re-executed the whole upstream lineage);
-    # empty runs fall back to the tiles probe for the return value
-    ts_row = runs.select("ts").first()
-    if ts_row is None:
-        ts_row = tiles.select("tile_size").first()
-    tile_size = int(ts_row[0]) if ts_row else 256
-    border = runs.filter(
-        (F.col("y") % tile_size == 0) | ((F.col("y") + 1) % tile_size == 0)
-    )
-    top = border.filter(F.col("y") % tile_size == 0).alias("t")
-    bot = border.filter((F.col("y") + 1) % tile_size == 0).alias("b")
-    pairs = (
-        top.join(
-            bot,
-            (F.col("t.y") == F.col("b.y") + 1)
-            & (F.col("t.value") == F.col("b.value"))
-            & (F.col("t.x0") < F.col("b.x1"))
-            & (F.col("b.x0") < F.col("t.x1")),
+    # the tile size rides in the collected rows: no probe job unless
+    # no run touches a border
+    ts, y, x0, x1 = F.col("ts"), F.col("y"), F.col("x0"), F.col("x1")
+    border = runs.filter((y % ts == 0) | ((y + 1) % ts == 0)
+                         | (x0 % ts == 0) | (x1 % ts == 0))
+    pdf = border.limit(BORDER_CAP + 1).toPandas()
+    if len(pdf):
+        tile_size = int(pdf["ts"].iloc[0])
+    else:
+        ts_row = (runs.select("ts").first()
+                  or tiles.select("tile_size").first())
+        tile_size = int(ts_row[0]) if ts_row else 256
+    spark = tiles.sparkSession
+    if len(pdf) <= BORDER_CAP:
+        pairs = _border_pairs(pdf, tile_size, connectedness)
+        nodes, inv = np.unique(np.concatenate([pairs["a"], pairs["b"]]),
+                               return_inverse=True)
+        root = nodes[min_label_roots(len(nodes), inv[:len(pairs)],
+                                     inv[len(pairs):])]
+        moved = root != nodes
+        if not moved.any():
+            return runs.drop("ts"), tile_size
+        mapping = F.broadcast(spark.createDataFrame(
+            pd.DataFrame({"label": nodes[moved], "root": root[moved]}),
+            "label long, root long").coalesce(1))
+    else:
+        # over the cap: the same pairing per border line (rows as y,
+        # columns as -1 - x; a run can sit on up to four lines)
+        line = F.explode(F.array(
+            F.when(y % ts == 0, y), F.when((y + 1) % ts == 0, y + 1),
+            F.when(x0 % ts == 0, -1 - x0), F.when(x1 % ts == 0, -1 - x1)))
+        pairs = (
+            border.select("*", line.alias("line")).dropna(subset=["line"])
+            .repartition(spark.sparkContext.defaultParallelism, "line")
+            .groupBy("line").applyInPandas(
+                lambda g: _border_pairs(g, tile_size, connectedness),
+                "a long, b long")
         )
-        .select(F.col("t.label").alias("a"), F.col("b.label").alias("b"))
-    )
-    if connectedness == 8:
-        pairs8 = top.join(
-            bot,
-            (F.col("t.y") == F.col("b.y") + 1)
-            & (F.col("t.value") == F.col("b.value"))
-            & (F.col("t.x0") <= F.col("b.x1"))
-            & (F.col("b.x0") <= F.col("t.x1")),
-        ).select(F.col("t.label").alias("a"), F.col("b.label").alias("b"))
-        pairs = pairs.unionByName(pairs8)
-    # vertical borders
-    left = runs.filter(F.col("x0") % tile_size == 0).alias("l")
-    right = runs.filter(F.col("x1") % tile_size == 0).alias("r")
-    diag = 1 if connectedness == 8 else 0
-    vpairs = (
-        right.join(
-            left,
-            (F.col("l.x0") == F.col("r.x1"))
-            & (F.col("l.value") == F.col("r.value"))
-            & (F.col("l.y") >= F.col("r.y") - diag)
-            & (F.col("l.y") <= F.col("r.y") + diag),
-        )
-        .select(F.col("l.label").alias("a"), F.col("r.label").alias("b"))
-    )
-    # distributed cross-tile merge: min-label propagation with pointer
-    # jumping (the same large-scale CC pattern as dedup.duplicate_
-    # clusters) — border-pair count grows with total polygon perimeter,
-    # so it must never be collected to the driver.
-    from gdal_spark.operators.dedup import duplicate_clusters
-
-    all_pairs = pairs.unionByName(vpairs)
-    mapping = duplicate_clusters(all_pairs, "a", "b") \
-        .withColumnRenamed("doc_id", "label")
+        mapping = duplicate_clusters(pairs, "a", "b").select(
+            F.col("doc_id").alias("label"), F.col("cluster_id").alias("root"))
     global_runs = (
         runs.join(mapping, "label", "left")
         .select(
-            F.coalesce("cluster_id", F.col("label")).alias("label"),
+            F.coalesce("root", F.col("label")).alias("label"),
             "value", "y", "x0", "x1",
         )
     )
@@ -541,7 +530,7 @@ def polygonize_tiles(
     """Distributed polygonize over a tile DataFrame (TILE_SCHEMA).
 
     Stage 1: per-tile CCL -> labeled runs (label namespaced by tile).
-    Stage 2: border adjacency -> distributed min-label propagation.
+    Stage 2: border runs -> driver pairing + min-label propagation.
     Stage 3: label-sorted mapInPandas stream -> ring assembly kernel.
     """
     spark = tiles.sparkSession
@@ -550,8 +539,8 @@ def polygonize_tiles(
     # --- stage 3: assemble polygons per global label ---
     # hash repartition + sortWithinPartitions + mapInPandas stream
     # (groupBy().applyInPandas pays ~ms per group; label counts are
-    # typically tens of thousands)
-    nparts = max(spark.sparkContext.defaultParallelism, 8)
+    # typically tens of thousands), one task per slot
+    nparts = spark.sparkContext.defaultParallelism
 
     def _empty() -> pd.DataFrame:
         return pd.DataFrame({

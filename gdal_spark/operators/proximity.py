@@ -703,7 +703,7 @@ def _rewrite_sieved_runs(runs: DataFrame, tile_size: int,
 
 def _global_runs(tiles: DataFrame, nodata, connectedness):
     """Labeled runs with globally-merged labels (polygonize stages
-    1+2, shared — fully distributed, no driver-side union-find)."""
+    1+2, shared: border runs merged on the driver up to BORDER_CAP)."""
     from gdal_spark.operators import polygonize as pz
 
     return pz.global_label_runs(tiles, nodata, connectedness)

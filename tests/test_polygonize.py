@@ -2,6 +2,8 @@
 (autotest/alg/polygonize.py::test_polygonize_1) re-expressed over the
 same 5x7 grid, plus distributed == single-array equivalence."""
 
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -188,8 +190,10 @@ def test_polygonize_5_8connected_merges_holes():
 
 def test_global_merge_many_border_pairs(spark):
     """~129k cross-tile border pairs (2048 full-width row components
-    x 63 vertical tile borders) — the merge must stay distributed;
-    every row component must reassemble to exactly n pixels."""
+    x 63 vertical tile borders): all 131k runs touch a tile border, so
+    they all pass the driver merge's bounded-collect gate (BORDER_CAP,
+    2M rows) in one collect; every row component must reassemble to
+    exactly n pixels."""
     from pyspark.sql import functions as F
 
     from gdal_spark.operators.polygonize import global_label_runs
@@ -280,3 +284,130 @@ def test_label_tile_vectorized_matches_union_find():
         for i in (1, 2, 3):
             np.testing.assert_array_equal(
                 ra[i], np.concatenate(out[i]))
+
+
+def _in_job_group(spark, action):
+    """(job ids, task count per stage) of what ``action()`` runs,
+    read from its own job group."""
+    sc = spark.sparkContext
+    group = f"polygonize-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = list(st.getJobIdsForGroup(group))
+    tasks = [st.getStageInfo(s).numTasks
+             for j in jobs for s in st.getJobInfo(j).stageIds
+             if st.getStageInfo(s) is not None]
+    return jobs, tasks
+
+
+def _crossing_raster(spark, ts=8):
+    """32x32 raster whose 4x4 blocks of equal value straddle every
+    tile border (blocks offset by 2 px from the 8 px tiles)."""
+    from gdal_spark.operators.warp import tiles_from_array
+
+    yy, xx = np.mgrid[0:32, 0:32]
+    arr = (((yy + 2) // 4 + (xx + 2) // 4) % 3 + 1).astype(np.int32)
+    tiles, _w, _h = tiles_from_array(spark, arr, tile_size=ts)
+    return arr, tiles
+
+
+def test_polygonize_assembles_at_default_parallelism(spark):
+    """The ring-assembly stage after the label shuffle runs exactly
+    defaultParallelism tasks: the one-partition input feeds one-task
+    CCL, border-collect and mapping stages, so the widest stage is
+    the assembly (it ran max(defaultParallelism, 8) before)."""
+    _arr, tiles = _crossing_raster(spark)
+    _jobs, tasks = _in_job_group(spark, lambda: polygonize_tiles(
+        tiles.coalesce(1), [0, 1, 0, 32, 0, -1], None, 4).collect())
+    assert max(tasks) == spark.sparkContext.defaultParallelism, tasks
+
+
+def test_polygonize_job_count(spark):
+    """Polygonize of a 16-tile raster whose components cross tile
+    borders runs at most 5 Spark jobs: runs checkpoint, one border
+    collect, the mapping broadcast, the shuffle map and the assembly.
+    With the three Spark border self-joins, the tile-size first()
+    probe and duplicate_clusters' collect gate it ran 8."""
+    arr, tiles = _crossing_raster(spark)
+    out = []
+    jobs, _tasks = _in_job_group(spark, lambda: out.extend(
+        polygonize_tiles(tiles, [0, 1, 0, 32, 0, -1], None, 4).collect()))
+    assert len(jobs) <= 5, jobs
+    want = polygonize_array(arr, [0, 1, 0, 32, 0, -1], None, 4)
+    assert sorted(r["n_pixels"] for r in out) == \
+        sorted(want["n_pixels"].tolist())
+
+
+def _poly_multiset(values, geoms, npix):
+    return sorted((float(v), int(n), round(geom_area(parse_wkb(bytes(g))), 6))
+                  for v, g, n in zip(values, geoms, npix))
+
+
+def _distributed_vs_array(spark, arr, ts, nodata, conn):
+    from gdal_spark.operators.warp import tiles_from_array
+
+    tiles, w, h = tiles_from_array(spark, arr, tile_size=ts)
+    # tiles_from_array pads the last tile row/column with zeros
+    canvas = np.zeros((-(-h // ts) * ts, -(-w // ts) * ts), arr.dtype)
+    canvas[:h, :w] = arr
+    gt = [0.0, 1.0, 0.0, float(canvas.shape[0]), 0.0, -1.0]
+    got = polygonize_tiles(tiles, gt, nodata, conn).toPandas()
+    want = polygonize_array(canvas, gt, nodata, conn)
+    return (_poly_multiset(got["value"], got["geometry"], got["n_pixels"]),
+            _poly_multiset(want["value"], want["geometry"],
+                           want["n_pixels"]))
+
+
+@pytest.mark.parametrize("anti", [False, True])
+@pytest.mark.parametrize("conn", [4, 8])
+def test_distributed_diagonal_touch_at_tile_corner(spark, conn, anti):
+    """Two pixels touching only at the corner shared by four tiles:
+    one polygon under 8-connectivity, two under 4."""
+    arr = np.zeros((8, 8), dtype=np.int32)
+    if anti:
+        arr[3, 4] = arr[4, 3] = 7
+    else:
+        arr[3, 3] = arr[4, 4] = 7
+    got, want = _distributed_vs_array(spark, arr, 4, 0.0, conn)
+    assert got == want
+    assert got == ([(7.0, 2, 2.0)] if conn == 8
+                   else [(7.0, 1, 1.0), (7.0, 1, 1.0)])
+
+
+_RANDOM_CASES = [(conn, nodata, ts) for conn in (4, 8)
+                 for nodata in (None, 0.0) for ts in (4, 5, 8)]
+
+
+def _random_grid(i):
+    rng = np.random.default_rng(1000 + i)
+    h, w = int(rng.integers(9, 20)), int(rng.integers(9, 20))
+    return rng.integers(0, 3, (h, w)).astype(np.float64)
+
+
+@pytest.mark.parametrize("i,case", list(enumerate(_RANDOM_CASES)))
+def test_distributed_polygonize_random_grids(spark, i, case):
+    """Seeded random grids with cross-tile components: the distributed
+    (value, n_pixels, area) multiset equals polygonize_array's on the
+    zero-padded canvas."""
+    conn, nodata, ts = case
+    got, want = _distributed_vs_array(spark, _random_grid(i), ts,
+                                      nodata, conn)
+    assert got == want
+
+
+@pytest.mark.parametrize("i,case", list(enumerate(_RANDOM_CASES)))
+def test_distributed_polygonize_over_cap(spark, monkeypatch, i, case):
+    """The same grids with the border-collect cap at 1 row: the pairs
+    come from the kernel grouped by border line and resolve through
+    duplicate_clusters — the multisets stay equal."""
+    from gdal_spark.operators import polygonize as pz
+
+    monkeypatch.setattr(pz, "BORDER_CAP", 1)
+    conn, nodata, ts = case
+    got, want = _distributed_vs_array(spark, _random_grid(i), ts,
+                                      nodata, conn)
+    assert got == want

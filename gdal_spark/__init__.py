@@ -14,16 +14,17 @@ Common-Crawl-style web pages:
 * raster<->vector: rasterize (alg/llrasterize.cpp scanline center
   rules), polygonize (alg/gdalrasterpolygonenumerator.cpp CCL),
   warp/translate (alg/gdalwarpoperation.cpp chunk model), zonal stats
-* z/x/y tiling with range-partitioned shuffle + pyramid reduce
-  (semantics: apps/gdalalg_raster_tile.cpp:435-514)
+* z/x/y tiling: every pyramid level keyed map-side, one hash exchange
+  on packed buckets (semantics: apps/gdalalg_raster_tile.cpp:435-514)
 * OGR SQL subset (summary / distinct modes, ogr/ogr_swq.h:320-322)
 * web-scale text ops: dedup (exact/minhash/simhash), ANN similarity,
   language id, quality scoring, token counting, fingerprinting
 
 Architecture is Spark-first: DataFrame/Catalyst plans, Arrow-batched
 pandas UDF kernels (no per-row Python), broadcast prefilter joins,
-explicit salting of hot cells, range-partitioned tile shuffles, and
-checkpointed per-partition lineage for idempotent resume.
+explicit salting of hot cells, hash-partitioned tile sinks sorted
+per partition, and checkpointed per-partition lineage for idempotent
+resume.
 """
 
 __version__ = "0.1.0"

@@ -6,21 +6,21 @@ Spark dataflow:
 * tile assignment uses the exact GetTileIndices math (:457-480 —
   floor((x - topLeftX)/(res*tileW) + 1e-3), clamped) as JVM column
   expressions;
-* base-zoom rendering is a **salted two-phase aggregation**: a
-  map-side combine (mapInPandas partial histograms per tile per
-  input partition — the distributed analog of GDAL's per-chunk
-  accumulation under the 64MB warp memory budget,
-  alg/gdalwarpoperation.cpp:611) followed by a groupBy(tile) merge.
-  Hot tiles (Zipf cities) arrive pre-reduced, so the shuffle carries
-  at most n_partitions rows per tile instead of n_points — this is
-  the "explicit salting of hot cells" of the north rule, with the
-  input partition id as the salt;
-* the shuffle into tile order is range-partitioned on (z, x, y)
-  (repartitionByRange), mirroring the reference's Hilbert/row-major
-  tile traversal locality (gdalalg_raster_tile.cpp tile loops);
-* overview zooms are built from the zoom below
-  (gdalalg_raster_tile.cpp:1552-1596): groupBy(parent) of 4 children
-  with a 2x2 sum/average reduce — iterated down to zoom 0.
+* the pyramid (``sparse_pyramid``, ``build_pyramid``) is one pass. A
+  map-side kernel reduces its input partition to per-pixel counts at
+  the base zoom and derives every coarser level's (tile, pixel) keys
+  from them by bit shifts (parent pixel = child pixel >> 1), then
+  packs the entries into one row per hash bucket of the tile key.
+  Hot tiles (Zipf cities) arrive pre-reduced, with the input
+  partition as the salt, so the shuffle carries at most one entry per
+  pixel per input partition.  ONE hash exchange on the bucket id then
+  merges each tile's entries per partition in numpy, for all levels
+  at once; the reference builds overviews level by level
+  (gdalalg_raster_tile.cpp:1552-1596);
+* the sinks (``tile_blob_frame``, ``write_tiles``) hash-partition on
+  (z, x, y) at defaultParallelism and sort within each partition, so
+  a tile's bands arrive adjacent; no range partitioning, no sampling
+  job.
 
 Tile rows: (zoom:int, tile_x:long, tile_y:long, band:int,
 data:binary raw C-order, dtype:string, tile_size:int).

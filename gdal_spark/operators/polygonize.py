@@ -7,23 +7,32 @@ union-find merge, alg/polygonize_polygonizer.cpp ring assembly):
 * per-tile connected-component labeling of equal-valued pixels
   (4- or 8-connected; nodata masked), via row-run union-find — the
   same run-merge structure as the reference's ProcessLine;
+* a component is assembled where it is complete, as the reference
+  emits a polygon once its component is closed: one that touches
+  none of its tile's edge rows or columns is complete inside the
+  tile and is assembled by the tile kernel; only the runs of
+  edge-touching components pay the cross-tile merge;
 * cross-tile merge: the runs on a tile's edge rows or columns are
-  collected ONCE through the bounded-collect gate (up to BORDER_CAP
-  rows, duplicate_clusters' cap) and paired on the driver in numpy
-  (_border_pairs); components resolve by vectorized min-label
-  propagation with pointer jumping, and the label -> root mapping
-  rides a broadcast join.  A raster whose border runs exceed the cap
-  pairs them in a kernel grouped by border line and resolves the
-  pairs through dedup.duplicate_clusters;
+  paired on the driver in numpy (_border_pairs) and components
+  resolve by vectorized min-label propagation with pointer jumping
+  (_label_roots).  Two gates decide where: up to DRIVER_ASSEMBLY_CAP
+  edge-touching runs are collected once and assembled on the driver;
+  past it, the border runs are collected (up to BORDER_CAP rows,
+  duplicate_clusters' cap), the label -> root mapping rides a
+  broadcast join and the runs hash by label to a sorted assembly
+  stream; past BORDER_CAP too, the pairs come from a kernel grouped
+  by border line and resolve through dedup.duplicate_clusters;
 * polygons are assembled from each global component's pixel *runs*
-  (y, x0, x1) grouped by final label: boundary edges are stitched
-  into closed rings; at vertex pinches (boundaries meeting at a
-  pixel corner) the walk always takes the tightest turn — because
-  hole boundaries run with opposite orientation to outer boundaries,
-  this single rule keeps corner-touching holes as separate rings
-  (the reference's test_polygonize_5 golden) while carrying an
-  8-connected label's outer boundary through its own diagonal
-  self-touches; then georeferenced via the geotransform.
+  (y, x0, x1), sorted by (label, y, x0) (polygon_rows): boundary
+  edges are stitched into closed rings; at vertex pinches (boundaries
+  meeting at a pixel corner) the walk always takes the tightest turn
+  — because hole boundaries run with opposite orientation to outer
+  boundaries, this single rule keeps corner-touching holes as
+  separate rings (the reference's test_polygonize_5 golden) while
+  carrying an 8-connected label's outer boundary through its own
+  diagonal self-touches; then georeferenced via the geotransform.
+  Every path assembles in global pixel coordinates, so a polygon's
+  WKB does not depend on the path or the tiling.
 
 Output: (value:double, geometry:binary WKB polygon, n_pixels:long).
 Ring equality with the reference is up to rotation/orientation; tests
@@ -48,6 +57,7 @@ from gdal_spark.operators.dedup import (
     COLLECT_CAP, duplicate_clusters, min_label_roots,
 )
 from gdal_spark.operators.tiling import decode_tile
+from gdal_spark.session import kernel_name, spread_for_kernel
 
 
 # --------------------------------------------------------------------
@@ -353,6 +363,32 @@ def assemble_polygons(ys, x0s, x1s, gt: list[float],
     return list(zip(polys, npix))
 
 
+def polygon_rows(runs: pd.DataFrame, gt: list[float],
+                 connectedness: int = 4) -> pd.DataFrame:
+    """Runs (label, value, y, x0, x1) -> POLY_SCHEMA rows, one per
+    polygon: the one loop from runs to polygons, shared by
+    polygonize_array, the tile kernel, the driver merge and the
+    over-gate assembly stream.  Runs are sorted by (label, y, x0), the
+    order the stream's sortWithinPartitions feeds them, and each
+    label's span goes to assemble_polygons."""
+    cols = [runs[c].to_numpy() for c in ("label", "value", "y", "x0", "x1")]
+    order = np.lexsort((cols[3], cols[2], cols[0]))
+    lab, val, y, x0, x1 = (c[order] for c in cols)
+    starts = np.flatnonzero(np.r_[True, lab[1:] != lab[:-1]]) \
+        if len(lab) else np.zeros(0, np.int64)
+    ends = np.r_[starts[1:], len(lab)]
+    vals, geoms, npix = [], [], []
+    for s, e in zip(starts, ends):
+        for rings, n in assemble_polygons(y[s:e], x0[s:e], x1[s:e], gt,
+                                          connectedness):
+            vals.append(float(val[s]))
+            geoms.append(polygon_wkb(rings))
+            npix.append(n)
+    return pd.DataFrame({"value": np.array(vals, np.float64),
+                         "geometry": pd.Series(geoms, dtype=object),
+                         "n_pixels": np.array(npix, np.int64)})
+
+
 # --------------------------------------------------------------------
 # distributed operator
 # --------------------------------------------------------------------
@@ -372,8 +408,52 @@ POLY_SCHEMA = StructType([
     StructField("n_pixels", LongType()),
 ])
 
+# the polygonize tile kernel's rows: the runs of its edge-touching
+# components (geometry null) and the polygons of its interior ones
+# (run columns null)
+TILE_OUT_SCHEMA = StructType(RUNS_SCHEMA.fields + POLY_SCHEMA.fields[1:])
+
 
 BORDER_CAP = COLLECT_CAP     # border runs the driver merge collects
+
+# edge-touching runs the driver assembles itself (collect, merge,
+# polygon_rows); past this many the parallel stream wins.  Measured on
+# a 4-vCPU guest, local[3], warm session, merge stage alone on the same
+# checkpointed kernel output.  Worst case, uniform 3-value noise at
+# 64-px tiles (~2.5 runs per polygon, ~64 us per run on the driver):
+# driver 0.26 / 0.86 / 1.91 s against stream 0.51 / 0.78 / 1.07 s at
+# 3.4k / 13.7k / 31k runs, break-even near 11k.  The raster_algebra
+# raster upscaled (few large polygons, ~5 us per run) still favours
+# the driver at 58k runs: 0.32 s against 0.60 s.
+DRIVER_ASSEMBLY_CAP = 10_000
+
+
+def _tile_runs(b: pd.DataFrame, nodata: float | None,
+               connectedness: int) -> Iterator[tuple[pd.DataFrame,
+                                                     np.ndarray]]:
+    """Per tile of a TILE_SCHEMA batch: its labeled runs (RUNS_SCHEMA
+    columns; global pixels, labels qualified by the tile) and a per-run
+    flag, True where the run's component has a pixel on the tile's row
+    0, row ts-1, column 0 or column ts-1.  A component without one is
+    complete inside the tile under 4- and 8-connectivity alike: a
+    diagonal touch across a tile corner needs a corner pixel."""
+    for ts, tx, ty, data, dtype in zip(b["tile_size"], b["tile_x"],
+                                       b["tile_y"], b["data"], b["dtype"]):
+        ts, tx, ty = int(ts), int(tx), int(ty)
+        arr = decode_tile(data, dtype, ts)
+        labels, n_runs = label_tile(arr, nodata, connectedness)
+        ls, ys, x0s, x1s = runs_of_labels(labels)
+        if len(ls) == 0:
+            continue
+        touch = np.zeros(n_runs, dtype=bool)
+        touch[ls[(ys == 0) | (ys == ts - 1) | (x0s == 0)
+                 | (x1s == ts)]] = True
+        yield pd.DataFrame({
+            "label": ((tx * (1 << 20) + ty) << 24) + ls,
+            "value": arr[ys, x0s].astype(np.float64),
+            "y": ys + ty * ts, "x0": x0s + tx * ts, "x1": x1s + tx * ts,
+            "ts": np.full(len(ls), ts, np.int32),
+        }), touch[ls]
 
 
 def _overlap_pairs(kp, p0, p1, ks, s0, s1):
@@ -429,50 +509,28 @@ def _border_pairs(pdf: pd.DataFrame, ts: int,
                          "b": np.concatenate([lab[b[j]], lab[r[k]]])})
 
 
-def global_label_runs(
-    tiles: DataFrame, nodata: float | None = None,
-    connectedness: int = 4,
-) -> tuple[DataFrame, int]:
-    """Stages 1+2 of polygonize, shared with sieve: per-tile CCL ->
-    labeled runs, then the cross-tile label merge: border runs collected
-    once (up to BORDER_CAP) and paired on the driver, or over the cap
-    paired per border line and resolved by dedup.duplicate_clusters.
+def _label_roots(pdf: pd.DataFrame, ts: int,
+                 connectedness: int) -> tuple[np.ndarray, np.ndarray]:
+    """The driver's cross-tile merge of collected runs: _border_pairs,
+    then min-label propagation.  Returns (label, root) of every label
+    whose root is another label, sorted by label."""
+    pairs = _border_pairs(pdf, ts, connectedness)
+    nodes, inv = np.unique(np.concatenate([pairs["a"], pairs["b"]]),
+                           return_inverse=True)
+    root = nodes[min_label_roots(len(nodes), inv[:len(pairs)],
+                                 inv[len(pairs):])]
+    moved = root != nodes
+    return nodes[moved], root[moved]
 
-    Returns (runs with globally-merged labels, tile_size)."""
 
-    def tile_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {"label": [], "value": [], "y": [], "x0": [],
-                    "x1": [], "ts": []}
-            for i in range(len(b)):
-                ts = int(b["tile_size"].iloc[i])
-                tx = int(b["tile_x"].iloc[i])
-                ty = int(b["tile_y"].iloc[i])
-                arr = decode_tile(b["data"].iloc[i],
-                                  b["dtype"].iloc[i], ts)
-                labels, _ = label_tile(arr, nodata, connectedness)
-                ls, ys, x0s, x1s = runs_of_labels(labels)
-                if len(ls) == 0:
-                    continue
-                tile_key = (tx * (1 << 20) + ty) << 24
-                rows["label"].append(tile_key + ls)
-                vals = arr[ys, x0s].astype(np.float64)
-                rows["value"].append(vals)
-                rows["y"].append(ys + ty * ts)
-                rows["x0"].append(x0s + tx * ts)
-                rows["x1"].append(x1s + tx * ts)
-                rows["ts"].append(np.full(len(ls), ts, np.int32))
-            if rows["label"]:
-                yield pd.DataFrame({
-                    k: np.concatenate(v) for k, v in rows.items()
-                })
-
-    # ONE materialization of the per-tile CCL (it feeds the border
-    # collect and the label join): localCheckpoint, not .cache() — no
-    # unpersist point exists after return (r6 minhash leak class)
-    runs = tiles.mapInPandas(tile_runs, RUNS_SCHEMA).localCheckpoint()
-
-    # --- stage 2: adjacency across tile borders ---
+def _merge_runs(runs: DataFrame, tiles: DataFrame,
+                connectedness: int) -> tuple[DataFrame, int]:
+    """Stage 2 over a checkpointed RUNS_SCHEMA frame: the runs on tile
+    edge rows and columns are collected once through the
+    bounded-collect gate (BORDER_CAP) and merged on the driver
+    (_label_roots); the label -> root mapping rides a broadcast join.
+    Over the cap the same pairing runs in a kernel grouped by border
+    line and resolves through dedup.duplicate_clusters."""
     # the tile size rides in the collected rows: no probe job unless
     # no run touches a border
     ts, y, x0, x1 = F.col("ts"), F.col("y"), F.col("x0"), F.col("x1")
@@ -485,18 +543,13 @@ def global_label_runs(
         ts_row = (runs.select("ts").first()
                   or tiles.select("tile_size").first())
         tile_size = int(ts_row[0]) if ts_row else 256
-    spark = tiles.sparkSession
+    spark = runs.sparkSession
     if len(pdf) <= BORDER_CAP:
-        pairs = _border_pairs(pdf, tile_size, connectedness)
-        nodes, inv = np.unique(np.concatenate([pairs["a"], pairs["b"]]),
-                               return_inverse=True)
-        root = nodes[min_label_roots(len(nodes), inv[:len(pairs)],
-                                     inv[len(pairs):])]
-        moved = root != nodes
-        if not moved.any():
+        nodes, root = _label_roots(pdf, tile_size, connectedness)
+        if not len(nodes):
             return runs.drop("ts"), tile_size
         mapping = F.broadcast(spark.createDataFrame(
-            pd.DataFrame({"label": nodes[moved], "root": root[moved]}),
+            pd.DataFrame({"label": nodes, "root": root}),
             "label long, root long").coalesce(1))
     else:
         # over the cap: the same pairing per border line (rows as y,
@@ -523,46 +576,103 @@ def global_label_runs(
     return global_runs, tile_size
 
 
+def global_label_runs(
+    tiles: DataFrame, nodata: float | None = None,
+    connectedness: int = 4,
+) -> tuple[DataFrame, int]:
+    """Every labeled run with its globally merged label (sieve's
+    input): the per-tile CCL kernel emits all runs of every tile into
+    one localCheckpoint, then _merge_runs resolves the cross-tile
+    labels — border runs collected once (up to BORDER_CAP) and paired
+    on the driver, or over the cap paired per border line and resolved
+    by dedup.duplicate_clusters.
+
+    Returns (runs with globally-merged labels, tile_size)."""
+
+    @kernel_name("operators.polygonize.label_runs")
+    def label_runs(batches: Iterator[pd.DataFrame]
+                   ) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            frames = [runs for runs, _edge in
+                      _tile_runs(b, nodata, connectedness)]
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
+
+    # ONE materialization of the per-tile CCL (it feeds the border
+    # collect and the label join): localCheckpoint, not .cache() — no
+    # unpersist point exists after return (r6 minhash leak class)
+    runs = tiles.mapInPandas(label_runs, RUNS_SCHEMA).localCheckpoint()
+    return _merge_runs(runs, tiles, connectedness)
+
+
 def polygonize_tiles(
     tiles: DataFrame, gt: list[float], nodata: float | None = None,
     connectedness: int = 4,
 ) -> DataFrame:
     """Distributed polygonize over a tile DataFrame (TILE_SCHEMA).
 
-    Stage 1: per-tile CCL -> labeled runs (label namespaced by tile).
-    Stage 2: border runs -> driver pairing + min-label propagation.
-    Stage 3: label-sorted mapInPandas stream -> ring assembly kernel.
+    Stage 1, the tile kernel (``operators.polygonize.tile``, at the
+    spread_for_kernel width): per-tile CCL; the polygons of every
+    component that touches none of the tile's edge rows or columns
+    are assembled in place, and only the runs of edge-touching
+    components pass on.  One localCheckpoint holds both; an
+    accumulator counts the edge runs.
+    Stage 2, the merge of the edge runs, picked by that count:
+    * none: the interior polygons are the result (no further job);
+    * up to DRIVER_ASSEMBLY_CAP: one collect, _label_roots and
+      polygon_rows on the driver, and the interior polygons
+      unionByName that small local frame (no broadcast, no shuffle);
+    * over it: _merge_runs (border collect up to BORDER_CAP, else
+      duplicate_clusters), a label-hash shuffle to defaultParallelism
+      and the label-sorted assembly stream
+      (``operators.polygonize.assemble``).
     """
     spark = tiles.sparkSession
-    global_runs, _ = global_label_runs(tiles, nodata, connectedness)
+    n_edge = spark.sparkContext.accumulator(0)
 
-    # --- stage 3: assemble polygons per global label ---
+    @kernel_name("operators.polygonize.tile")
+    def polygonize_tile(batches: Iterator[pd.DataFrame]
+                        ) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            edge_runs, polys = [], []
+            for runs, edge in _tile_runs(b, nodata, connectedness):
+                edge_runs.append(runs[edge])
+                polys.append(polygon_rows(runs[~edge], gt, connectedness))
+            if not polys:
+                continue
+            edge_runs = pd.concat(edge_runs, ignore_index=True)
+            n_edge.add(len(edge_runs))
+            yield edge_runs.assign(geometry=None, n_pixels=None)
+            yield pd.concat(polys, ignore_index=True).assign(
+                label=None, y=None, x0=None, x1=None, ts=None)
+
+    out = (spread_for_kernel(tiles)
+           .mapInPandas(polygonize_tile, TILE_OUT_SCHEMA)
+           .localCheckpoint())
+    geometry = F.col("geometry")
+    interior = out.filter(geometry.isNotNull()).select(*POLY_SCHEMA.names)
+    if n_edge.value == 0:
+        return interior
+    edge = out.filter(geometry.isNull())
+    if n_edge.value <= DRIVER_ASSEMBLY_CAP:
+        pdf = edge.toPandas()
+        nodes, root = _label_roots(pdf, int(pdf["ts"].iloc[0]),
+                                   connectedness)
+        if len(nodes):
+            lab = pdf["label"].to_numpy()
+            i = np.searchsorted(nodes, lab).clip(max=len(nodes) - 1)
+            pdf["label"] = np.where(nodes[i] == lab, root[i], lab)
+        return interior.unionByName(spark.createDataFrame(
+            polygon_rows(pdf, gt, connectedness), POLY_SCHEMA))
+
+    global_runs, _ = _merge_runs(edge.select(*RUNS_SCHEMA.names), tiles,
+                                 connectedness)
+
     # hash repartition + sortWithinPartitions + mapInPandas stream
-    # (groupBy().applyInPandas pays ~ms per group; label counts are
-    # typically tens of thousands), one task per slot
-    nparts = spark.sparkContext.defaultParallelism
-
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame({
-            "value": pd.Series(dtype=np.float64),
-            "geometry": pd.Series(dtype=object),
-            "n_pixels": pd.Series(dtype=np.int64),
-        })
-
-    def assemble_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = {"value": [], "geometry": [], "n_pixels": []}
-        for _, g in pdf.groupby("label", sort=False):
-            for rings, npix in assemble_polygons(
-                    g["y"].to_numpy(), g["x0"].to_numpy(),
-                    g["x1"].to_numpy(), gt, connectedness):
-                rows["value"].append(float(g["value"].iloc[0]))
-                rows["geometry"].append(polygon_wkb(rings))
-                rows["n_pixels"].append(npix)
-        out = pd.DataFrame(rows)
-        return out if len(out) else _empty()
-
-    def build_stream(batches: Iterator[pd.DataFrame]
-                     ) -> Iterator[pd.DataFrame]:
+    # (groupBy().applyInPandas pays ~ms per group), one task per slot
+    @kernel_name("operators.polygonize.assemble")
+    def assemble_stream(batches: Iterator[pd.DataFrame]
+                        ) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
         for b in batches:
             if carry is not None:
@@ -575,17 +685,16 @@ def polygonize_tiles(
             labs = b["label"].to_numpy()
             cut = int(np.searchsorted(labs, labs[-1], side="left"))
             carry = b.iloc[cut:]
-            done = b.iloc[:cut]
-            if len(done):
-                yield assemble_frame(done)
+            if cut:
+                yield polygon_rows(b.iloc[:cut], gt, connectedness)
         if carry is not None and len(carry):
-            yield assemble_frame(carry)
+            yield polygon_rows(carry, gt, connectedness)
 
-    return (
+    nparts = spark.sparkContext.defaultParallelism
+    return interior.unionByName(
         global_runs.repartition(nparts, "label")
         .sortWithinPartitions("label", "y", "x0")
-        .mapInPandas(build_stream, POLY_SCHEMA)
-    )
+        .mapInPandas(assemble_stream, POLY_SCHEMA))
 
 
 def polygonize_array(arr: np.ndarray, gt: list[float],
@@ -594,14 +703,6 @@ def polygonize_array(arr: np.ndarray, gt: list[float],
     """Single-array reference path (tests / small rasters)."""
     labels, _ = label_tile(arr, nodata, connectedness)
     ls, ys, x0s, x1s = runs_of_labels(labels)
-    rows = {"value": [], "geometry": [], "n_pixels": []}
-    for lab in pd.unique(ls):
-        sel = ls == lab
-        val = float(arr[ys[sel][0], x0s[sel][0]])
-        for rings, npix in assemble_polygons(ys[sel], x0s[sel],
-                                             x1s[sel], gt,
-                                             connectedness):
-            rows["value"].append(val)
-            rows["geometry"].append(polygon_wkb(rings))
-            rows["n_pixels"].append(npix)
-    return pd.DataFrame(rows)
+    return polygon_rows(pd.DataFrame({
+        "label": ls, "value": arr[ys, x0s].astype(np.float64),
+        "y": ys, "x0": x0s, "x1": x1s}), gt, connectedness)

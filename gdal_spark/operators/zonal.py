@@ -27,6 +27,8 @@ from pyspark.sql.types import (
 )
 
 from gdal_spark.operators.rasterize import GridSpec
+from gdal_spark.operators.tiling import decode_tile
+from gdal_spark.session import kernel_name
 
 _PARTIAL = StructType([
     StructField("zone", LongType()),
@@ -112,23 +114,23 @@ def zonal_stats(
     """
     bc = _zone_render_bc(spark, zones_pdf, grid, tile_size)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @kernel_name("operators.zonal.partials")
+    def zonal_partials(batches: Iterator[pd.DataFrame]
+                       ) -> Iterator[pd.DataFrame]:
         entries = bc.value
         for b in batches:
             rows = {k: [] for k in
                     ("zone", "cnt", "vsum", "vsum2", "vmin", "vmax")}
-            for _, r in b.iterrows():
-                ts = int(r["tile_size"])
-                from gdal_spark.operators.tiling import decode_tile
-
-                zones = _render_zone_tile(
-                    entries, int(r["tile_x"]), int(r["tile_y"]),
-                    grid, ts, all_touched)
+            for ts, tx, ty, data, dtype in zip(
+                    b["tile_size"], b["tile_x"], b["tile_y"], b["data"],
+                    b["dtype"]):
+                ts = int(ts)
+                zones = _render_zone_tile(entries, int(tx), int(ty),
+                                          grid, ts, all_touched)
                 mask = zones >= 1
                 if not mask.any():
                     continue
-                vals = decode_tile(r["data"], r["dtype"], ts) \
-                    .astype(np.float64)
+                vals = decode_tile(data, dtype, ts).astype(np.float64)
                 if nodata is not None:
                     mask &= vals != nodata
                 z = zones[mask]
@@ -150,7 +152,7 @@ def zonal_stats(
                     k: np.concatenate(rows[k]) for k in rows
                 })
 
-    partials = value_tiles.mapInPandas(kernel, _PARTIAL)
+    partials = value_tiles.mapInPandas(zonal_partials, _PARTIAL)
     return (
         partials.groupBy("zone")
         .agg(
@@ -159,9 +161,12 @@ def zonal_stats(
             (F.sum("vsum") / F.sum("cnt")).alias("mean"),
             F.min("vmin").alias("min"),
             F.max("vmax").alias("max"),
-            F.sqrt(
-                F.sum("vsum2") / F.sum("cnt")
-                - (F.sum("vsum") / F.sum("cnt")) ** 2
+            # a constant zone has variance 0, but E[v^2] - E[v]^2 can
+            # cancel to a tiny negative (sqrt -> NaN) or positive residue
+            F.when(F.min("vmin") == F.max("vmax"), F.lit(0.0)).otherwise(
+                F.sqrt(F.greatest(
+                    F.sum("vsum2") / F.sum("cnt")
+                    - (F.sum("vsum") / F.sum("cnt")) ** 2, F.lit(0.0)))
             ).alias("stddev_pop"),
         )
         .withColumn("zone", F.col("zone") - 1)  # un-offset fid
@@ -179,22 +184,22 @@ def zonal_value_counts(
     """(zone, value, cnt) rows — basis for MAJORITY/MINORITY/VARIETY."""
     bc = _zone_render_bc(spark, zones_pdf, grid, tile_size)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @kernel_name("operators.zonal.value_counts")
+    def zonal_value_counts_kernel(batches: Iterator[pd.DataFrame]
+                                  ) -> Iterator[pd.DataFrame]:
         entries = bc.value
         for b in batches:
             rows = {"zone": [], "value": [], "cnt": []}
-            for _, r in b.iterrows():
-                ts = int(r["tile_size"])
-                from gdal_spark.operators.tiling import decode_tile
-
-                zones = _render_zone_tile(
-                    entries, int(r["tile_x"]), int(r["tile_y"]),
-                    grid, ts, False)
+            for ts, tx, ty, data, dtype in zip(
+                    b["tile_size"], b["tile_x"], b["tile_y"], b["data"],
+                    b["dtype"]):
+                ts = int(ts)
+                zones = _render_zone_tile(entries, int(tx), int(ty),
+                                          grid, ts, False)
                 mask = zones >= 1
                 if not mask.any():
                     continue
-                vals = decode_tile(r["data"], r["dtype"], ts) \
-                    .astype(np.float64)
+                vals = decode_tile(data, dtype, ts).astype(np.float64)
                 if nodata is not None:
                     mask &= vals != nodata
                 if not mask.any():
@@ -210,7 +215,7 @@ def zonal_value_counts(
                 })
 
     counts = (
-        value_tiles.mapInPandas(kernel, _VALCOUNT)
+        value_tiles.mapInPandas(zonal_value_counts_kernel, _VALCOUNT)
         .groupBy("zone", "value").agg(F.sum("cnt").alias("cnt"))
     )
     return counts.withColumn("zone", F.col("zone") - 1)

@@ -163,6 +163,16 @@ def spread_for_kernel(df):
     return df
 
 
+def kernel_name(name: str):
+    """Decorator: name a python kernel ``<layer>.<op>.<stage>``.  A
+    pandas UDF takes its function's ``__name__``, so this is the name
+    the executed plan shows on the kernel's MapInPandas node."""
+    def wrap(fn):
+        fn.__name__ = name
+        return fn
+    return wrap
+
+
 def get_spark(
     app_name: str = "gdal_spark",
     master: str | None = None,

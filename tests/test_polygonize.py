@@ -315,35 +315,132 @@ def _crossing_raster(spark, ts=8):
     return arr, tiles
 
 
-def test_polygonize_assembles_at_default_parallelism(spark):
-    """The ring-assembly stage after the label shuffle runs exactly
-    defaultParallelism tasks: the one-partition input feeds one-task
-    CCL, border-collect and mapping stages, so the widest stage is
-    the assembly (it ran max(defaultParallelism, 8) before)."""
+def test_polygonize_assembles_at_default_parallelism(spark, monkeypatch):
+    """Over the driver-assembly gate, the ring-assembly stage after the
+    label shuffle runs exactly defaultParallelism tasks (it ran
+    max(defaultParallelism, 8) before).  The one-partition input feeds
+    one-task tile-kernel, border-collect and mapping stages; the last
+    stage is the union of the interior polygons' one checkpoint
+    partition and the assembly, so it runs defaultParallelism + 1."""
+    from gdal_spark.operators import polygonize as pz
+
+    monkeypatch.setattr(pz, "DRIVER_ASSEMBLY_CAP", 1)
     _arr, tiles = _crossing_raster(spark)
     _jobs, tasks = _in_job_group(spark, lambda: polygonize_tiles(
         tiles.coalesce(1), [0, 1, 0, 32, 0, -1], None, 4).collect())
+    assert max(tasks) == spark.sparkContext.defaultParallelism + 1, tasks
+
+
+def test_polygonize_tile_kernel_at_default_parallelism(spark):
+    """The tile kernel goes through session.spread_for_kernel: a
+    one-partition checkpointed input is spread to defaultParallelism
+    tasks, and the executed plan names the kernel."""
+    _arr, tiles = _crossing_raster(spark)
+    one = tiles.coalesce(1).localCheckpoint()
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = store.executionsList().size()
+    _jobs, tasks = _in_job_group(spark, lambda: polygonize_tiles(
+        one, [0, 1, 0, 32, 0, -1], None, 4))
     assert max(tasks) == spark.sparkContext.defaultParallelism, tasks
+    plans = store.executionsList()
+    assert any("operators.polygonize.tile"
+               in plans.apply(i).physicalPlanDescription()
+               for i in range(seen, plans.size()))
 
 
 def test_polygonize_job_count(spark):
     """Polygonize of a 16-tile raster whose components cross tile
-    borders runs at most 5 Spark jobs: runs checkpoint, one border
-    collect, the mapping broadcast, the shuffle map and the assembly.
-    With the three Spark border self-joins, the tile-size first()
-    probe and duplicate_clusters' collect gate it ran 8."""
+    borders runs at most 3 Spark jobs: the tile-kernel checkpoint, one
+    collect of the edge-touching runs and the caller's collect.  With
+    the mapping broadcast, the label shuffle and the assembly stage it
+    ran 5; with the three Spark border self-joins, 8."""
     arr, tiles = _crossing_raster(spark)
     out = []
     jobs, _tasks = _in_job_group(spark, lambda: out.extend(
         polygonize_tiles(tiles, [0, 1, 0, 32, 0, -1], None, 4).collect()))
-    assert len(jobs) <= 5, jobs
+    assert len(jobs) <= 3, jobs
     want = polygonize_array(arr, [0, 1, 0, 32, 0, -1], None, 4)
-    assert sorted(r["n_pixels"] for r in out) == \
-        sorted(want["n_pixels"].tolist())
+    assert _poly_multiset(*zip(*out)) == _poly_multiset(
+        want["value"], want["geometry"], want["n_pixels"])
+
+
+def _tiles_of(spark, arr, ts):
+    from gdal_spark.operators.warp import tiles_from_array
+
+    return tiles_from_array(spark, arr, tile_size=ts)[0]
+
+
+def test_polygonize_interior_only_runs_no_collect(spark):
+    """Every component inside one tile, none on a tile edge: the
+    kernel emits no edge run, so polygonize runs the checkpoint and
+    the caller's collect only."""
+    arr = np.zeros((16, 16), dtype=np.int32)
+    arr[2:5, 2:4] = 3
+    arr[10:13, 9:14] = 4
+    arr[11, 11] = 5              # a hole in the 4-component
+    out = []
+    jobs, _tasks = _in_job_group(spark, lambda: out.extend(
+        polygonize_tiles(_tiles_of(spark, arr, 8), [0, 1, 0, 16, 0, -1],
+                         0.0, 4).collect()))
+    assert len(jobs) <= 2, jobs
+    want = polygonize_array(arr, [0, 1, 0, 16, 0, -1], 0.0, 4)
+    assert len(out) == 3
+    assert _poly_multiset(*zip(*out)) == _poly_multiset(
+        want["value"], want["geometry"], want["n_pixels"])
+
+
+def test_polygonize_all_nodata(spark):
+    """An all-nodata raster: the tile kernel's checkpoint is the only
+    job polygonize runs, and the result is empty."""
+    arr = np.zeros((16, 16), dtype=np.int32)
+    res = []
+    jobs, _tasks = _in_job_group(spark, lambda: res.append(
+        polygonize_tiles(_tiles_of(spark, arr, 8), [0, 1, 0, 16, 0, -1],
+                         0.0, 4)))
+    assert len(jobs) == 1, jobs
+    assert res[0].collect() == []
+
+
+def test_polygonize_const_tiles(spark):
+    """const:-coded tiles (one value per tile) decode to full tiles:
+    the four tiles of two values merge across the tile borders."""
+    ts = 4
+    vals = {(0, 0): 1, (1, 0): 1, (0, 1): 2, (1, 1): 1}
+    tiles = spark.createDataFrame(pd.DataFrame([
+        {"zoom": -1, "tile_x": tx, "tile_y": ty, "band": 1,
+         "data": np.array([v], np.int32).tobytes(), "dtype": "const:int32",
+         "tile_size": ts} for (tx, ty), v in vals.items()]))
+    arr = np.zeros((8, 8), dtype=np.int32)
+    for (tx, ty), v in vals.items():
+        arr[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts] = v
+    gt = [0.0, 1.0, 0.0, 8.0, 0.0, -1.0]
+    got = polygonize_tiles(tiles, gt, None, 4).toPandas()
+    want = polygonize_array(arr, gt, None, 4)
+    assert sorted(got["n_pixels"]) == [16, 48]
+    assert _poly_multiset(got["value"], got["geometry"], got["n_pixels"]) \
+        == _poly_multiset(want["value"], want["geometry"], want["n_pixels"])
+
+
+@pytest.mark.parametrize("conn", [4, 8])
+def test_polygonize_outer_edge_only_component(spark, conn):
+    """A component that touches only the raster's outer edge (no tile
+    border) goes through the merge, finds no partner and comes out
+    whole; so does one that crosses a tile border."""
+    arr = np.zeros((8, 8), dtype=np.int32)
+    arr[0, 1:3] = 6              # on tile (0, 0)'s top row only
+    arr[3:5, 3:5] = 7            # spans all four 4-px tiles
+    gt = [0.0, 1.0, 0.0, 8.0, 0.0, -1.0]
+    got = polygonize_tiles(_tiles_of(spark, arr, 4), gt, 0.0,
+                           conn).toPandas()
+    want = polygonize_array(arr, gt, 0.0, conn)
+    assert sorted(got["n_pixels"]) == [2, 4]
+    assert _poly_multiset(got["value"], got["geometry"], got["n_pixels"]) \
+        == _poly_multiset(want["value"], want["geometry"], want["n_pixels"])
 
 
 def _poly_multiset(values, geoms, npix):
-    return sorted((float(v), int(n), round(geom_area(parse_wkb(bytes(g))), 6))
+    """(value, n_pixels, WKB bytes) multiset: byte-identical polygons."""
+    return sorted((float(v), int(n), bytes(g))
                   for v, g, n in zip(values, geoms, npix))
 
 
@@ -374,7 +471,8 @@ def test_distributed_diagonal_touch_at_tile_corner(spark, conn, anti):
         arr[3, 3] = arr[4, 4] = 7
     got, want = _distributed_vs_array(spark, arr, 4, 0.0, conn)
     assert got == want
-    assert got == ([(7.0, 2, 2.0)] if conn == 8
+    areas = sorted((v, n, geom_area(parse_wkb(g))) for v, n, g in got)
+    assert areas == ([(7.0, 2, 2.0)] if conn == 8
                    else [(7.0, 1, 1.0), (7.0, 1, 1.0)])
 
 
@@ -390,9 +488,26 @@ def _random_grid(i):
 
 @pytest.mark.parametrize("i,case", list(enumerate(_RANDOM_CASES)))
 def test_distributed_polygonize_random_grids(spark, i, case):
-    """Seeded random grids with cross-tile components: the distributed
-    (value, n_pixels, area) multiset equals polygonize_array's on the
-    zero-padded canvas."""
+    """Seeded random grids with cross-tile components, under both
+    gates (interior polygons from the tile kernel, edge-touching ones
+    assembled on the driver): the distributed (value, n_pixels, WKB)
+    multiset equals polygonize_array's on the zero-padded canvas."""
+    conn, nodata, ts = case
+    got, want = _distributed_vs_array(spark, _random_grid(i), ts,
+                                      nodata, conn)
+    assert got == want
+
+
+@pytest.mark.parametrize("i,case", list(enumerate(_RANDOM_CASES)))
+def test_distributed_polygonize_over_assembly_cap(spark, monkeypatch, i,
+                                                  case):
+    """The same grids over the driver-assembly gate only: the border
+    runs still pair on the driver, and the edge-touching components
+    go through the mapping join, the label shuffle and the assembly
+    stream — the multisets stay equal."""
+    from gdal_spark.operators import polygonize as pz
+
+    monkeypatch.setattr(pz, "DRIVER_ASSEMBLY_CAP", 1)
     conn, nodata, ts = case
     got, want = _distributed_vs_array(spark, _random_grid(i), ts,
                                       nodata, conn)
@@ -401,11 +516,13 @@ def test_distributed_polygonize_random_grids(spark, i, case):
 
 @pytest.mark.parametrize("i,case", list(enumerate(_RANDOM_CASES)))
 def test_distributed_polygonize_over_cap(spark, monkeypatch, i, case):
-    """The same grids with the border-collect cap at 1 row: the pairs
-    come from the kernel grouped by border line and resolve through
-    duplicate_clusters — the multisets stay equal."""
+    """The same grids over both caps (driver assembly and the border
+    collect at 1 row): the pairs come from the kernel grouped by border
+    line and resolve through duplicate_clusters — the multisets stay
+    equal."""
     from gdal_spark.operators import polygonize as pz
 
+    monkeypatch.setattr(pz, "DRIVER_ASSEMBLY_CAP", 1)
     monkeypatch.setattr(pz, "BORDER_CAP", 1)
     conn, nodata, ts = case
     got, want = _distributed_vs_array(spark, _random_grid(i), ts,

@@ -81,3 +81,24 @@ def test_zonal_nodata_excluded(spark):
                       tile_size=32).toPandas()
     assert got.iloc[0]["count"] == 16 * 32
     assert got.iloc[0]["mean"] == 5.0
+
+
+def test_zonal_stddev_of_constant_zones_is_zero(spark):
+    """A constant zone's E[v^2] - E[v]^2 cancels to a tiny negative
+    (sqrt -> NaN) or positive residue for these value/size pairs; its
+    stddev_pop must be exactly 0."""
+    sizes = (3, 6, 7, 8, 11)
+    zones = pd.DataFrame([
+        {"fid": fid, "geometry": polygon_wkb([np.array(
+            [(0, 2 * fid), (n, 2 * fid), (n, 2 * fid + 1),
+             (0, 2 * fid + 1), (0, 2 * fid)], dtype=float)])}
+        for fid, n in enumerate(sizes)])
+    for value in (0.1, 3.3, 0.7):
+        arr = np.full((32, 32), value)
+        tiles, w, h = tiles_from_array(spark, arr, tile_size=32)
+        grid = GridSpec(0.0, float(h), 1.0, 1.0, w, h)
+        got = (zonal_stats(spark, tiles, zones, grid, tile_size=32)
+               .toPandas().sort_values("zone"))
+        assert got["count"].tolist() == list(sizes)
+        assert (got["min"] == value).all() and (got["max"] == value).all()
+        assert got["stddev_pop"].tolist() == [0.0] * len(sizes), value

@@ -6,10 +6,11 @@ pixel-center lattice with linear interpolation along cell edges.
 
 Distribution: each marching-squares cell spans a 2x2 block of pixel
 centers; a cell is owned by the tile of its top-left pixel, and the
-right/bottom neighbor pixels arrive via the 1-px halo exchange —
-every cell is computed exactly once, and endpoints on tile borders
-agree bit-for-bit across tiles (both sides interpolate the same two
-pixel values), so segment sets are partition-invariant.
+right/bottom neighbor pixels arrive via the 1-px halo exchange
+(operators/halo.py) — every cell is computed exactly once, and
+endpoints on tile borders agree bit-for-bit across tiles (both sides
+interpolate the same two pixel values), so segment sets are
+partition-invariant.
 
 Output rows: (level, x1, y1, x2, y2) in georeferenced coordinates.
 ``stitch_segments`` chains segments into polylines (driver-side /
@@ -26,6 +27,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
+
+from gdal_spark.operators.halo import (
+    assemble_halo_canvas, emit_halos, render_by_tile,
+)
+from gdal_spark.session import kernel_name
 
 SEG_SCHEMA = StructType([
     StructField("level", DoubleType()),
@@ -138,22 +144,17 @@ def contour_tiles(tiles: DataFrame, levels: list[float], gt: list[float],
                   nodata: float | None = None) -> DataFrame:
     """Distributed contour -> segment rows (level, x1, y1, x2, y2) in
     georef coords."""
-    from gdal_spark.operators.proximity import (
-        assemble_halo_canvas, emit_halos_k,
-    )
-
-    halos = emit_halos_k(tiles, 1)
     lv = [float(x) for x in levels]
 
+    @kernel_name("operators.contour.segments")
     def render(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ts = int(pdf["tile_size"].iloc[0])
-        got = assemble_halo_canvas(pdf, ts, 1, fill=np.nan)
-        if got is None:
+        canvas = assemble_halo_canvas(pdf, ts, 1, fill=np.nan)
+        if canvas is None:
             return pd.DataFrame({f.name: [] for f in SEG_SCHEMA.fields})
-        canvas, _meta = got
         if nodata is not None:
             canvas = np.where(canvas == nodata, np.nan, canvas)
-        tx, ty = int(key[0]), int(key[1])
+        tx, ty = int(key[1]), int(key[2])
         # own cells whose top-left pixel is in this tile: pixel rows
         # [0, ts) and cols [0, ts) of the unhaloed tile == canvas
         # offset (1, 1); the right/bottom halo provides the extra
@@ -199,15 +200,7 @@ def contour_tiles(tiles: DataFrame, levels: list[float], gt: list[float],
             rows["y2"].extend(gy2)
         return pd.DataFrame(rows)
 
-    # explicit width: constant-encoded halo rows make the exchange
-    # bytes tiny, and a width-less repartition lets AQE coalesce the
-    # CPU-bound marching render onto ~1 task (CLAUDE.md lesson)
-    par = tiles.sparkSession.sparkContext.defaultParallelism
-    return (
-        halos.repartition(par, "tile_x", "tile_y")
-        .groupBy("tile_x", "tile_y")
-        .applyInPandas(render, SEG_SCHEMA)
-    )
+    return render_by_tile(emit_halos(tiles, 1), render, SEG_SCHEMA)
 
 
 def stitch_segments(segs: np.ndarray, tol: float = 1e-9

@@ -39,11 +39,14 @@ from pyspark.sql.types import (
     IntegerType, StructField, StructType,
 )
 
-from gdal_spark.operators.proximity import assemble_halo_canvas
+from gdal_spark.operators.halo import (
+    assemble_halo_canvas, emit_halos, render_by_tile,
+)
 from gdal_spark.operators.rasterize import GridSpec, rasterize
 from gdal_spark.operators.tiling import (
     TILE_SCHEMA, decode_tile, encode_tile,
 )
+from gdal_spark.session import kernel_name, spread_for_kernel
 
 
 def blend_alpha(mask: np.ndarray, blend_px: float) -> np.ndarray:
@@ -531,10 +534,6 @@ def _cutline_clip_distributed(
     mask = rasterize(spark, cutline_pdf, grid, burn_value=1.0,
                      dtype="uint8", tile_size=tile_size)
 
-    # explicit partitioning: AQE coalesces these small joins to ONE
-    # partition and would serialize every per-tile kernel downstream
-    par = max(spark.sparkContext.defaultParallelism, 8)
-
     # Mask tiles beyond the src lattice are cut FIRST (the world
     # outside the raster/lattice is outside-the-cutline by the
     # zero-pad convention) — classification and halos must both see
@@ -564,35 +563,27 @@ def _cutline_clip_distributed(
     #    canvas group (boundary implies some 3x3 in-lattice neighbor
     #    has mask pixels => at least one strip row targets it)
     #    assembled over a fill-valued center (allow_missing_center).
-    from gdal_spark.operators.proximity import emit_halos_k
     # canvases assemble ONLY for boundary tiles (neighbors contribute
     # strips, never a canvas)
-    halos = emit_halos_k(inlat_mask, k) \
+    halos = emit_halos(inlat_mask, k) \
         .join(b_keys, ["tile_x", "tile_y"], "left_semi")
 
+    @kernel_name("operators.cutline.alpha")
     def render_alpha(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ts = int(pdf["tile_size"].iloc[0])
-        got = assemble_halo_canvas(pdf, ts, k, fill=0.0,
-                                   allow_missing_center=True)
-        if got is None:
-            return pd.DataFrame({f.name: [] for f in TILE_SCHEMA.fields})
-        canvas, meta = got
+        canvas = assemble_halo_canvas(pdf, ts, k, fill=0.0,
+                                      allow_missing_center=True)
         alpha = blend_alpha(canvas >= 0.5, blend_px)[k:-k, k:-k]
         payload, dts = encode_tile(alpha.astype(np.float64), None)
         return pd.DataFrame({
-            "zoom": [meta["zoom"]], "tile_x": [int(key[0])],
-            "tile_y": [int(key[1])], "band": [meta["band"]],
+            "zoom": [int(key[0])], "tile_x": [int(key[1])],
+            "tile_y": [int(key[2])], "band": [int(key[3])],
             "data": [payload], "dtype": [dts], "tile_size": [ts],
         })
 
-    alpha_tiles = (
-        halos.repartition(par, "tile_x", "tile_y")
-        .groupBy("tile_x", "tile_y")
-        .applyInPandas(render_alpha, TILE_SCHEMA)
-        .select("tile_x", "tile_y",
-                F.col("data").alias("a_data"),
-                F.col("dtype").alias("a_dtype"))
-    )
+    alpha_tiles = render_by_tile(halos, render_alpha, TILE_SCHEMA).select(
+        "tile_x", "tile_y", F.col("data").alias("a_data"),
+        F.col("dtype").alias("a_dtype"))
 
     # ONE output kernel for all three classes: src tiles join the
     # class column (small vs the lattice, broadcastable) and the
@@ -600,12 +591,11 @@ def _cutline_clip_distributed(
     # dispatches — boundary blends with its alpha, inside copies to
     # float64 (alpha == 1), outside emits constant nodata without
     # ever decoding the src payload (alpha == 0)
-    blended_in = (
+    blended_in = spread_for_kernel(
         src_tiles
         .join(cls, ["tile_x", "tile_y"], "left")
         .fillna("outside", subset=["cls"])
         .join(alpha_tiles, ["tile_x", "tile_y"], "left")
-        .repartition(par)
     )
 
     def blend(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

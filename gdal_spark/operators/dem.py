@@ -3,16 +3,12 @@ roughness.
 
 The reference implements these as one generic 3x3 processing loop
 (GDALGeneric3x3ProcessingAlg, apps/gdaldem_lib.cpp:206-253) over
-scanlines; this engine renders the same kernels per tile with a
-1-pixel halo exchanged between neighbor tiles:
-
-  1. every tile emits its 8 border strips keyed by the neighbor tile
-     (a narrow shuffle: ~3% of tile bytes, the distributed analog of
-     GDAL's overlapping scanline window);
-  2. per destination tile, strips + center assemble a (ts+2, ts+2)
-     canvas (edge-of-raster cells mirror GDAL's edge handling:
-     missing neighbors are treated as nodata and excluded);
-  3. a vectorized numpy stencil computes the output tile.
+scanlines; this engine renders the same kernels per tile over the
+engine's one halo exchange (operators/halo.py): every tile ships its
+1-pixel border strips to its 8 neighbours, each destination assembles
+a (ts+2, ts+2) canvas (missing neighbours are nodata and excluded,
+GDAL's edge handling), and a vectorized numpy stencil computes the
+output tile.
 
 Formulas (Horn's method, the reference's default):
   dz/dx = ((c + 2f + i) - (a + 2d + g)) / (8 * xres)
@@ -32,83 +28,12 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StringType, StructField, StructType
+
+from gdal_spark.operators.halo import (
+    assemble_halo_canvas, emit_halos, render_by_tile,
 )
-
 from gdal_spark.operators.tiling import TILE_SCHEMA
-
-_HALO_SCHEMA = StructType([
-    StructField("tile_x", LongType()),
-    StructField("tile_y", LongType()),
-    StructField("rel", IntegerType()),      # 0=center, 1..8 neighbors
-    StructField("data", BinaryType()),
-    StructField("dtype", StringType()),
-    StructField("tile_size", IntegerType()),
-    StructField("zoom", IntegerType()),
-    StructField("band", IntegerType()),
-])
-
-# rel codes the DESTINATION tile's offset (dx, dy) from the source;
-# the strip sent is the source edge adjacent to that destination, and
-# it lands on the opposite side of the destination's haloed canvas.
-_REL = {1: (-1, -1), 2: (0, -1), 3: (1, -1), 4: (-1, 0),
-        5: (1, 0), 6: (-1, 1), 7: (0, 1), 8: (1, 1)}
-
-
-def _emit_halos(tiles: DataFrame) -> DataFrame:
-    """Center rows + 8 border strips addressed to neighbor tiles."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {k.name: [] for k in _HALO_SCHEMA.fields}
-
-            def add(tx, ty, rel, data, dt, ts, zoom, band):
-                rows["tile_x"].append(tx)
-                rows["tile_y"].append(ty)
-                rows["rel"].append(rel)
-                rows["data"].append(data)
-                rows["dtype"].append(dt)
-                rows["tile_size"].append(ts)
-                rows["zoom"].append(zoom)
-                rows["band"].append(band)
-
-            for _, r in b.iterrows():
-                ts = int(r["tile_size"])
-                dt = str(r["dtype"])
-                tx, ty = int(r["tile_x"]), int(r["tile_y"])
-                zoom, band = int(r["zoom"]), int(r["band"])
-                from gdal_spark.operators.tiling import decode_tile
-
-                arr = decode_tile(r["data"], dt, ts)
-                flat = arr.reshape(-1)
-                if flat.size and (flat == flat[0]).all():
-                    # all-equal tile ships as one value (decode_tile
-                    # expands the const: form on the other side)
-                    add(tx, ty, 0, flat[:1].tobytes(),
-                        "const:" + str(arr.dtype), ts, zoom, band)
-                else:
-                    # pass the ORIGINAL payload through — a deflate-
-                    # coded tile stays compressed across the exchange
-                    add(tx, ty, 0, r["data"], dt, ts, zoom, band)
-                strips = {
-                    1: arr[:1, :1], 2: arr[:1, :], 3: arr[:1, -1:],
-                    4: arr[:, :1], 5: arr[:, -1:],
-                    6: arr[-1:, :1], 7: arr[-1:, :], 8: arr[-1:, -1:],
-                }
-                for rel, (dx, dy) in _REL.items():
-                    ntx, nty = tx + dx, ty + dy
-                    if ntx < 0 or nty < 0:
-                        continue
-                    # strips are raw slices of the DECODED array, so
-                    # they carry the plain element dtype (the input's
-                    # codec prefix would mislabel them)
-                    add(ntx, nty, rel,
-                        np.ascontiguousarray(strips[rel]).tobytes(),
-                        str(arr.dtype), ts, zoom, band)
-            yield pd.DataFrame(rows)
-
-    return tiles.mapInPandas(kernel, _HALO_SCHEMA)
+from gdal_spark.session import kernel_name
 
 
 def focal_tiles(tiles: DataFrame, op: str, xres: float = 1.0,
@@ -122,72 +47,28 @@ def focal_tiles(tiles: DataFrame, op: str, xres: float = 1.0,
     'horn' (the reference default) or 'zt' (Zevenbergen-Thorne
     central differences, gdaldem --alg ZevenbergenThorne,
     apps/gdaldem_lib.cpp:798)."""
-    halos = _emit_halos(tiles)
 
+    @kernel_name("operators.dem.focal")
     def render(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        center = pdf[pdf["rel"] == 0]
-        if len(center) == 0:
+        ts = int(pdf["tile_size"].iloc[0])
+        canvas = assemble_halo_canvas(pdf, ts, 1, fill=np.nan)
+        if canvas is None:
             return pd.DataFrame(
                 {k.name: [] for k in TILE_SCHEMA.fields})
-        from gdal_spark.operators.tiling import decode_tile
-
-        ts = int(center["tile_size"].iloc[0])
-        dt = np.dtype(str(center["dtype"].iloc[0]).split(":")[-1])
-        fillv = np.nan if nodata is None else float(nodata)
-        canvas = np.full((ts + 2, ts + 2), np.nan)
-        arr = decode_tile(center["data"].iloc[0],
-                          str(center["dtype"].iloc[0]), ts) \
-            .astype(np.float64)
         if nodata is not None:
-            arr = np.where(arr == nodata, np.nan, arr)
-        canvas[1:-1, 1:-1] = arr
-        for _, r in pdf[pdf["rel"] != 0].iterrows():
-            rel = int(r["rel"])
-            strip = np.frombuffer(r["data"], dtype=dt).astype(np.float64)
-            if nodata is not None:
-                strip = np.where(strip == nodata, np.nan, strip)
-            if rel == 1:        # dst up-left of src -> src at canvas SE
-                canvas[-1, -1] = strip[0]
-            elif rel == 2:      # dst above src -> src strip at bottom
-                canvas[-1, 1:-1] = strip
-            elif rel == 3:
-                canvas[-1, 0] = strip[0]
-            elif rel == 4:      # dst left of src -> src col at right
-                canvas[1:-1, -1] = strip
-            elif rel == 5:
-                canvas[1:-1, 0] = strip
-            elif rel == 6:
-                canvas[0, -1] = strip[0]
-            elif rel == 7:      # dst below src -> src strip at top
-                canvas[0, 1:-1] = strip
-            elif rel == 8:
-                canvas[0, 0] = strip[0]
+            canvas[canvas == nodata] = np.nan
         out = focal_kernel(canvas, op, xres, yres, z_factor,
                            azimuth, altitude, alg)
-        if nodata is not None:
-            out = np.where(np.isnan(out), nodata, out)
-        else:
-            out = np.where(np.isnan(out), 0.0, out)
-        _ = fillv
+        out = np.where(np.isnan(out), 0.0 if nodata is None else nodata,
+                       out)
         return pd.DataFrame({
-            "zoom": [int(center["zoom"].iloc[0])],
-            "tile_x": [int(key[0])], "tile_y": [int(key[1])],
-            "band": [int(center["band"].iloc[0])],
+            "zoom": [int(key[0])], "tile_x": [int(key[1])],
+            "tile_y": [int(key[2])], "band": [int(key[3])],
             "data": [out.astype(np.float64).tobytes()],
             "dtype": ["float64"], "tile_size": [ts],
         })
 
-    # hash repartition with an EXPLICIT width: repartitionByRange ran
-    # a sampling job that recomputed the whole upstream (density +
-    # halo emit executed twice per action), and a width-less
-    # repartition would let AQE collapse the CPU-bound render onto
-    # ~1 task once the halo payloads compress (CLAUDE.md lessons)
-    par = tiles.sparkSession.sparkContext.defaultParallelism
-    return (
-        halos.repartition(par, "tile_x", "tile_y")
-        .groupBy("tile_x", "tile_y")
-        .applyInPandas(render, TILE_SCHEMA)
-    )
+    return render_by_tile(emit_halos(tiles, 1), render, TILE_SCHEMA)
 
 
 def focal_kernel(canvas: np.ndarray, op: str, xres: float, yres: float,

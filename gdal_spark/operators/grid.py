@@ -26,8 +26,10 @@ from pyspark.sql.types import (
     BinaryType, DoubleType, LongType, StructField, StructType
 )
 
+from gdal_spark.operators.halo import assemble_halo_canvas, emit_halos
 from gdal_spark.operators.rasterize import GridSpec
 from gdal_spark.operators.tiling import TILE_SCHEMA, encode_tile
+from gdal_spark.session import kernel_name
 
 _CHUNK = 1 << 21
 
@@ -424,7 +426,6 @@ def sample_at_points(
     the point-lookup join of alg/gdal_interpolateatpoint.cpp.
 
     Output: (key_col, sample:double)."""
-    from gdal_spark.operators.dem import _emit_halos
     from gdal_spark.operators.warp import resample_patch
 
     ts = tile_size
@@ -454,7 +455,7 @@ def sample_at_points(
              .select("c.tile_x", "c.tile_y").distinct())
     tiles_needed = tiles.join(cover, ["tile_x", "tile_y"],
                               "left_semi")
-    halos = _emit_halos(tiles_needed).join(
+    halos = emit_halos(tiles_needed, 1).join(
         pkeys, ["tile_x", "tile_y"], "left_semi")
     key_type = points.schema[key_col].dataType
     schema = StructType([
@@ -462,43 +463,18 @@ def sample_at_points(
         StructField("sample", DoubleType()),
     ])
 
+    @kernel_name("operators.grid.sample")
     def kernel(key, pts_pdf: pd.DataFrame, halo_pdf: pd.DataFrame
                ) -> pd.DataFrame:
         if len(pts_pdf) == 0:
             return pd.DataFrame({"k": [], "sample": []})
-        center = halo_pdf[halo_pdf["rel"] == 0] if len(halo_pdf) else \
-            halo_pdf
         tx, ty = int(key[0]), int(key[1])
-        canvas = np.full((ts + 2, ts + 2),
-                         np.nan if nodata is None else nodata)
-        if len(center):
-            from gdal_spark.operators.tiling import decode_tile
-
-            arr = decode_tile(center["data"].iloc[0],
-                              center["dtype"].iloc[0], ts) \
-                .astype(np.float64)
-            canvas[1:-1, 1:-1] = arr
-            for _, r in halo_pdf[halo_pdf["rel"] != 0].iterrows():
-                rel = int(r["rel"])
-                strip = np.frombuffer(
-                    r["data"], dtype=np.dtype(str(r["dtype"]).split(":")[-1])
-                ).astype(np.float64)
-                if rel == 2:
-                    canvas[-1, 1:-1] = strip
-                elif rel == 7:
-                    canvas[0, 1:-1] = strip
-                elif rel == 4:
-                    canvas[1:-1, -1] = strip
-                elif rel == 5:
-                    canvas[1:-1, 0] = strip
-                elif rel == 1:
-                    canvas[-1, -1] = strip[0]
-                elif rel == 3:
-                    canvas[-1, 0] = strip[0]
-                elif rel == 6:
-                    canvas[0, -1] = strip[0]
-                elif rel == 8:
-                    canvas[0, 0] = strip[0]
+        fill = np.nan if nodata is None else nodata
+        # no centre: the whole canvas is fill, strips ignored
+        canvas = assemble_halo_canvas(halo_pdf, ts, 1, fill) \
+            if len(halo_pdf) else None
+        if canvas is None:
+            canvas = np.full((ts + 2, ts + 2), fill)
         lx = pts_pdf["px"].to_numpy() - tx * ts + 1.0
         ly = pts_pdf["py"].to_numpy() - ty * ts + 1.0
         vals = resample_patch(canvas, 0, 0, lx, ly, method, nodata)

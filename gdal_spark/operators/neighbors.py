@@ -20,13 +20,14 @@ frmts/vrt/vrtfilters.cpp ``VRTKernelFilteredSource::FilterData``
 - at the raster boundary the reference REPLICATES edge pixels
   outward (vrtfilters.cpp:338 "we replicate the edge").
 
-Distribution: each tile ships w = size//2 -wide border strips to its
-8 neighbors (the k-wide generalization of dem._emit_halos — a narrow
-shuffle, ~2w/ts of the tile bytes), each destination assembles a
-(ts+2w)^2 canvas, and ONE vectorized sliding_window_view stencil
-renders the tile.  Interior missing tiles (sparse rasters) stay NaN
-and are skipped like nodata; tiles on the declared raster boundary
-replicate their own edge, matching the reference on dense rasters.
+Distribution: the engine's one halo exchange (operators/halo.py)
+ships each tile's w = size//2 -wide border blocks to its 8 neighbours
+(a narrow shuffle, ~2w/ts of the tile bytes), each destination
+assembles a (ts+2w)^2 canvas, and ONE vectorized sliding_window_view
+stencil renders the tile.  Interior missing tiles (sparse rasters)
+stay NaN and are skipped like nodata; tiles on the declared raster
+boundary replicate their own edge, matching the reference on dense
+rasters.
 
 Deviation (declared): ``mode`` ties take the SMALLEST weighted value;
 the reference keeps whichever value reached the top count first in
@@ -36,17 +37,15 @@ traversal.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StringType, StructField,
-    StructType,
-)
 
-from gdal_spark.operators.tiling import TILE_SCHEMA, decode_tile
+from gdal_spark.operators.halo import (
+    assemble_halo_canvas, emit_halos, render_by_tile,
+)
+from gdal_spark.operators.tiling import TILE_SCHEMA
+from gdal_spark.session import kernel_name
 
 # kernel-name table, apps/gdalalg_raster_neighbors.cpp:48-77
 # (classic public convolution kernels; see the reference's own
@@ -67,21 +66,6 @@ _NAMED = {
 }
 
 METHODS = ("mean", "sum", "min", "max", "stddev", "median", "mode")
-
-_HALO_SCHEMA = StructType([
-    StructField("zoom", IntegerType()),
-    StructField("tile_x", LongType()),
-    StructField("tile_y", LongType()),
-    StructField("band", IntegerType()),
-    StructField("rel", IntegerType()),      # 0=center, 1..8 neighbor
-    StructField("data", BinaryType()),
-    StructField("dtype", StringType()),
-    StructField("tile_size", IntegerType()),
-])
-
-# rel -> destination offset (dx, dy) from the source tile
-_REL = {1: (-1, -1), 2: (0, -1), 3: (1, -1), 4: (-1, 0),
-        5: (1, 0), 6: (-1, 1), 7: (0, 1), 8: (1, 1)}
 
 
 def resolve_kernel(kernel, method: str | None, size: int
@@ -144,51 +128,6 @@ def resolve_kernel(kernel, method: str | None, size: int
     elif name in ("u", "v"):
         arr = arr * 0.5                 # weightIfNotNormalized=0.5
     return k, arr, method
-
-
-def _emit_halos_k(tiles: DataFrame, w: int) -> DataFrame:
-    """Center rows + 8 border strips of width ``w`` addressed to
-    neighbor tiles (generalizes dem._emit_halos beyond w=1)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {f.name: [] for f in _HALO_SCHEMA.fields}
-
-            def add(zoom, tx, ty, band, rel, data, dt, ts):
-                rows["zoom"].append(zoom)
-                rows["tile_x"].append(tx)
-                rows["tile_y"].append(ty)
-                rows["band"].append(band)
-                rows["rel"].append(rel)
-                rows["data"].append(data)
-                rows["dtype"].append(dt)
-                rows["tile_size"].append(ts)
-
-            for _, r in b.iterrows():
-                ts = int(r["tile_size"])
-                if w > ts:
-                    raise ValueError(
-                        f"halo width {w} exceeds tile size {ts}")
-                arr = decode_tile(r["data"], str(r["dtype"]), ts)
-                tx, ty = int(r["tile_x"]), int(r["tile_y"])
-                zoom, band = int(r["zoom"]), int(r["band"])
-                dt = str(arr.dtype)
-                add(zoom, tx, ty, band, 0, arr.tobytes(), dt, ts)
-                strips = {
-                    1: arr[:w, :w], 2: arr[:w, :], 3: arr[:w, -w:],
-                    4: arr[:, :w], 5: arr[:, -w:],
-                    6: arr[-w:, :w], 7: arr[-w:, :], 8: arr[-w:, -w:],
-                }
-                for rel, (dx, dy) in _REL.items():
-                    ntx, nty = tx + dx, ty + dy
-                    if ntx < 0 or nty < 0:
-                        continue
-                    add(zoom, ntx, nty, band, rel,
-                        np.ascontiguousarray(strips[rel]).tobytes(),
-                        dt, ts)
-            yield pd.DataFrame(rows)
-
-    return tiles.mapInPandas(kernel, _HALO_SCHEMA)
 
 
 def _focal(vals: np.ndarray, valid: np.ndarray, coef: np.ndarray,
@@ -282,52 +221,18 @@ def neighbors_tiles(tiles: DataFrame, kernel="equal",
     x0, y0, x1, y1 = extent_tiles
     coef_flat = coefs.reshape(-1)
 
-    if w == 0:
-        halos = tiles.select(
-            "zoom", "tile_x", "tile_y", "band",
-            F.lit(0).alias("rel"), "data", "dtype", "tile_size")
-    else:
-        halos = _emit_halos_k(tiles, w)
-
+    @kernel_name("operators.neighbors.focal")
     def render(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        center = pdf[pdf["rel"] == 0]
-        if len(center) == 0:        # halo addressed to a hole
+        ts = int(pdf["tile_size"].iloc[0])
+        canvas = assemble_halo_canvas(pdf, ts, w, fill=np.nan)
+        if canvas is None:          # halo addressed to a hole
             return pd.DataFrame({f.name: [] for f in TILE_SCHEMA.fields})
-        ts = int(center["tile_size"].iloc[0])
-        dt = np.dtype(str(center["dtype"].iloc[0]))
-        arr = np.frombuffer(center["data"].iloc[0], dtype=dt) \
-            .reshape(ts, ts).astype(np.float64)
         if nodata is not None:
-            arr = np.where(arr == nodata, np.nan, arr)
-        canvas = np.full((ts + 2 * w, ts + 2 * w), np.nan)
-        if w:
-            canvas[w:-w, w:-w] = arr
-        else:
-            canvas[:, :] = arr
-        c = ts + 2 * w
-        place = {          # rel -> canvas slab (opposite side)
-            1: (slice(c - w, c), slice(c - w, c)),
-            2: (slice(c - w, c), slice(w, c - w)),
-            3: (slice(c - w, c), slice(0, w)),
-            4: (slice(w, c - w), slice(c - w, c)),
-            5: (slice(w, c - w), slice(0, w)),
-            6: (slice(0, w), slice(c - w, c)),
-            7: (slice(0, w), slice(w, c - w)),
-            8: (slice(0, w), slice(0, w)),
-        }
-        for _, r in pdf[pdf["rel"] != 0].iterrows():
-            rel = int(r["rel"])
-            ys, xs = place[rel]
-            shape = (ys.stop - ys.start, xs.stop - xs.start)
-            strip = np.frombuffer(r["data"], dtype=dt) \
-                .reshape(shape).astype(np.float64)
-            if nodata is not None:
-                strip = np.where(strip == nodata, np.nan, strip)
-            canvas[ys, xs] = strip
+            canvas[canvas == nodata] = np.nan
+        arr = canvas[w:w + ts, w:w + ts]
         # edge replication at the declared raster boundary
         # (vrtfilters.cpp:338; left/right first, then whole rows)
-        zoom = int(center["zoom"].iloc[0])
-        tx, ty = int(key[1]), int(key[2])
+        zoom, tx, ty = int(key[0]), int(key[1]), int(key[2])
         if w:
             if tx == x0:
                 canvas[:, :w] = canvas[:, w:w + 1]
@@ -355,6 +260,4 @@ def neighbors_tiles(tiles: DataFrame, kernel="equal",
             "dtype": ["float64"], "tile_size": [ts],
         })
 
-    return (halos
-            .groupBy("zoom", "tile_x", "tile_y", "band")
-            .applyInPandas(render, TILE_SCHEMA))
+    return render_by_tile(emit_halos(tiles, w), render, TILE_SCHEMA)

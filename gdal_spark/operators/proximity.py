@@ -17,173 +17,22 @@
   global labels -> sizes -> neighbor graph -> driver-side merge loop
   -> broadcast remap -> rewrite tiles.
 
-The k-pixel halo exchange generalizes the DEM 1-px strips: every
-tile ships its k-wide border blocks to the 8 neighbors.
+proximity and fillnodata run on the engine's one halo exchange
+(operators/halo.py): every tile ships its k-wide border blocks to its
+8 neighbours, and each tile's kernel runs on the assembled canvas.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StringType, StructField, StructType
+
+from gdal_spark.operators.halo import (
+    assemble_halo_canvas, emit_halos, render_by_tile,
 )
-
-from gdal_spark.operators.tiling import TILE_SCHEMA, decode_tile, encode_tile
-
-_HALO_SCHEMA = StructType([
-    StructField("tile_x", LongType()),
-    StructField("tile_y", LongType()),
-    StructField("rel", IntegerType()),
-    StructField("data", BinaryType()),
-    StructField("dtype", StringType()),
-    StructField("tile_size", IntegerType()),
-    StructField("zoom", IntegerType()),
-    StructField("band", IntegerType()),
-    StructField("h", IntegerType()),
-    StructField("w", IntegerType()),
-])
-
-_REL = {1: (-1, -1), 2: (0, -1), 3: (1, -1), 4: (-1, 0),
-        5: (1, 0), 6: (-1, 1), 7: (0, 1), 8: (1, 1)}
-
-
-def emit_halos_k(tiles: DataFrame, k: int) -> DataFrame:
-    """Center rows + 8 k-wide border blocks addressed to neighbors.
-
-    CONSTANT blocks (every element equal — the dominant case for
-    sparse density rasters and cutline masks, where most tiles are
-    all-zero) ship as ONE value with ``h = -1``: the assembler knows
-    every placement region's shape from (rel, ts, k), so a 512 KB
-    zero tile crosses the exchange as 8 bytes.  Values are identical
-    by construction — the canvas region is filled with the same
-    constant the full block would have written."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {f.name: [] for f in _HALO_SCHEMA.fields}
-
-            def add(tx, ty, rel, arr, ts, zoom, band):
-                rows["tile_x"].append(tx)
-                rows["tile_y"].append(ty)
-                rows["rel"].append(rel)
-                flat = arr.reshape(-1)
-                if flat.size and (flat == flat[0]).all():
-                    rows["data"].append(flat[:1].tobytes())
-                    rows["h"].append(-1)
-                    rows["w"].append(arr.shape[1])
-                else:
-                    rows["data"].append(
-                        np.ascontiguousarray(arr).tobytes())
-                    rows["h"].append(arr.shape[0])
-                    rows["w"].append(arr.shape[1])
-                rows["dtype"].append(str(arr.dtype))
-                rows["tile_size"].append(ts)
-                rows["zoom"].append(zoom)
-                rows["band"].append(band)
-
-            for _, r in b.iterrows():
-                ts = int(r["tile_size"])
-                tx, ty = int(r["tile_x"]), int(r["tile_y"])
-                arr = decode_tile(r["data"], r["dtype"], ts)
-                flat0 = arr.reshape(-1)
-                if flat0.size and (flat0 == flat0[0]).all():
-                    # add()'s constant branch emits the h=-1 form
-                    add(tx, ty, 0, arr[:1, :1], ts,
-                        int(r["zoom"]), int(r["band"]))
-                else:
-                    # center PASSES THROUGH the original payload —
-                    # a deflate-coded sparse tile stays compressed
-                    # across the exchange instead of shipping ts*ts
-                    # raw bytes (the assembler decodes via the same
-                    # codec-aware dtype string)
-                    rows["tile_x"].append(tx)
-                    rows["tile_y"].append(ty)
-                    rows["rel"].append(0)
-                    rows["data"].append(r["data"])
-                    rows["dtype"].append(r["dtype"])
-                    rows["tile_size"].append(ts)
-                    rows["zoom"].append(int(r["zoom"]))
-                    rows["band"].append(int(r["band"]))
-                    rows["h"].append(ts)
-                    rows["w"].append(ts)
-                blocks = {
-                    1: arr[:k, :k], 2: arr[:k, :], 3: arr[:k, -k:],
-                    4: arr[:, :k], 5: arr[:, -k:],
-                    6: arr[-k:, :k], 7: arr[-k:, :], 8: arr[-k:, -k:],
-                }
-                for rel, (dx, dy) in _REL.items():
-                    ntx, nty = tx + dx, ty + dy
-                    if ntx < 0 or nty < 0:
-                        continue
-                    add(ntx, nty, rel, blocks[rel], ts,
-                        int(r["zoom"]), int(r["band"]))
-            yield pd.DataFrame(rows)
-
-    return tiles.mapInPandas(kernel, _HALO_SCHEMA)
-
-
-def assemble_halo_canvas(pdf: pd.DataFrame, ts: int, k: int,
-                         fill: float,
-                         allow_missing_center: bool = False
-                         ) -> tuple[np.ndarray, dict] | None:
-    """Place center + k-halo blocks into a (ts+2k, ts+2k) canvas.
-
-    With ``allow_missing_center`` a group holding only neighbor
-    strips assembles over a fill-valued center (the cutline path
-    synthesizes all-outside centers this way instead of shipping
-    zero tiles through the exchange)."""
-    center = pdf[pdf["rel"] == 0]
-    if len(center) == 0 and not allow_missing_center:
-        return None
-    canvas = np.full((ts + 2 * k, ts + 2 * k), fill, dtype=np.float64)
-    c0 = center.iloc[0] if len(center) else pdf.iloc[0]
-    if len(center):
-        if int(c0["h"]) == -1:     # constant-block encoding
-            canvas[k:-k, k:-k] = np.frombuffer(
-                c0["data"], dtype=np.dtype(c0["dtype"]))[0]
-        else:
-            # center rows carry the tile's ORIGINAL payload (codec-
-            # aware dtype string, possibly compressed) — decode_tile
-            # handles raw and coded forms alike
-            canvas[k:-k, k:-k] = decode_tile(
-                c0["data"], c0["dtype"], ts)
-    # the k-strip placement regions have fixed shapes per rel
-    _shapes = {1: (k, k), 2: (k, ts), 3: (k, k), 4: (ts, k),
-               5: (ts, k), 6: (k, k), 7: (k, ts), 8: (k, k)}
-    # placement: block from a source at offset -(dx,dy) of this tile
-    for _, r in pdf[pdf["rel"] != 0].iterrows():
-        rel = int(r["rel"])
-        if int(r["h"]) == -1:      # constant-block encoding
-            val = np.frombuffer(r["data"],
-                                dtype=np.dtype(r["dtype"]))[0]
-            blk = np.broadcast_to(val, _shapes[rel])
-        else:
-            h, w = int(r["h"]), int(r["w"])
-            blk = np.frombuffer(r["data"],
-                                dtype=np.dtype(r["dtype"])) \
-                .reshape(h, w)
-        if rel == 2:            # dst above src -> src top block at bottom
-            canvas[-k:, k:-k] = blk
-        elif rel == 7:
-            canvas[:k, k:-k] = blk
-        elif rel == 4:
-            canvas[k:-k, -k:] = blk
-        elif rel == 5:
-            canvas[k:-k, :k] = blk
-        elif rel == 1:
-            canvas[-k:, -k:] = blk
-        elif rel == 3:
-            canvas[-k:, :k] = blk
-        elif rel == 6:
-            canvas[:k, -k:] = blk
-        elif rel == 8:
-            canvas[:k, :k] = blk
-    meta = {"zoom": int(c0["zoom"]), "band": int(c0["band"])}
-    return canvas, meta
+from gdal_spark.operators.tiling import TILE_SCHEMA, encode_tile
+from gdal_spark.session import kernel_name
 
 
 # --- exact Euclidean distance transform (separable lower envelope) ---
@@ -245,35 +94,26 @@ def proximity_tiles(tiles: DataFrame, target_values: list[float],
     to ``max_dist``; beyond it, ``nodata``
     (alg/gdalproximity.cpp MAXDIST semantics)."""
     k = int(np.ceil(max_dist))
-    halos = emit_halos_k(tiles, k)
     targets = set(float(v) for v in target_values)
 
+    @kernel_name("operators.proximity.distance")
     def render(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ts = int(pdf["tile_size"].iloc[0])
-        got = assemble_halo_canvas(pdf, ts, k, fill=np.nan)
-        if got is None:
+        canvas = assemble_halo_canvas(pdf, ts, k, fill=np.nan)
+        if canvas is None:
             return pd.DataFrame({f.name: [] for f in TILE_SCHEMA.fields})
-        canvas, meta = got
         mask = np.isin(canvas, list(targets))
         d2, _, _ = edt_squared(mask)
-        dist = np.sqrt(d2)[k:-k, k:-k]
+        dist = np.sqrt(d2)[k:k + ts, k:k + ts]
         out = np.where(dist <= max_dist, dist, nodata)
         payload, dts = encode_tile(out.astype(np.float64), None)
         return pd.DataFrame({
-            "zoom": [meta["zoom"]], "tile_x": [int(key[0])],
-            "tile_y": [int(key[1])], "band": [meta["band"]],
+            "zoom": [int(key[0])], "tile_x": [int(key[1])],
+            "tile_y": [int(key[2])], "band": [int(key[3])],
             "data": [payload], "dtype": [dts], "tile_size": [ts],
         })
 
-    # explicit width: constant-encoded halo rows shrink the exchange
-    # bytes, and a width-less repartition lets AQE coalesce the
-    # CPU-bound render onto ~1 task (CLAUDE.md lesson)
-    par = tiles.sparkSession.sparkContext.defaultParallelism
-    return (
-        halos.repartition(par, "tile_x", "tile_y")
-        .groupBy("tile_x", "tile_y")
-        .applyInPandas(render, TILE_SCHEMA)
-    )
+    return render_by_tile(emit_halos(tiles, k), render, TILE_SCHEMA)
 
 
 def fill_quad_idw(canvas: np.ndarray, valid: np.ndarray,
@@ -398,14 +238,13 @@ def fillnodata_tiles(tiles: DataFrame, nodata: float,
     distributed result equals the single-array kernel."""
     si = max(0, int(smoothing_iterations))
     k = int(np.ceil(max_dist)) + si
-    halos = emit_halos_k(tiles, k)
 
+    @kernel_name("operators.proximity.fill")
     def render(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ts = int(pdf["tile_size"].iloc[0])
-        got = assemble_halo_canvas(pdf, ts, k, fill=nodata)
-        if got is None:
+        canvas = assemble_halo_canvas(pdf, ts, k, fill=nodata)
+        if canvas is None:
             return pd.DataFrame({f.name: [] for f in TILE_SCHEMA.fields})
-        canvas, meta = got
         valid = canvas != nodata
         if method == "edt_nearest":
             d2, sy, sx = edt_squared(valid)
@@ -420,28 +259,20 @@ def fillnodata_tiles(tiles: DataFrame, nodata: float,
             # nodata going in but the fill writes into them; reset so
             # the smoothing means see exactly what the single-array
             # kernel sees at grid borders
-            got_nan = assemble_halo_canvas(pdf, ts, k, fill=np.nan)
-            provided = ~np.isnan(got_nan[0])
+            provided = ~np.isnan(
+                assemble_halo_canvas(pdf, ts, k, fill=np.nan))
             filled = filled.copy()
             filled[~provided] = nodata
             filled = smooth_filled(filled, valid, nodata, si)
-        out = filled[k:-k, k:-k]
+        out = filled[k:k + ts, k:k + ts]
         payload, dts = encode_tile(out.astype(np.float64), None)
         return pd.DataFrame({
-            "zoom": [meta["zoom"]], "tile_x": [int(key[0])],
-            "tile_y": [int(key[1])], "band": [meta["band"]],
+            "zoom": [int(key[0])], "tile_x": [int(key[1])],
+            "tile_y": [int(key[2])], "band": [int(key[3])],
             "data": [payload], "dtype": [dts], "tile_size": [ts],
         })
 
-    # explicit width: constant-encoded halo rows shrink the exchange
-    # bytes, and a width-less repartition lets AQE coalesce the
-    # CPU-bound render onto ~1 task (CLAUDE.md lesson)
-    par = tiles.sparkSession.sparkContext.defaultParallelism
-    return (
-        halos.repartition(par, "tile_x", "tile_y")
-        .groupBy("tile_x", "tile_y")
-        .applyInPandas(render, TILE_SCHEMA)
-    )
+    return render_by_tile(emit_halos(tiles, k), render, TILE_SCHEMA)
 
 
 def sieve_tiles(tiles: DataFrame, threshold: int,

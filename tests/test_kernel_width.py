@@ -126,3 +126,50 @@ def test_parts_writer_keeps_explicit_width(spark, tmp_path, writer, ext,
     writer(df, out)
     files = [f for f in os.listdir(out) if f.endswith(ext)]
     assert len(files) == width
+
+
+def _stage_tasks(spark, jobs):
+    st = spark.sparkContext.statusTracker()
+    return [st.getStageInfo(s).numTasks
+            for j in jobs for s in st.getJobInfo(j).stageIds
+            if st.getStageInfo(s) is not None]
+
+
+def _one_partition_raster(spark, ts=16):
+    from gdal_spark.operators.warp import tiles_from_array
+
+    arr = np.random.RandomState(5).randint(0, 9, (3 * ts, 3 * ts)) \
+        .astype(np.float64)
+    tiles, _w, _h = tiles_from_array(spark, arr, tile_size=ts)
+    return tiles.coalesce(1)
+
+
+def test_neighbors_renders_at_default_parallelism(spark):
+    """A one-partition 9-tile frame: the halo render runs exactly
+    defaultParallelism tasks (a width-less groupBy let AQE coalesce
+    it to one)."""
+    from gdal_spark.operators.neighbors import neighbors_tiles
+
+    tiles = _one_partition_raster(spark)
+    jobs = _jobs_run(spark, lambda: neighbors_tiles(
+        tiles, "equal", size=3, extent_tiles=(0, 0, 2, 2)).collect())
+    tasks = _stage_tasks(spark, jobs)
+    assert max(tasks) == spark.sparkContext.defaultParallelism, tasks
+
+
+def test_cutline_renders_at_default_parallelism(spark):
+    """The distributed cutline's alpha render and blend run at
+    defaultParallelism, not max(defaultParallelism, 8)."""
+    from gdal_spark.operators.cutline import cutline_clip
+    from gdal_spark.operators.rasterize import GridSpec
+
+    tiles = _one_partition_raster(spark)
+    grid = GridSpec(0.0, 48.0, 1.0, 1.0, 48, 48)
+    ring = np.array([(5.5, 5.5), (40.5, 9.5), (37.5, 41.5), (8.5, 30.5),
+                     (5.5, 5.5)])
+    cut = pd.DataFrame({"fid": [1], "geometry": [polygon_wkb([ring])]})
+    jobs = _jobs_run(spark, lambda: cutline_clip(
+        spark, tiles, cut, grid, blend_px=3.0, tile_size=16,
+        method="distributed").collect())
+    tasks = _stage_tasks(spark, jobs)
+    assert max(tasks) == spark.sparkContext.defaultParallelism, tasks

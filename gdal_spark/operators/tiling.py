@@ -16,7 +16,10 @@ Spark dataflow:
   pixel per input partition.  ONE hash exchange on the bucket id then
   merges each tile's entries per partition in numpy, for all levels
   at once; the reference builds overviews level by level
-  (gdalalg_raster_tile.cpp:1552-1596);
+  (gdalalg_raster_tile.cpp:1552-1596).  A single-zoom density
+  (``page_density_tiles``, the streaming state) is the one-level
+  pyramid, and ``_merge_sparse`` re-merges stored sparse rows through
+  the same exchange and merge kernel;
 * the sinks (``tile_blob_frame``, ``write_tiles``) hash-partition on
   (z, x, y) at defaultParallelism and sort within each partition, so
   a tile's bands arrive adjacent; no range partitioning, no sampling
@@ -38,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from gdal_spark.functions import geo
+from gdal_spark.session import kernel_name
 
 TILE_SCHEMA = StructType([
     StructField("zoom", IntegerType()),
@@ -123,10 +127,12 @@ def _merge_packed(packed: DataFrame, nparts: int,
                   dense: tuple | None = None) -> DataFrame:
     """Packed partials -> merged tiles: ONE hash exchange on the
     bucket id, then a per-partition numpy reduce.  The kernel buffers
-    its partition's sparse entries (the same asymptotic bound as the
-    sorted-merge carry — entries / nparts; callers size nparts for
-    the scale via num_partitions)."""
+    its partition's sparse entries, entries / nparts of them; nparts
+    is defaultParallelism, the one width of the density path.  Output
+    is sparse (_PARTIAL_SCHEMA) unless ``dense=(tile_size, codec)``
+    renders TILE_SCHEMA rows inside the same kernel."""
 
+    @kernel_name("operators.tiling.merge")
     def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         hdrs, idxs, cnts = [], [], []
         for b in batches:
@@ -177,6 +183,32 @@ def _merge_packed(packed: DataFrame, nparts: int,
     shuffled = packed.repartition(nparts, "bucket")
     schema = TILE_SCHEMA if dense is not None else _PARTIAL_SCHEMA
     return shuffled.mapInPandas(merge, schema)
+
+
+def _merge_sparse(partials: DataFrame) -> DataFrame:
+    """Merge sparse (zoom, tile_x, tile_y, idx, cnt) rows that may
+    repeat a tile, e.g. a stored density state unioned with a new
+    batch's partials: pack them per bucket map-side, then run the
+    pyramid's own exchange and merge kernel (_merge_packed)."""
+    nparts = partials.sparkSession.sparkContext.defaultParallelism
+    n_buckets = nparts * _BUCKETS_PER_PART
+
+    @kernel_name("operators.tiling.pack")
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            if len(b) == 0:
+                continue
+            idx = [np.frombuffer(v, np.int32) for v in b["idx"]]
+            cnt = [np.frombuffer(v, np.int64) for v in b["cnt"]]
+            yield _pack_frame(
+                b["zoom"].to_numpy(np.int64),
+                b["tile_x"].to_numpy(np.int64),
+                b["tile_y"].to_numpy(np.int64),
+                np.fromiter(map(len, idx), np.int64, len(idx)),
+                np.concatenate(idx), np.concatenate(cnt), n_buckets)
+
+    return _merge_packed(partials.mapInPandas(pack, _PACKED_SCHEMA),
+                         nparts)
 
 
 def decode_tile(data: bytes, dtype: str, tile_size: int) -> np.ndarray:
@@ -345,98 +377,6 @@ def tiles_to_arrays(pdf: pd.DataFrame) -> dict:
     return out
 
 
-def page_density_tiles(
-    points: DataFrame, zoom: int, tile_size: int = 256,
-    lon: str = "lon", lat: str = "lat",
-    num_partitions: int | None = None,
-    codec: str | None = None,
-) -> DataFrame:
-    """Base-zoom page-density raster: count of points per pixel.
-    The dense render fuses into the merge kernel (one Python stage
-    fewer than densify(sparse_density(...)))."""
-    return sparse_density(points, zoom, tile_size, lon, lat,
-                          num_partitions, _dense=(tile_size, codec))
-
-
-def sparse_density(
-    points: DataFrame, zoom: int, tile_size: int = 256,
-    lon: str = "lon", lat: str = "lat",
-    num_partitions: int | None = None,
-    _dense: tuple | None = None,
-) -> DataFrame:
-    """Sparse per-tile histogram: (tile_x, tile_y, idx, cnt) with one
-    row per occupied tile.
-
-    ``num_partitions`` sizes the tile shuffle explicitly: the sparse
-    rows are tiny but downstream densification inflates ~1000x, so
-    AQE's byte-based coalescing would collapse the exchange to one
-    task.  An explicit count keeps the render stage wide (and at 100TB
-    a caller sizes it to tiles/executor)."""
-    n = 1 << zoom
-    # global pixel coordinates at this zoom (pixel res = span/tile_size)
-    res = geo.tile_span(zoom) / tile_size
-    px = F.floor(
-        (geo.merc_x(lon) + F.lit(geo.ORIGIN)) / F.lit(res) + F.lit(1e-3)
-    )
-    py = F.floor(
-        (F.lit(geo.ORIGIN) - geo.merc_y(lat)) / F.lit(res) + F.lit(1e-3)
-    )
-    maxpx = n * tile_size - 1
-    px = F.least(F.greatest(px, F.lit(0)), F.lit(maxpx))
-    py = F.least(F.greatest(py, F.lit(0)), F.lit(maxpx))
-    pix_bits = 2 * int(np.log2(tile_size))
-    staged = points.select(
-        (
-            ((px / tile_size).cast("long") * F.lit(n)
-             + (py / tile_size).cast("long")) * F.lit(1 << pix_bits)
-            + ((py % tile_size) * tile_size + (px % tile_size)).cast("long")
-        ).alias("key")
-    )
-
-    nparts = num_partitions or (
-        points.sparkSession.sparkContext.defaultParallelism
-    )
-    n_buckets = nparts * _BUCKETS_PER_PART
-
-    # ---- phase 1: map-side combine (per-partition sparse partials).
-    # One np.unique per partition replaces per-point shuffle rows: a
-    # hot tile leaves each partition as ONE (idx, cnt) sparse run, so
-    # the shuffle is bounded by n_partitions x occupied_tiles — and
-    # the runs PACK into one row per destination bucket (r7), so the
-    # exchange moves thousands of rows, not one per tile.
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks: list[np.ndarray] = []
-        counts: list[np.ndarray] = []
-        for b in batches:
-            if len(b) == 0:
-                continue
-            k, c = np.unique(b["key"].to_numpy(), return_counts=True)
-            chunks.append(k)
-            counts.append(c)
-        if not chunks:
-            return
-        allk = np.concatenate(chunks)
-        allc = np.concatenate(counts)
-        order = np.argsort(allk, kind="stable")
-        allk, allc = allk[order], allc[order]
-        uk, starts = np.unique(allk, return_index=True)
-        csum = np.add.reduceat(allc, starts)
-        tile = uk >> pix_bits
-        pix = (uk & ((1 << pix_bits) - 1)).astype(np.int32)
-        tstarts = np.flatnonzero(np.r_[True, tile[1:] != tile[:-1]])
-        tends = np.r_[tstarts[1:], len(tile)]
-        utile = tile[tstarts]
-        yield _pack_frame(
-            np.full(len(utile), zoom, dtype=np.int64),
-            (utile // n).astype(np.int64),
-            (utile % n).astype(np.int64),
-            (tends - tstarts).astype(np.int64),
-            pix, csum.astype(np.int64), n_buckets)
-
-    packed = staged.mapInPandas(partial, _PACKED_SCHEMA)
-    return _merge_packed(packed, nparts, dense=_dense)
-
-
 def _dense_pdf(b: pd.DataFrame, tile_size: int,
                codec: str | None) -> Iterator[pd.DataFrame]:
     """Sparse (idx, cnt) rows -> dense TILE_SCHEMA frames (shared by
@@ -481,157 +421,6 @@ def _dense_pdf(b: pd.DataFrame, tile_size: int,
         })
 
 
-def _merge_sparse(partials: DataFrame, nparts: int,
-                  dense: tuple | None = None) -> DataFrame:
-    """Stream-merge sparse partials per tile (range partition + sort
-    clusters each tile; the mapInPandas iterator merges across
-    Arrow-batch boundaries within a partition, avoiding per-group
-    pandas overhead on tens of thousands of tiles).  Output stays
-    SPARSE: one (idx, cnt) row per tile — unless ``dense=(tile_size,
-    codec)``, which densifies INSIDE the same kernel: every distinct
-    pandas-UDF stage costs ~0.3-0.5 s fixed on this box (CLAUDE.md
-    stage-count lesson), so the render fuses into the merge instead
-    of crossing Arrow again."""
-
-    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # vectorized per batch: decode every partial, combine into one
-        # (tile, pix) key array, unique-reduce, re-slice per tile.  A
-        # tile split across batch boundaries is carried forward.
-        carry: pd.DataFrame | None = None
-
-        def reduce_frame(b: pd.DataFrame) -> pd.DataFrame:
-            idx_list = [np.frombuffer(v, dtype=np.int32)
-                        for v in b["idx"]]
-            cnt_list = [np.frombuffer(v, dtype=np.int64)
-                        for v in b["cnt"]]
-            lens = np.fromiter((len(a) for a in idx_list), dtype=np.int64,
-                               count=len(idx_list))
-            tile_key = ((b["zoom"].to_numpy(np.int64) << 58)
-                        + (b["tile_x"].to_numpy(np.int64) << 29)
-                        + b["tile_y"].to_numpy(np.int64))
-            # per-batch tile ordinals keep the combined key in int64
-            # for any zoom (rows arrive tile-sorted, so ordinal order
-            # == tile order)
-            uniq_tiles, tile_ord = np.unique(tile_key,
-                                             return_inverse=True)
-            tiles_rep = np.repeat(tile_ord.astype(np.int64), lens)
-            alli = (np.concatenate(idx_list) if idx_list
-                    else np.zeros(0, np.int32))
-            allc = (np.concatenate(cnt_list) if cnt_list
-                    else np.zeros(0, np.int64))
-            key = tiles_rep * (1 << 18) + alli
-            order = np.argsort(key, kind="stable")
-            ks = key[order]
-            starts = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
-            uk = ks[starts]
-            csum = np.add.reduceat(allc[order], starts) if len(ks) else \
-                np.zeros(0, np.int64)
-            tile = uniq_tiles[(uk >> 18)]
-            pix = (uk & ((1 << 18) - 1)).astype(np.int32)
-            tstarts = np.flatnonzero(np.r_[True, tile[1:] != tile[:-1]])
-            tends = np.r_[tstarts[1:], len(tile)]
-            rows = {"zoom": [], "tile_x": [], "tile_y": [], "idx": [],
-                    "cnt": []}
-            csum64 = csum.astype(np.int64)
-            for s, e in zip(tstarts, tends):
-                t = int(tile[s])
-                rows["zoom"].append(t >> 58)
-                rows["tile_x"].append((t >> 29) & ((1 << 29) - 1))
-                rows["tile_y"].append(t & ((1 << 29) - 1))
-                rows["idx"].append(pix[s:e].tobytes())
-                rows["cnt"].append(csum64[s:e].tobytes())
-            return pd.DataFrame(rows)
-
-        for b in batches:
-            if carry is not None:
-                b = pd.concat([carry, b], ignore_index=True)
-                carry = None
-            reduced = reduce_frame(b)
-            if len(reduced) > 1:
-                carry = reduced.iloc[-1:]
-                yield reduced.iloc[:-1]
-            else:
-                carry = reduced if len(reduced) else None
-        if carry is not None and len(carry):
-            yield carry
-
-    def merge_dense(batches: Iterator[pd.DataFrame]
-                    ) -> Iterator[pd.DataFrame]:
-        ts, codec = dense
-        for sparse_pdf in merge(batches):
-            yield from _dense_pdf(sparse_pdf, ts, codec)
-
-    # hash repartition, not range: RangePartitioner runs a sampling
-    # job that recomputes the (expensive) partial stage twice; the
-    # merge only needs same-tile co-location + in-partition order.
-    # Sinks that want globally tile-ordered output (write_tiles) sort
-    # at write time.
-    shuffled = (
-        partials.repartition(nparts, "zoom", "tile_x", "tile_y")
-        .sortWithinPartitions("zoom", "tile_x", "tile_y")
-    )
-    if dense is not None:
-        return shuffled.mapInPandas(merge_dense, TILE_SCHEMA)
-    return shuffled.mapInPandas(merge, _PARTIAL_SCHEMA)
-
-
-def sparse_overview(sparse: DataFrame, tile_size: int = 256,
-                    num_partitions: int | None = None) -> DataFrame:
-    """One pyramid level on the SPARSE representation: parent pixel =
-    child global pixel >> 1 (sum reduce).  Shuffles only the sparse
-    entries — O(occupied pixels), never O(tiles x tile bytes)."""
-
-    def transform(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                continue
-            idx_list = [np.frombuffer(v, dtype=np.int32)
-                        for v in b["idx"]]
-            cnt_list = [np.frombuffer(v, dtype=np.int64)
-                        for v in b["cnt"]]
-            lens = np.fromiter((len(a) for a in idx_list),
-                               dtype=np.int64, count=len(b))
-            txs = b["tile_x"].to_numpy(np.int64)
-            tys = b["tile_y"].to_numpy(np.int64)
-            zms = b["zoom"].to_numpy(np.int64)
-            idx = np.concatenate(idx_list).astype(np.int64)
-            cnt = np.concatenate(cnt_list)
-            px = idx % tile_size + np.repeat(txs % 2, lens) * tile_size
-            py = idx // tile_size + np.repeat(tys % 2, lens) * tile_size
-            pidx = (py >> 1) * tile_size + (px >> 1)
-            ptile = (np.repeat(zms - 1, lens) << 58) \
-                + (np.repeat(txs // 2, lens) << 29) \
-                + np.repeat(tys // 2, lens)
-            uniq_tiles, tile_ord = np.unique(ptile, return_inverse=True)
-            key = tile_ord.astype(np.int64) * (1 << 18) + pidx
-            order = np.argsort(key, kind="stable")
-            ks = key[order]
-            st = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
-            uk = ks[st]
-            csum = np.add.reduceat(cnt[order], st).astype(np.int64)
-            tile = uniq_tiles[(uk >> 18)]
-            pix = (uk & ((1 << 18) - 1)).astype(np.int32)
-            tst = np.flatnonzero(np.r_[True, tile[1:] != tile[:-1]])
-            ten = np.r_[tst[1:], len(tile)]
-            rows = {"zoom": [], "tile_x": [], "tile_y": [], "idx": [],
-                    "cnt": []}
-            for s, e in zip(tst, ten):
-                t = int(tile[s])
-                rows["zoom"].append(t >> 58)
-                rows["tile_x"].append((t >> 29) & ((1 << 29) - 1))
-                rows["tile_y"].append(t & ((1 << 29) - 1))
-                rows["idx"].append(pix[s:e].tobytes())
-                rows["cnt"].append(csum[s:e].tobytes())
-            if rows["zoom"]:
-                yield pd.DataFrame(rows)
-
-    nparts = num_partitions or (
-        sparse.sparkSession.sparkContext.defaultParallelism
-    )
-    return _merge_sparse(sparse.mapInPandas(transform, _PARTIAL_SCHEMA),
-                         nparts)
-
-
 def densify(sparse: DataFrame, zoom: int, tile_size: int = 256,
             codec: str | None = None) -> DataFrame:
     """Sparse (idx, cnt) rows -> dense TILE_SCHEMA rasters (map-side
@@ -639,6 +428,7 @@ def densify(sparse: DataFrame, zoom: int, tile_size: int = 256,
     ``codec='deflate'`` the payloads are zlib-compressed (the PNG
     stand-in), cutting Arrow/sink bytes ~100x on sparse tiles."""
 
+    @kernel_name("operators.tiling.densify")
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             if "zoom" not in b.columns:
@@ -682,6 +472,7 @@ def overview_reduce(tiles: DataFrame, agg: str = "sum") -> DataFrame:
             raise ValueError(f"unknown overview agg {agg}")
         return out.astype(dt)
 
+    @kernel_name("operators.tiling.overview")
     def reduce_stream(batches: Iterator[pd.DataFrame]
                       ) -> Iterator[pd.DataFrame]:
         cur = None
@@ -746,18 +537,26 @@ def overview_reduce(tiles: DataFrame, agg: str = "sum") -> DataFrame:
 def sparse_pyramid(
     points: DataFrame, base_zoom: int, min_zoom: int = 0,
     tile_size: int = 256, lon: str = "lon", lat: str = "lat",
-    num_partitions: int | None = None,
     _dense: tuple | None = None,
 ) -> DataFrame:
     """ALL pyramid levels in a single pass: phase 1 derives every
     zoom's (tile, pixel) key from the base-zoom key by bit shifts
     (parent pixel = child pixel >> 1), so the whole pyramid costs ONE
-    shuffle of sparse entries instead of one per level.
+    shuffle of sparse entries instead of one per level.  The engine's
+    only point -> density builder: one zoom is the one-level pyramid
+    (``base_zoom == min_zoom``).
 
     This is the engine's improvement over the reference's
     level-by-level overview build (gdalalg_raster_tile.cpp:1552 — a
     sequential dependency chain); the reduction is associative, so
-    all levels aggregate concurrently."""
+    all levels aggregate concurrently.
+
+    ``tile_size`` must be a power of two <= 512: a pixel index rides
+    in the low 2*log2(tile_size) bits of the tile key, and the merge
+    kernel (_merge_packed) packs it in 18."""
+    if tile_size not in [1 << k for k in range(10)]:
+        raise ValueError(f"tile_size must be a power of two <= 512; "
+                         f"got {tile_size!r}")
     res = geo.tile_span(base_zoom) / tile_size
     n_base = (1 << base_zoom) * tile_size
     px = F.floor(
@@ -773,11 +572,10 @@ def sparse_pyramid(
     )
     pix_bits = 2 * int(np.log2(tile_size))
     log_nb = int(np.log2(n_base))
-    nparts = num_partitions or (
-        points.sparkSession.sparkContext.defaultParallelism
-    )
+    nparts = points.sparkSession.sparkContext.defaultParallelism
     n_buckets = nparts * _BUCKETS_PER_PART
 
+    @kernel_name("operators.tiling.partial")
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         chunks: list[np.ndarray] = []
         counts: list[np.ndarray] = []
@@ -838,6 +636,15 @@ def build_pyramid(points: DataFrame, base_zoom: int, min_zoom: int = 0,
                           lon, lat, _dense=(tile_size, codec))
 
 
+def page_density_tiles(
+    points: DataFrame, zoom: int, tile_size: int = 256,
+    lon: str = "lon", lat: str = "lat", codec: str | None = None,
+) -> DataFrame:
+    """Page-density raster at one zoom, count of points per pixel:
+    the one-level pyramid, build_pyramid(points, zoom, zoom, ...)."""
+    return build_pyramid(points, zoom, zoom, tile_size, lon, lat, codec)
+
+
 def tiles_as_features(tiles: DataFrame, gt: list[float] | None = None,
                       skip_value: float | None = None) -> DataFrame:
     """Explode tiles into per-pixel feature rows — the engine's UDTF
@@ -861,6 +668,7 @@ def tiles_as_features(tiles: DataFrame, gt: list[float] | None = None,
     ])
     gt_ = gt
 
+    @kernel_name("operators.tiling.as_features")
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             for _, r in b.iterrows():
@@ -993,6 +801,7 @@ def tile_blob_frame(tiles: DataFrame, format: str = "png",
     ])
     wt = _by_tile(tiles, "tile_y")
 
+    @kernel_name("operators.tiling.encode")
     def encode_kernel(batches: Iterator[pd.DataFrame]
                       ) -> Iterator[pd.DataFrame]:
         yield from _tile_rows(
@@ -1125,6 +934,7 @@ def write_tiles(tiles: DataFrame, path: str, convention: str = "xyz",
             fh.write(data)
         return z, tx, fy, len(data)
 
+    @kernel_name("operators.tiling.write")
     def write_files(batches: Iterator[pd.DataFrame]
                     ) -> Iterator[pd.DataFrame]:
         # png/jpeg are Byte formats; gtiff keeps the native dtype

@@ -626,7 +626,7 @@ def _mvt_prepare_packed(df: DataFrame, geometry_col: str, minzoom: int,
     ext, buf = extent, buffer
     has_fid = fid_col is not None
     spark = df.sparkSession
-    par = max(spark.sparkContext.defaultParallelism, 8)
+    par = spark.sparkContext.defaultParallelism
     n_buckets = np.uint64(32 * par)
     fid_name = fid_col
 
@@ -1158,7 +1158,7 @@ def _mvt_prepare(df: DataFrame, geometry_col: str, minzoom: int,
                 yield pd.DataFrame(rows)
 
     spark = df.sparkSession
-    par = max(spark.sparkContext.defaultParallelism, 8)
+    par = spark.sparkContext.defaultParallelism
     covered = (spread_for_kernel(df).mapInPandas(cover, cover_schema)
                .repartition(par, "zoom", "tile_x", "tile_y")
                .sortWithinPartitions("zoom", "tile_x", "tile_y"))

@@ -447,7 +447,7 @@ def read_vrt(spark, vrt_path: str, *, tile_size: int = 256):
             yield pd.DataFrame(carry_rows)
 
     spark_df = spark.createDataFrame(pd.DataFrame(tasks))
-    par = max(spark.sparkContext.defaultParallelism, 8)
+    par = spark.sparkContext.defaultParallelism
     painted = (spark_df.repartition(
         min(len(tasks), par * 2))
         .mapInPandas(paint, part_schema))

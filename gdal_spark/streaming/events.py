@@ -411,19 +411,20 @@ def density_pyramid_stream(
     trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """INCREMENTAL page-density maintenance: each micro-batch's
-    points reduce map-side to the SAME sparse per-tile partials the
-    batch path uses (tiling.sparse_density), then merge into a
-    versioned sparse state table — after any prefix of batches the
-    state equals sparse_density() of every point seen so far
-    (stream == batch parity, tested), and densify/build_pyramid
-    render from it on demand.
+    points reduce to the SAME sparse per-tile rows the batch path
+    builds (the one-level pyramid, tiling.sparse_pyramid(batch, zoom,
+    zoom)), then merge into a versioned sparse state table — after
+    any prefix of batches the state equals that density of every
+    point seen so far (stream == batch parity, tested), and
+    densify/build_pyramid render from it on demand.
 
     State layout: ``state_path/v{n}_b{batch_id}`` immutable parquet
-    versions; each batch reads the latest, merges the delta with the
-    SAME stream-merge kernel (re-merging sparse rows is associative),
-    and publishes the next version.  foreachBatch is at-least-once,
-    so applied batch ids are recorded TWICE: in the version DIRECTORY
-    NAME and in an append-only marker ledger
+    versions; each batch reads the latest, merges the delta with
+    tiling._merge_sparse, which packs the rows and runs the pyramid's
+    own exchange and merge kernel (re-merging sparse rows is
+    associative), and publishes the next version.  foreachBatch is
+    at-least-once, so applied batch ids are recorded TWICE: in the
+    version DIRECTORY NAME and in an append-only marker ledger
     (``state_path/applied/b{batch_id}``) that version pruning never
     touches — a replay arriving after its version dir was pruned
     (e.g. a restart from a checkpoint older than keep_versions
@@ -437,7 +438,7 @@ def density_pyramid_stream(
     import shutil
 
     from gdal_spark.operators.tiling import _merge_sparse, \
-        sparse_density
+        sparse_pyramid
 
     ledger = os.path.join(state_path, "applied")
 
@@ -455,14 +456,12 @@ def density_pyramid_stream(
             # published but crashed before the ledger write: repair
             _mark_applied(batch_id)
             return
-        nparts = spark.sparkContext.defaultParallelism
-        delta = sparse_density(batch, zoom, tile_size, lon, lat,
-                               num_partitions=nparts)
+        delta = sparse_pyramid(batch, zoom, zoom, tile_size, lon, lat)
         if vs:
             n_prev, b_prev = vs[-1]
             prev = spark.read.parquet(
                 _state_dir(state_path, n_prev, b_prev))
-            merged = _merge_sparse(prev.unionByName(delta), nparts)
+            merged = _merge_sparse(prev.unionByName(delta))
             nxt = n_prev + 1
         else:
             merged = delta

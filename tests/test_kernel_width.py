@@ -173,3 +173,53 @@ def test_cutline_renders_at_default_parallelism(spark):
         method="distributed").collect())
     tasks = _stage_tasks(spark, jobs)
     assert max(tasks) == spark.sparkContext.defaultParallelism, tasks
+
+
+def _gtiff_vrt(tmp_path):
+    from gdal_spark.operators.gtiff import encode_gtiff
+    from gdal_spark.sources.vrt import build_vrt
+
+    rng = np.random.default_rng(11)
+    for i in range(2):
+        arr = rng.integers(1, 255, (40, 40)).astype(np.uint8)
+        with open(tmp_path / f"s{i}.tif", "wb") as fh:
+            fh.write(encode_gtiff(arr, epsg=3857, geotransform=(
+                80.0 * i, 2.0, 0.0, 80.0, 0.0, -2.0)))
+    vp = str(tmp_path / "m.vrt")
+    build_vrt(str(tmp_path), vp)
+    return vp
+
+
+def test_read_vrt_composites_at_default_parallelism(spark, tmp_path):
+    """The seam composite of a two-source VRT runs at
+    defaultParallelism, not max(defaultParallelism, 8)."""
+    from gdal_spark.sources.vrt import read_vrt
+
+    vp = _gtiff_vrt(tmp_path)
+    jobs = _jobs_run(spark, lambda: read_vrt(spark, vp, tile_size=16)[0]
+                     .collect())
+    tasks = _stage_tasks(spark, jobs)
+    assert max(tasks) == spark.sparkContext.defaultParallelism, tasks
+
+
+@pytest.mark.parametrize("props", [False, True],
+                         ids=["packed", "rows"])
+def test_mvt_cover_shuffle_at_default_parallelism(spark, tmp_path,
+                                                  props):
+    """Both MVT stage-A exchanges (the packed one of a
+    no-properties layer and the row one) run at defaultParallelism,
+    not max(defaultParallelism, 8)."""
+    from gdal_spark.sources.mvt import write_mvt
+
+    pdf = pd.DataFrame({
+        "fid": np.arange(200, dtype=np.int64),
+        "geometry": [point_wkb(float(i % 90) - 45.0, float(i % 60) - 30.0)
+                     for i in range(200)],
+    })
+    if props:
+        pdf["name"] = [f"p{i}" for i in range(200)]
+    df = spark.createDataFrame(pdf)
+    jobs = _jobs_run(spark, lambda: write_mvt(
+        df, str(tmp_path / "t.mvt"), minzoom=0, maxzoom=2))
+    tasks = _stage_tasks(spark, jobs)
+    assert max(tasks) == spark.sparkContext.defaultParallelism, tasks

@@ -59,7 +59,7 @@ def test_hot_cell_skew_correctness(spark):
     from gdal_spark.operators.spatial_join import (
         brute_force_join_pdf, spatial_join_points_in_polygons,
     )
-    from gdal_spark.operators.tiling import sparse_density
+    from gdal_spark.operators.tiling import sparse_pyramid
     from gdal_spark.sources.polygons import poly_fixture_pdf
 
     n = 20000
@@ -73,7 +73,7 @@ def test_hot_cell_skew_correctness(spark):
         .otherwise((F.col("i") % 160) - 80.0).alias("lat"),
     )
     # density: mass conserved despite the hot tile
-    sp = sparse_density(pts, zoom=8)
+    sp = sparse_pyramid(pts, 8, 8)
     total = sp.toPandas()
     mass = sum(
         np.frombuffer(c, dtype=np.int64).sum() for c in total["cnt"]

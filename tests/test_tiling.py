@@ -5,11 +5,13 @@ math (validated in test_geo_functions); here we verify mass
 conservation and pyramid semantics."""
 
 import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark.operators.tiling import (
-    build_pyramid, overview_reduce, page_density_tiles, tile_y_file,
-    tiles_to_arrays,
+    _merge_sparse, build_pyramid, overview_reduce, page_density_tiles,
+    sparse_pyramid, tile_y_file, tiles_to_arrays,
 )
 from gdal_spark.sources.pages import pages_df
 
@@ -127,3 +129,59 @@ def test_tiles_as_features(spark):
     g = tiles_as_features(tiles, gt=gt, skip_value=0.0).toPandas()
     np.testing.assert_allclose(g["x"], (g["px"] + 0.5) * 2.0)
     np.testing.assert_allclose(g["y"], 512.0 - (g["py"] + 0.5) * 2.0)
+
+
+@pytest.mark.parametrize("build", [
+    lambda pts, ts: page_density_tiles(pts, zoom=2, tile_size=ts),
+    lambda pts, ts: build_pyramid(pts, 2, 0, tile_size=ts),
+], ids=["page_density_tiles", "build_pyramid"])
+@pytest.mark.parametrize("ts", [100, 1024])
+def test_tile_size_outside_key_packing_rejected(spark, build, ts):
+    """A pixel index rides in 2*log2(ts) bits of the tile key and in
+    18 bits in the merge: 100 spilled pixels into the tile bits (18
+    or 29 tiles on a 16-tile grid, mass still conserved) and 1024
+    failed in a worker.  Both are refused while the frame is built."""
+    pts = pages_df(spark, 200, partitions=2).select("lon", "lat")
+    with pytest.raises(ValueError, match="tile_size"):
+        build(pts, ts)
+
+
+def _plan_lines(df) -> list[str]:
+    """Executed plan of *df* after an action, AQE's final plan only."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0].splitlines()
+
+
+def test_pyramid_plan_names_partial_and_merge_around_one_exchange(
+        spark):
+    pts = pages_df(spark, 500, partitions=2).select("lon", "lat")
+    pyr = build_pyramid(pts, 3, 1, tile_size=32)
+    pyr.collect()
+    lines = _plan_lines(pyr)
+    merge = next(i for i, s in enumerate(lines)
+                 if "operators.tiling.merge" in s)
+    partial = next(i for i, s in enumerate(lines)
+                   if "operators.tiling.partial" in s)
+    assert merge < partial
+    assert sum("Exchange" in s for s in lines[merge:partial]) == 1, lines
+
+
+def test_merge_sparse_sums_repeated_tiles_in_one_exchange(spark):
+    """A density state unioned with itself merges to doubled counts
+    on the same pixels, through one Exchange and no Sort (the packed
+    merge of the pyramid, not a tile-sorted stream merge)."""
+    pts = pages_df(spark, 800, partitions=2).select("lon", "lat")
+    sparse = sparse_pyramid(pts, 4, 4)
+    rows = sparse.toPandas()
+    twice = spark.createDataFrame(pd.concat([rows, rows]),
+                                  schema=sparse.schema)
+    merged = _merge_sparse(twice)
+    got = {(r.zoom, r.tile_x, r.tile_y): (bytes(r.idx), bytes(r.cnt))
+           for r in merged.collect()}
+    want = {(r.zoom, r.tile_x, r.tile_y):
+            (bytes(r.idx), (2 * np.frombuffer(r.cnt, np.int64)).tobytes())
+            for r in rows.itertuples()}
+    assert got == want
+    lines = _plan_lines(merged)
+    assert sum("Exchange" in s for s in lines) == 1, lines
+    assert not any("Sort" in s for s in lines), lines

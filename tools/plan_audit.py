@@ -54,7 +54,7 @@ def main() -> None:
     from gdal_spark.operators.spatial_join import (
         spatial_join_points_in_polygons,
     )
-    from gdal_spark.operators.tiling import sparse_density
+    from gdal_spark.operators.tiling import sparse_pyramid
 
     spark = get_spark("plan-audit", master="local[4]",
                       shuffle_partitions=4)
@@ -76,7 +76,7 @@ def main() -> None:
     checks.append(("page synthesis in WholeStageCodegen",
                    "*(" in simple_plan(pts)))
 
-    p2 = plan_of(sparse_density(pts, 8))
+    p2 = plan_of(sparse_pyramid(pts, 8, 8))
     sections.append(("Tile density (sparse two-phase agg)", p2))
     n_exch = n_exchanges(p2)
     checks.append(("exactly one shuffle in the density agg "

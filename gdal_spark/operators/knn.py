@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from gdal_spark.functions import geo
+from gdal_spark.session import kernel_name
 
 R_EARTH = 6371008.8
 
@@ -164,6 +165,7 @@ def knn_cells(
         StructField("rank", IntegerType()),
     ])
 
+    @kernel_name("operators.knn.nearest")
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tgt = bc.value
         index = tgt["index"]

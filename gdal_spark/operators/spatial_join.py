@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from gdal_spark.functions import geo
 from gdal_spark.geometry.pip import points_in_rings
 from gdal_spark.geometry.wkb import parse_wkb
+from gdal_spark.session import kernel_name
 
 
 def _is_axis_rect(g) -> bool:
@@ -311,6 +312,7 @@ def spatial_join_points_in_polygons(
         return flagged.drop("_exact")
     bc = spark.sparkContext.broadcast(rings_by_fid)
 
+    @kernel_name("operators.spatial_join.exact")
     def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         polys = bc.value
         for b in batches:

@@ -31,6 +31,10 @@ data:binary raw C-order, dtype:string, tile_size:int).
 
 from __future__ import annotations
 
+import os
+import shutil
+import stat
+from contextlib import suppress
 from typing import Iterator
 
 import numpy as np
@@ -837,6 +841,66 @@ def bounded_local_stream(df: DataFrame, limit_rows: int = 100_000):
     return gen(), n
 
 
+def _drop(entry: os.DirEntry) -> None:
+    """Remove one entry of a tile tree as rmtree(ignore_errors=True)
+    would: a directory with its contents, anything else (a symlink
+    included) by unlinking the name itself."""
+    if entry.is_dir(follow_symlinks=False):
+        shutil.rmtree(entry.path, ignore_errors=True)
+    else:
+        with suppress(OSError):
+            os.unlink(entry.path)
+
+
+def _tile_tree(path: str) -> tuple[list[str], list[str]]:
+    """One driver walk of an existing z/x/y tree before it is
+    rewritten in place.  Keeps the directories at depth 1-2 and the
+    regular, owner-writable, single-link files at depth 3; removes
+    every other entry (symlinks, hard-linked files, a directory where
+    a tile file belongs, a file where a z or x directory belongs), so
+    an in-place write neither follows a link out of ``path`` nor
+    changes bytes that another name shares.  Returns the kept files
+    and the kept directories, each x directory before its z directory
+    and ``path`` last."""
+    files: list[str] = []
+    dirs: list[str] = []
+    with os.scandir(path) as zs:
+        for z in zs:
+            if not z.is_dir(follow_symlinks=False):
+                _drop(z)
+                continue
+            with os.scandir(z.path) as xs:
+                for x in xs:
+                    if not x.is_dir(follow_symlinks=False):
+                        _drop(x)
+                        continue
+                    with os.scandir(x.path) as ys:
+                        for y in ys:
+                            st = y.stat(follow_symlinks=False)
+                            if (stat.S_ISREG(st.st_mode)
+                                    and st.st_nlink == 1
+                                    and st.st_mode & stat.S_IWUSR):
+                                files.append(y.path)
+                            else:
+                                _drop(y)
+                    dirs.append(x.path)
+            dirs.append(z.path)
+    dirs.append(path)
+    return files, dirs
+
+
+def _prune(files: list[str], dirs: list[str], written: set[str]) -> None:
+    """Delete the kept files this write did not produce, then every
+    kept directory left empty (children before parents)."""
+    for p in files:
+        if p not in written:
+            with suppress(OSError):
+                os.unlink(p)
+    for d in dirs:
+        with suppress(OSError):     # ENOTEMPTY: the write filled it
+            os.rmdir(d)
+
+
 def write_tiles(tiles: DataFrame, path: str, convention: str = "xyz",
                 mode: str = "overwrite", format: str = "parquet",
                 quality: int = 75) -> None:
@@ -861,6 +925,21 @@ def write_tiles(tiles: DataFrame, path: str, convention: str = "xyz",
     scaling — and operators/gtiff.py — TIFF 6.0 + GeoTIFF 1.1,
     deflate), so output decodes in any client; webp is declared out
     of scope (COVERAGE.md).
+
+    mode="overwrite" leaves the same tree as deleting ``path`` and
+    writing afresh, file for file and byte for byte, but rewrites an
+    existing pyramid IN PLACE: a driver walk first removes whatever
+    is not a z/x directory or a plain single-link tile file (links
+    are never written through), each tile is then written over its
+    old file without truncating it to zero (write, then ftruncate to
+    the new length), and the driver finally deletes the files this
+    write did not produce and the directories left empty.  Re-creating
+    every file cost as much as encoding it.  A reader during the
+    rewrite may see a half-written tile (old tail, or new head over
+    old bytes) where a delete-first write showed a missing one.
+    mode="append" writes over the named files and keeps the rest.  A
+    ``path`` that exists and is not a directory is refused before
+    any job runs.
     """
     if format == "parquet":
         tile_y_file(tiles, convention).write.partitionBy("zoom") \
@@ -870,26 +949,24 @@ def write_tiles(tiles: DataFrame, path: str, convention: str = "xyz",
         raise ValueError(f"unknown tile sink format {format!r}")
 
     if "://" in str(path):
-        # the file branch writes with os.makedirs/open on executors
-        # and driver-side shutil.rmtree — a URI-scheme path (hdfs://,
+        # the file branch writes with os.open on executors and walks
+        # and prunes on the driver — a URI-scheme path (hdfs://,
         # s3a://) would silently land on executor-local disks.  The
         # parquet branch goes through Hadoop FS and accepts them.
         raise ValueError(
             f"{format} tile sink needs a plain filesystem path, got "
             f"{path!r} (object-store/HDFS URIs are supported by the "
             f"parquet sink; for {format}, write locally and upload)")
-
-    if mode == "overwrite":
-        # match the parquet path's clean-replace semantics: stale
-        # z/x/y.png files from a previous (larger) write must not
-        # survive and serve mixed pyramids
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-    elif mode != "append":
+    if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown {format} sink mode {mode!r}")
-
-    from pyspark.sql.types import LongType, StructField
+    if os.path.lexists(path) and not os.path.isdir(path):
+        raise ValueError(f"{format} tile sink path {path!r} exists and "
+                         f"is not a directory")
+    # a symlinked root is written through, uncleaned, as rmtree (which
+    # refuses symlinks) left it
+    kept = (_tile_tree(path) if mode == "overwrite"
+            and os.path.isdir(path) and not os.path.islink(path)
+            else None)
 
     from gdal_spark.operators.gtiff import encode_gtiff
     from gdal_spark.operators.jpeg import encode_jpeg
@@ -905,6 +982,9 @@ def write_tiles(tiles: DataFrame, path: str, convention: str = "xyz",
         ext, ok_bands = "tif", (1, 2, 3, 4)
         enc = None              # needs the tile key; built in flush
 
+    def tile_path(z, tx, fy) -> str:
+        return os.path.join(path, str(z), str(tx), f"{fy}.{ext}")
+
     out_schema = StructType([
         StructField("zoom", IntegerType()),
         StructField("tile_x", IntegerType()),
@@ -914,11 +994,7 @@ def write_tiles(tiles: DataFrame, path: str, convention: str = "xyz",
     wt = _by_tile(tile_y_file(tiles, convention), "file_y")
 
     def write_file(key, ts, img):
-        import os
-
         z, tx, fy = key
-        d = os.path.join(path, str(z), str(tx))
-        os.makedirs(d, exist_ok=True)
         if format == "gtiff":
             # native dtype + EPSG:3857 georeferencing derived from the
             # tile key (the reference tile writer's GeoTIFF output path)
@@ -930,8 +1006,21 @@ def write_tiles(tiles: DataFrame, path: str, convention: str = "xyz",
             data = encode_gtiff(img, geotransform=gt, epsg=3857)
         else:
             data = enc(img)
-        with open(os.path.join(d, f"{fy}.{ext}"), "wb") as fh:
-            fh.write(data)
+        p = tile_path(z, tx, fy)
+        # no O_TRUNC: rewriting a file cut to zero cost as much as
+        # creating it anew
+        try:
+            fd = os.open(p, os.O_WRONLY | os.O_CREAT, 0o666)
+        except FileNotFoundError:
+            os.makedirs(os.path.dirname(p), exist_ok=True)
+            fd = os.open(p, os.O_WRONLY | os.O_CREAT, 0o666)
+        try:
+            view = memoryview(data)
+            while view:
+                view = view[os.write(fd, view):]
+            os.ftruncate(fd, len(data))
+        finally:
+            os.close(fd)
         return z, tx, fy, len(data)
 
     @kernel_name("operators.tiling.write")
@@ -942,4 +1031,6 @@ def write_tiles(tiles: DataFrame, path: str, convention: str = "xyz",
                               format != "gtiff", write_file,
                               out_schema.names)
 
-    wt.mapInPandas(write_files, out_schema).count()
+    rows = wt.mapInPandas(write_files, out_schema).collect()
+    if kept is not None:
+        _prune(*kept, {tile_path(*r[:3]) for r in rows})

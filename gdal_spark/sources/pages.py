@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from gdal_spark.functions import geo
+from gdal_spark.session import kernel_name
 
 N_HOSTS = 97
 LANGS = ["en", "de", "fr", "es", "pt", "zh"]
@@ -165,6 +166,7 @@ def pages_df(spark: SparkSession, n: int, partitions: int | None = None,
         StructField("lat", DoubleType()),
     ])
 
+    @kernel_name("sources.pages.render")
     def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             text = expected_text(

@@ -40,7 +40,7 @@ def test_broadcast_join_runs_upstream_once(spark):
         spark, _geocoded(spark, 2000), poly_fixture_pdf(), res=6)
     assert len(df.collect()) > 0
     plan = _final_plan(df)
-    assert plan.count("MapInPandas render(") == 1, plan
+    assert plan.count("MapInPandas sources.pages.render(") == 1, plan
     assert plan.count("BroadcastHashJoin") == 1, plan
     assert "Union" not in plan, plan
 
@@ -60,10 +60,34 @@ def test_shuffle_join_runs_upstream_once(spark):
     finally:
         spark.conf.set(key, old)
     plan = _final_plan(df)
-    assert plan.count("MapInPandas render(") == 1, plan
+    assert plan.count("MapInPandas sources.pages.render(") == 1, plan
     assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") \
         == 1, plan
     assert "Union" not in plan, plan
+
+
+def test_geojoin_plan_names_its_three_kernels(spark):
+    """Render, exact PIP and nearest-city kernels show their
+    ``<layer>.<op>.<stage>`` names in the executed plan of the
+    geojoin chain (pages -> join -> kNN)."""
+    from gdal_spark.operators.knn import knn_cells
+    from gdal_spark.sources.pages import CITIES
+
+    joined = spatial_join_points_in_polygons(
+        spark, _geocoded(spark, 2000), poly_fixture_pdf(), res=6)
+    targets = pd.DataFrame({
+        "target_id": np.arange(len(CITIES), dtype=np.int64),
+        "t_lon": [c[0] for c in CITIES],
+        "t_lat": [c[1] for c in CITIES],
+    })
+    nearest = knn_cells(joined.select(
+        (F.col("i") * 16 + F.col("fid")).alias("k"), "lon", "lat"),
+        targets, k=1, point_key="k")
+    assert len(nearest.collect()) > 0
+    plan = _final_plan(nearest)
+    for name in ("sources.pages.render", "operators.spatial_join.exact",
+                 "operators.knn.nearest"):
+        assert plan.count(f"MapInPandas {name}(") == 1, (name, plan)
 
 
 def _join(path, spark, pts, polys_pdf, res):

@@ -22,7 +22,8 @@ dateline edge) fall back to scanning all targets — still vectorized,
 still no shuffle.
 
 Scale: the big point table is never shuffled and never leaves the
-executor; targets are a broadcast dict of numpy arrays.
+executor; targets are a dict of numpy arrays shipped inside the
+kernel (PySpark broadcasts a kernel pickled above 1 MB).
 """
 
 from __future__ import annotations
@@ -153,11 +154,11 @@ def knn_cells(
     Output: (point_key, target_id, dist_m, rank) with rank 1..k
     (ties broken by target_id, deterministic).
     """
-    spark = points.sparkSession
-    bc = spark.sparkContext.broadcast(
-        build_target_index(targets_pdf, res, target_id, t_lon, t_lat)
-    )
-    key_type = points.schema[point_key].dataType
+    tgt = build_target_index(targets_pdf, res, target_id, t_lon, t_lat)
+    in_schema = points.schema
+    key_type = in_schema[point_key].dataType
+    if in_schema.names != [point_key, lon, lat]:
+        points = points.select(point_key, lon, lat)
     schema = StructType([
         StructField(point_key, key_type),
         StructField(target_id, LongType()),
@@ -167,7 +168,6 @@ def knn_cells(
 
     @kernel_name("operators.knn.nearest")
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tgt = bc.value
         index = tgt["index"]
         ids, lons, lats = tgt["ids"], tgt["lons"], tgt["lats"]
         res_ = tgt["res"]
@@ -280,7 +280,7 @@ def knn_cells(
                 "rank": np.array(out_r, dtype=np.int32),
             })
 
-    return points.select(point_key, lon, lat).mapInPandas(kernel, schema)
+    return points.mapInPandas(kernel, schema)
 
 
 def _shell_cells(tx: int, ty: int, r: int, n: int) -> list[int]:

@@ -43,6 +43,9 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (
+    BinaryType, BooleanType, DoubleType, LongType, StructField, StructType,
+)
 
 from gdal_spark.functions import geo
 from gdal_spark.geometry.pip import points_in_rings
@@ -179,11 +182,6 @@ def _polygon_cell_cover(polys: DataFrame, res: int, fid_col: str,
     """polygon_cell_cover_pdf's rows computed by a distributed Arrow
     kernel, the fid column named *fid_col*, each row carrying its
     polygon's WKB in *geom_col*."""
-    from pyspark.sql.types import (
-        BinaryType, BooleanType, DoubleType, LongType, StructField,
-        StructType,
-    )
-
     schema = StructType([
         StructField("cell", LongType()), StructField(fid_col, LongType()),
         StructField("minx", DoubleType()), StructField("miny", DoubleType()),
@@ -205,27 +203,54 @@ def _polygon_cell_cover(polys: DataFrame, res: int, fid_col: str,
     return polys.select(fid_col, geom_col).mapInPandas(cover_kernel, schema)
 
 
-def _flag_candidates(cand: DataFrame, lon: str, lat: str) -> DataFrame:
-    """Stages 1-2b over cell-joined (point x cover row) candidates:
-    the envelope reject and the rectangle rule filter, and the
-    ``_exact`` flag marks the rows the stage-3 kernel must ray-cast."""
-    # envelope pretest must be a SUPERSET of ray-cast-inside: a point
-    # exactly on the leftmost/bottom edge IS strictly-inside by the
-    # crossing rule (the 0-distance crossing is not counted, the far
-    # one is), so the reject uses inclusive bounds
-    in_bbox = (
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy"))
-    )
-    # a rectangle's bbox IS the geometry: ray casting it admits exactly
-    # [x0, x1) x [y0, y1) (left/bottom edges in, right/top out), and
-    # this predicate replicates that
-    rect_in = (
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) < F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) < F.col("maxy"))
-    )
-    return (cand.filter(in_bbox & (~F.col("is_rect") | rect_in))
-            .withColumn("_exact", ~F.col("is_rect") & ~F.col("full_in")))
+# Stages 1-2 as ONE SQL join condition over (point x cover row) pairs:
+# the point's cell equals the cover row's, and the point passes the
+# envelope pretest and the rectangle rule.  The envelope pretest must
+# be a SUPERSET of ray-cast-inside: a point exactly on the leftmost/
+# bottom edge IS strictly-inside by the crossing rule (the 0-distance
+# crossing is not counted, the far one is), so the reject uses
+# inclusive bounds.  A rectangle's bbox IS the geometry: ray casting
+# it admits exactly [x0, x1) x [y0, y1) (left/bottom edges in,
+# right/top out), so inside the inclusive bbox a rectangle keeps only
+# the points strictly below its right and top edges.
+_CANDIDATE_SQL = (
+    "{cell} = cell"
+    " AND {lon} >= minx AND {lon} <= maxx AND {lat} >= miny AND {lat} <= maxy"
+    " AND (NOT is_rect OR ({lon} < maxx AND {lat} < maxy))")
+# stage 2b: a non-rectangle candidate outside every interior cover
+# cell is the one the stage-3 kernel must ray-cast
+_EXACT_SQL = "NOT is_rect AND NOT full_in"
+
+
+def _candidates(points: DataFrame, cover: DataFrame, res: int, lon: str,
+                lat: str, fid_col: str, geom_col: str | None = None
+                ) -> tuple[DataFrame, StructType]:
+    """Stages 1-2b: the join of *points* and *cover* rows on the cell,
+    the envelope reject and the rectangle rule.  Returns the
+    candidates, holding every point column but ``cell``, *fid_col*,
+    the ``_exact`` flag and, given *geom_col*, the polygon's WKB on
+    flagged rows only; and the join's output schema, those columns
+    without the flag and the WKB.
+
+    Every expression is a SQL fragment in one ``F.expr``, the style of
+    ``functions.geo``: each ``pyspark.sql.functions`` call or Column
+    operator is its own round trip to the JVM, and each DataFrame
+    method a new plan the JVM analyses."""
+    schema = points.schema
+    if "cell" in schema.names:
+        points = points.drop("cell")
+    fields = [f for f in schema.fields if f.name != "cell"]
+    names = [f.name for f in fields]
+    flag = [F.expr(f"{_EXACT_SQL} AS _exact")]
+    if geom_col is not None:
+        # only rows the kernel ray-casts ship their polygon's WKB to
+        # Python
+        flag.append(F.expr(
+            f"IF({_EXACT_SQL}, {geom_col}, NULL) AS {geom_col}"))
+    on = _CANDIDATE_SQL.format(cell=geo.cell_id_sql(lon, lat, res),
+                               lon=lon, lat=lat)
+    cand = points.join(cover, F.expr(on)).select(*names, fid_col, *flag)
+    return cand, StructType(fields + [StructField(fid_col, LongType())])
 
 
 def _exact_pass(b: pd.DataFrame, lon: str, lat: str, fid_col: str,
@@ -289,18 +314,17 @@ def spatial_join_points_in_polygons(
     lat: str = "lat",
 ) -> DataFrame:
     """points ⋈ polygons on containment -> points columns + ``fid``.
+    A ``cell`` column of *points* is replaced by the join key and not
+    returned.
 
     ``polys_pdf`` is the (small, broadcastable) polygon layer with
     fid + geometry(WKB) columns.
     """
     cover = spark.createDataFrame(polygon_cell_cover_pdf(polys_pdf, res))
-    pts = points.withColumn("cell", geo.cell_id(lon, lat, res))
-    out_cols = [c for c in points.columns if c != "cell"] + ["fid"]
     # stage 1 (bbox reject) entirely JVM-side: cell equi-join + the
     # envelope predicate (ogrlayer.cpp:4004 envelope pretest)
-    flagged = _flag_candidates(
-        pts.join(F.broadcast(cover), "cell", "inner"), lon, lat
-    ).select(*out_cols, "_exact")
+    flagged, schema = _candidates(points, F.broadcast(cover), res, lon, lat,
+                                  "fid")
 
     rings_by_fid = {}
     for fid, wkb in zip(polys_pdf["fid"], polys_pdf["geometry"]):
@@ -310,18 +334,19 @@ def spatial_join_points_in_polygons(
                                       for r in g.rings()]
     if not rings_by_fid:
         return flagged.drop("_exact")
-    bc = spark.sparkContext.broadcast(rings_by_fid)
 
+    # the rings ride in the kernel's closure: PySpark broadcasts a
+    # pickled kernel above spark.broadcast.UDFCompressionThreshold
+    # (1 MB) by itself
     @kernel_name("operators.spatial_join.exact")
     def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        polys = bc.value
         for b in batches:
             out = _exact_pass(b, lon, lat, "fid",
-                              lambda fid, row: polys[fid])
+                              lambda fid, row: rings_by_fid[fid])
             if len(out):
                 yield out
 
-    return flagged.mapInPandas(exact, flagged.drop("_exact").schema)
+    return flagged.mapInPandas(exact, schema)
 
 
 def spatial_join_big_polygons(
@@ -348,18 +373,14 @@ def spatial_join_big_polygons(
         flagged rows carry their polygon's WKB and are ray-cast, so
         no polygon index needs to fit in memory anywhere.
 
-    Output: points columns + fid (same rows as the broadcast path).
+    Output: points columns but ``cell`` + fid (same rows and columns as
+    the broadcast path).
     """
     cover = _polygon_cell_cover(polys, res, fid_col, geom_col)
+    flagged, schema = _candidates(points, cover, res, lon, lat, fid_col,
+                                  geom_col)
 
-    pts = points.withColumn("cell", geo.cell_id(lon, lat, res))
-    out_cols = list(points.columns) + [fid_col]
-    cand = _flag_candidates(pts.join(cover, "cell", "inner"), lon, lat)
-    # only rows the kernel ray-casts ship their polygon's WKB to Python
-    flagged = cand.select(
-        *out_cols, "_exact",
-        F.when(F.col("_exact"), F.col(geom_col)).alias(geom_col))
-
+    @kernel_name("operators.spatial_join.exact_shuffle")
     def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ring_cache: dict[int, list[np.ndarray]] = {}
 
@@ -379,7 +400,7 @@ def spatial_join_big_polygons(
             if len(out):
                 yield out
 
-    return flagged.mapInPandas(exact, cand.select(*out_cols).schema)
+    return flagged.mapInPandas(exact, schema)
 
 
 def brute_force_join_pdf(points_pdf: pd.DataFrame, polys_pdf: pd.DataFrame,
@@ -404,10 +425,6 @@ def _geom_cell_cover(df: DataFrame, res: int, fid_col: str,
     the exploded build input of the polygon x polygon join (the
     distributed rendering of the ogrlayer.cpp:4004 envelope pretest,
     same GetTileIndices math as polygon_cell_cover_pdf)."""
-    from pyspark.sql.types import (
-        BinaryType, DoubleType, LongType, StructField, StructType,
-    )
-
     n = 1 << res
     sfx = out_fid
     schema = StructType([
@@ -471,7 +488,6 @@ def spatial_join_polygons_intersect_big(
     broadcast path ``spatial_join_polygons_intersect``).
     """
     from gdal_spark.geometry.overlay import geoms_intersect
-    from pyspark.sql.types import LongType, StructField, StructType
 
     a = _geom_cell_cover(input_df, res, fid_col, geom_col, "fid_a")
     b = _geom_cell_cover(method_df, res, fid_col,

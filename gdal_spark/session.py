@@ -178,6 +178,18 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    """The engine's SparkSession, with the defaults above.
+
+    It also turns off ``spark.python.sql.dataFrameDebugging.enabled``.
+    With it on, every ``pyspark.sql.functions`` call and every Column
+    method records its Python call site in the JVM, about 10 py4j round
+    trips each (an active-session lookup, a conf read, a reflection
+    lookup, set and clear, and the later deletes of those objects),
+    only so that a DataFrame error message can name that line.  The
+    cost: such messages lose the Python call site.  Sessions built
+    elsewhere, such as ``tools/submit_job.py``'s, keep PySpark's
+    default, and so does a call that returns a session started before
+    it: the conf is static."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
@@ -194,6 +206,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     ship_package(spark)

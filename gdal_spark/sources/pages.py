@@ -211,11 +211,10 @@ def with_extracted_geo(pages: DataFrame) -> DataFrame:
     s = F.col("html").cast("string")
     lat_s = F.regexp_extract(s, pat, 1)
     lon_s = F.regexp_extract(s, pat, 2)
-    return (pages
-            .withColumn("geo_lat",
-                        F.when(lat_s != "", lat_s).cast("double"))
-            .withColumn("geo_lon",
-                        F.when(lon_s != "", lon_s).cast("double")))
+    return pages.withColumns({
+        "geo_lat": F.when(lat_s != "", lat_s).cast("double"),
+        "geo_lon": F.when(lon_s != "", lon_s).cast("double"),
+    })
 
 
 def extract_text(pages: DataFrame) -> DataFrame:

@@ -61,6 +61,8 @@ def test_shuffle_join_runs_upstream_once(spark):
         spark.conf.set(key, old)
     plan = _final_plan(df)
     assert plan.count("MapInPandas sources.pages.render(") == 1, plan
+    assert plan.count(
+        "MapInPandas operators.spatial_join.exact_shuffle(") == 1, plan
     assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") \
         == 1, plan
     assert "Union" not in plan, plan
@@ -183,6 +185,50 @@ def test_rectangles_only_layer(spark, path):
         assert "MapInPandas" not in _final_plan(out)
 
 
+# an L whose left and bottom edges lie on its bbox, so the envelope
+# reject sees polygon edges at minx/miny; its right and top bbox
+# edges touch the polygon in one short edge each
+ELL = [(0.0, 0.0), (4.0, 0.0), (4.0, 1.0), (1.0, 1.0), (1.0, 4.0),
+       (0.0, 4.0), (0.0, 0.0)]
+
+
+@pytest.mark.parametrize("path", ["broadcast", "shuffle"])
+def test_non_rectangle_bbox_edges(spark, path):
+    """Points exactly on every bbox edge of a non-rectangle: the
+    inclusive envelope keeps the left/bottom points the ray cast puts
+    inside; an exclusive reject drops them, and fails here."""
+    polys = _layer([ELL])
+    left_bottom = [(0.0, 0.5), (0.0, 2.0), (0.0, 3.5),
+                   (0.5, 0.0), (2.0, 0.0), (3.5, 0.0)]
+    right_top = [(4.0, 0.5), (4.0, 2.0), (4.0, 3.5),
+                 (0.5, 4.0), (2.0, 4.0), (3.5, 4.0)]
+    corners = [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0)]
+    pts = _points(left_bottom + right_top + corners)
+    _, got = _check_against_oracle(path, spark, pts, polys, res=6)
+    assert {(i, 0) for i in range(len(left_bottom))} <= got
+
+
+@pytest.mark.parametrize("path", ["broadcast", "shuffle"])
+def test_page_without_geo_hint_gives_no_row(spark, path):
+    """A page whose html has no geo hint geocodes to NULL lon/lat and
+    joins to nothing; the hinted pages match the oracle."""
+    hint = '<html><head><meta name="geo.position" content="{};{}"/>'
+    html = [hint.format("1.500000", "1.500000"),     # in RECT, in HOLE
+            hint.format("5.000000", "5.000000"),     # in OUTER
+            "<html><head><title>no hint</title></head></html>"]
+    pages = spark.createDataFrame(pd.DataFrame({
+        "i": np.arange(3, dtype=np.int64),
+        "html": [h.encode() for h in html]}))
+    pts = with_extracted_geo(pages).select(
+        "i", F.col("geo_lon").alias("lon"), F.col("geo_lat").alias("lat"))
+    pts_pdf = pts.toPandas()
+    assert pts_pdf.loc[2, ["lon", "lat"]].isna().all()
+    polys = _layer([RECT], [OUTER, HOLE])
+    got = _pairs(_join(path, spark, pts, polys, res=6).toPandas())
+    assert got == _pairs(brute_force_join_pdf(pts_pdf.iloc[:2], polys))
+    assert got == {(0, 0), (1, 1)}
+
+
 @pytest.mark.parametrize("path", ["broadcast", "shuffle"])
 def test_all_candidates_accepted_on_jvm(spark, path):
     """Every candidate lies in a cover cell fully inside its polygon,
@@ -197,6 +243,19 @@ def test_all_candidates_accepted_on_jvm(spark, path):
     assert cover.loc[cells.to_numpy(), "full_in"].all()
     _, got = _check_against_oracle(path, spark, pts_pdf, polys, res=res)
     assert len(got) == len(pts_pdf)
+
+
+@pytest.mark.parametrize("path", ["broadcast", "shuffle"])
+def test_input_cell_column_is_replaced(spark, path):
+    """A ``cell`` column of the points is not the join key: the join
+    computes its own and returns the points' other columns."""
+    polys = _layer([RECT], [OUTER, HOLE])
+    pts_pdf = _points(_box_edges(1.0, 1.0, 3.0, 2.0))
+    pts = spark.createDataFrame(pts_pdf.assign(cell=np.int64(-1)))
+    out = _join(path, spark, pts, polys, res=6)
+    assert out.columns == ["i", "lon", "lat", "fid"]
+    assert _pairs(out.toPandas()) == _pairs(
+        brute_force_join_pdf(pts_pdf, polys))
 
 
 @pytest.mark.parametrize("path", ["broadcast", "shuffle"])

@@ -19,24 +19,30 @@ Kernel semantics ported rule-for-rule from the reference:
 * burn value from a fixed value or an attribute column
   (BURN_VALUE_FROM / -a, gdalrasterize.cpp:796-834)
 
-Distribution: the output grid is tiled; each geometry is replicated
-to the tiles its bbox covers (same cover math as the spatial join),
-then an applyInPandas kernel renders each tile independently with
-geometry coordinates shifted into tile-local pixel space — exactly
-the reference's chunked execution (OPTIM=RASTER chunks,
-gdalrasterize.cpp:840-870) rendered as a Spark shuffle.
+Distribution: the output grid is tiled.  The layer is driver-side by
+contract, so the driver already knows each feature's tile cover (its
+bbox clamped to the grid): ``layer_entries`` parses the features once
+and ``tile_cover`` lists, per covered tile, the features to burn there
+in feature order.  Both ride in the render kernel's closure, and one
+``mapInPandas`` over ``spark.range`` of the covered tiles draws each
+tile from only its own features with ``render_tile``, shifted into
+tile-local pixel space: the reference's chunked execution (OPTIM=RASTER
+chunks, gdalrasterize.cpp:840-870) with no shuffle.  Zonal statistics
+renders its zone layer with the same three functions.
 """
 
 from __future__ import annotations
 
 import math
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.geometry.wkb import parse_wkb
-from gdal_spark.operators.tiling import TILE_SCHEMA
+from gdal_spark.operators.tiling import TILE_SCHEMA, encode_tile
+from gdal_spark.session import kernel_name
 
 
 # --------------------------------------------------------------------
@@ -393,6 +399,61 @@ class GridSpec:
         return [self.x0, self.px_w, 0.0, self.y1, 0.0, -self.px_h]
 
 
+def layer_entries(pdf: pd.DataFrame, grid: GridSpec, burns,
+                  tile_size: int, geom_col: str = "geometry") -> list:
+    """Per feature of *pdf*, in feature order: ``(rings, burn, kind,
+    tx0, tx1, ty0, ty1)``, its rings in grid pixel space, its burn
+    value, its WKB kind and the grid tiles its bbox covers (clamped to
+    the grid, so none for a feature outside it).  *burns* holds one
+    value per feature."""
+    n_tx = -(-grid.width // tile_size)
+    n_ty = -(-grid.height // tile_size)
+    entries = []
+    for wkb, burn in zip(pdf[geom_col], burns):
+        g = parse_wkb(bytes(wkb))
+        rings = [grid.to_px(ring) for ring in g.rings()]
+        allc = np.vstack(rings)
+        entries.append((
+            rings, float(burn), g.kind,
+            max(int(allc[:, 0].min() // tile_size), 0),
+            min(int(allc[:, 0].max() // tile_size), n_tx - 1),
+            max(int(allc[:, 1].min() // tile_size), 0),
+            min(int(allc[:, 1].max() // tile_size), n_ty - 1)))
+    return entries
+
+
+def tile_cover(entries: list) -> dict[tuple[int, int], list[int]]:
+    """(tile_x, tile_y) -> the indices of the *entries* whose tile range
+    holds that tile, in feature order (the reference's burn order)."""
+    cover: dict[tuple[int, int], list[int]] = {}
+    for i, (_, _, _, tx0, tx1, ty0, ty1) in enumerate(entries):
+        for tx in range(tx0, tx1 + 1):
+            for ty in range(ty0, ty1 + 1):
+                cover.setdefault((tx, ty), []).append(i)
+    return cover
+
+
+def render_tile(entries: list, idx: list[int], tx: int, ty: int,
+                grid: GridSpec, tile_size: int, dtype: str,
+                all_touched: bool = False,
+                merge_alg: str = "replace") -> np.ndarray:
+    """The (tile_size, tile_size) raster of tile (tx, ty): entries
+    *idx* shifted into tile-local pixel space and burnt in that order;
+    pixels past the grid's edge stay 0."""
+    ox, oy = tx * tile_size, ty * tile_size
+    w = min(tile_size, grid.width - ox)
+    h = min(tile_size, grid.height - oy)
+    shift = np.array([[ox, oy]])
+    local = [([r - shift for r in entries[i][0]], entries[i][1],
+              entries[i][2]) for i in idx]
+    arr = rasterize_chunk((h, w), local, dtype, all_touched, merge_alg)
+    if (h, w) != (tile_size, tile_size):
+        full = np.zeros((tile_size, tile_size), dtype=arr.dtype)
+        full[:h, :w] = arr
+        arr = full
+    return arr
+
+
 def rasterize(
     spark: SparkSession,
     polys_pdf: pd.DataFrame,
@@ -403,107 +464,41 @@ def rasterize(
     all_touched: bool = False,
     merge_alg: str = "replace",
     tile_size: int = 256,
-    fid_col: str = "fid",
     geom_col: str = "geometry",
     codec: str | None = None,
 ) -> DataFrame:
     """Distributed rasterize -> tile DataFrame (TILE_SCHEMA, zoom=-1
-    marks a custom grid rather than WebMercatorQuad)."""
-    n_tx = (grid.width + tile_size - 1) // tile_size
-    n_ty = (grid.height + tile_size - 1) // tile_size
-
-    rows = {"tile_x": [], "tile_y": [], "gid": []}
-    geoms: dict[int, tuple[list[np.ndarray], float]] = {}
-    order_keys: dict[int, int] = {}
-    for order, (_, r) in enumerate(polys_pdf.iterrows()):
-        g = parse_wkb(bytes(r[geom_col]))
-        rings_px = [grid.to_px(ring) for ring in g.rings()]
-        burn = float(r[burn_col]) if burn_col else float(burn_value)
-        gid = int(r[fid_col])
-        geoms[gid] = (rings_px, burn, g.kind)
-        order_keys[gid] = order
-        allc = np.vstack(rings_px)
-        tx0 = max(int(allc[:, 0].min() // tile_size), 0)
-        tx1 = min(int(allc[:, 0].max() // tile_size), n_tx - 1)
-        ty0 = max(int(allc[:, 1].min() // tile_size), 0)
-        ty1 = min(int(allc[:, 1].max() // tile_size), n_ty - 1)
-        for tx in range(tx0, tx1 + 1):
-            for ty in range(ty0, ty1 + 1):
-                rows["tile_x"].append(tx)
-                rows["tile_y"].append(ty)
-                rows["gid"].append(gid)
-    if not rows["tile_x"]:
+    marks a custom grid rather than WebMercatorQuad), one row per grid
+    tile that some feature's bbox covers."""
+    burns = (polys_pdf[burn_col] if burn_col
+             else [burn_value] * len(polys_pdf))
+    entries = layer_entries(polys_pdf, grid, burns, tile_size, geom_col)
+    cover = tile_cover(entries)
+    if not cover:
         return spark.createDataFrame([], TILE_SCHEMA)
+    tiles = sorted(cover)
 
-    assign = spark.createDataFrame(pd.DataFrame(rows))
-    bc = spark.sparkContext.broadcast((geoms, order_keys))
-
-    def render_tile(geoms_, order_, tx, ty, gids):
-        ox, oy = tx * tile_size, ty * tile_size
-        w = min(tile_size, grid.width - ox)
-        h = min(tile_size, grid.height - oy)
-        # feature order must match the sequential reference burn order
-        gids = sorted(set(gids), key=lambda g: order_[g])
-        local = []
-        for gid in gids:
-            rings_px, burn, kind = geoms_[gid]
-            local.append(([r - np.array([[ox, oy]]) for r in rings_px],
-                          burn, kind))
-        arr = rasterize_chunk((h, w), local, dtype, all_touched, merge_alg)
-        if (h, w) != (tile_size, tile_size):
-            full = np.zeros((tile_size, tile_size), dtype=arr.dtype)
-            full[:h, :w] = arr
-            arr = full
-        from gdal_spark.operators.tiling import encode_tile
-
-        return encode_tile(arr, codec)
-
-    from typing import Iterator
-
-    def render_stream(batches: "Iterator[pd.DataFrame]"
-                      ) -> "Iterator[pd.DataFrame]":
-        # stream tiles in sorted order with cross-batch carry — avoids
-        # per-group applyInPandas overhead on thousands of small tiles
-        geoms_, order_ = bc.value
-        cur = None
-        gid_acc: list[int] = []
-        out = {f.name: [] for f in TILE_SCHEMA.fields}
-
-        def flush():
-            if cur is None:
-                return
-            payload, dts = render_tile(geoms_, order_, cur[0], cur[1],
-                                       gid_acc)
-            out["zoom"].append(-1)
-            out["tile_x"].append(cur[0])
-            out["tile_y"].append(cur[1])
-            out["band"].append(1)
-            out["data"].append(payload)
-            out["dtype"].append(dts)
-            out["tile_size"].append(tile_size)
-
+    @kernel_name("operators.rasterize.render")
+    def render(batches: Iterator[pd.DataFrame]
+               ) -> Iterator[pd.DataFrame]:
         for b in batches:
-            for tx, ty, gid in zip(b["tile_x"], b["tile_y"], b["gid"]):
-                t = (int(tx), int(ty))
-                if t != cur:
-                    flush()
-                    cur = t
-                    gid_acc = []
-                    if len(out["zoom"]) >= 64:
-                        yield pd.DataFrame(out)
-                        for k2 in out:
-                            out[k2] = []
-                gid_acc.append(int(gid))
-        flush()
-        if out["zoom"]:
-            yield pd.DataFrame(out)
+            ids = b["id"].tolist()
+            # at most 64 encoded tiles in flight per output batch
+            for lo in range(0, len(ids), 64):
+                keys = [tiles[i] for i in ids[lo:lo + 64]]
+                blobs = [encode_tile(render_tile(
+                    entries, cover[k], k[0], k[1], grid, tile_size, dtype,
+                    all_touched, merge_alg), codec) for k in keys]
+                yield pd.DataFrame({
+                    "zoom": -1, "tile_x": [k[0] for k in keys],
+                    "tile_y": [k[1] for k in keys], "band": 1,
+                    "data": [p for p, _ in blobs],
+                    "dtype": [d for _, d in blobs],
+                    "tile_size": tile_size})
 
-    nparts = spark.sparkContext.defaultParallelism
-    return (
-        assign.repartition(nparts, "tile_x", "tile_y")
-        .sortWithinPartitions("tile_x", "tile_y")
-        .mapInPandas(render_stream, TILE_SCHEMA)
-    )
+    n = len(tiles)
+    parts = min(spark.sparkContext.defaultParallelism, n)
+    return spark.range(0, n, 1, parts).mapInPandas(render, TILE_SCHEMA)
 
 
 def assemble_raster(tiles_pdf: pd.DataFrame, grid: GridSpec) -> np.ndarray:

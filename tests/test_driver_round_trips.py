@@ -1,8 +1,11 @@
-"""Driver-side py4j round trips of the geojoin plan build.
+"""Driver-side py4j round trips of plan builds: the geojoin chain,
+rasterize and zonal statistics.
 
 A ``get_spark`` session records no Python call site per Column call
-(origin capture), and the point-in-polygon join builds its plan from
-SQL fragments, so building it stays within a fixed number of JVM
+(origin capture), the point-in-polygon join and the zonal aggregation
+build their plans from SQL fragments, and rasterize renders the tile
+cover the driver already holds with no createDataFrame, broadcast or
+shuffle, so building each stays within a fixed number of JVM
 commands.  Commands are counted at ``ClientServerConnection``; the
 ``m`` (memory-delete) commands py4j sends when Python drops a JVM
 object reference are not counted, since when they are sent depends on
@@ -16,14 +19,22 @@ from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
 from gdal_spark.operators.knn import knn_cells
+from gdal_spark.operators.rasterize import GridSpec, rasterize
 from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons
 from gdal_spark.sources.pages import CITIES, pages_df, with_extracted_geo
-from gdal_spark.sources.polygons import poly_fixture_pdf
+from gdal_spark.operators.warp import tiles_from_array
+from gdal_spark.operators.zonal import zonal_stats
+from gdal_spark.sources.polygons import poly_fixture_pdf, random_polygons_pdf
 
 # building spatial_join_points_in_polygons over a geocoded page frame
 # sends 97 commands; with origin capture and a join predicate of
 # Column operators it sent 592, and with that predicate alone ~200
 JOIN_COMMAND_BOUND = 120
+# rasterize sends 32 (a createDataFrame of the tile cover, a broadcast
+# and a sorted shuffle sent 95); zonal_stats 76 (Column aggregates with
+# a separate un-offset select sent 180)
+RASTERIZE_COMMAND_BOUND = 45
+ZONAL_COMMAND_BOUND = 100
 
 
 def _commands(monkeypatch, build):
@@ -86,3 +97,30 @@ def test_point_join_plan_build_round_trips(spark, monkeypatch):
     sent = _commands(monkeypatch, lambda: spatial_join_points_in_polygons(
         spark, pts, polys, res=6))
     assert len(sent) <= JOIN_COMMAND_BOUND, len(sent)
+
+
+def test_rasterize_plan_build_round_trips(spark, monkeypatch):
+    grid = GridSpec(-180.0, 90.0, 1.0, 1.0, 360, 180)
+    polys = random_polygons_pdf(40, 3)
+
+    def build():
+        rasterize(spark, polys, grid, burn_col="eas_id", dtype="int32",
+                  tile_size=64)
+
+    build()
+    sent = _commands(monkeypatch, build)
+    assert len(sent) <= RASTERIZE_COMMAND_BOUND, len(sent)
+
+
+def test_zonal_plan_build_round_trips(spark, monkeypatch):
+    grid = GridSpec(-180.0, 90.0, 1.0, 1.0, 360, 180)
+    values, _w, _h = tiles_from_array(
+        spark, np.ones((180, 360), dtype=np.int32), 64)
+    zones = random_polygons_pdf(20, 4)
+
+    def build():
+        zonal_stats(spark, values, zones, grid, tile_size=64)
+
+    build()
+    sent = _commands(monkeypatch, build)
+    assert len(sent) <= ZONAL_COMMAND_BOUND, len(sent)

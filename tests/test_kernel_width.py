@@ -223,3 +223,56 @@ def test_mvt_cover_shuffle_at_default_parallelism(spark, tmp_path,
         df, str(tmp_path / "t.mvt"), minzoom=0, maxzoom=2))
     tasks = _stage_tasks(spark, jobs)
     assert max(tasks) == spark.sparkContext.defaultParallelism, tasks
+
+
+def _raster_algebra_inputs(spark, ts=64):
+    """A 360 x 180 one-degree grid (6 x 3 tiles of *ts*), 40 polygons
+    to rasterize, 20 zones and a checkpointed value raster."""
+    from gdal_spark.operators.rasterize import GridSpec
+    from gdal_spark.operators.warp import tiles_from_array
+    from gdal_spark.sources.polygons import random_polygons_pdf
+
+    grid = GridSpec(-180.0, 90.0, 1.0, 1.0, 360, 180)
+    arr = np.random.RandomState(3).randint(0, 9, (180, 360))
+    values, _w, _h = tiles_from_array(spark, arr.astype(np.int32), ts)
+    return (grid, random_polygons_pdf(40, 3), random_polygons_pdf(20, 4),
+            values.localCheckpoint())
+
+
+def test_rasterize_renders_its_cover_in_one_job(spark):
+    """The driver-side tile cover is rendered by one map-only kernel:
+    one job of min(defaultParallelism, tiles) tasks, no Exchange."""
+    from gdal_spark.operators.rasterize import rasterize
+
+    grid, polys, _zones, _values = _raster_algebra_inputs(spark)
+    out = rasterize(spark, polys, grid, burn_col="eas_id", dtype="int32",
+                    tile_size=64)
+    rows = []
+    jobs = _jobs_run(spark, lambda: rows.extend(out.collect()))
+    n_tiles = len(rows)
+    assert 1 < n_tiles
+    assert len(jobs) == 1, jobs
+    assert _stage_tasks(spark, jobs) == [
+        min(spark.sparkContext.defaultParallelism, n_tiles)]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInPandas operators.rasterize.render(") == 1, plan
+
+
+def test_raster_algebra_op_runs_six_jobs(spark):
+    """rasterize (checkpointed) -> polygonize -> zonal stats, as the
+    raster_algebra benchmark runs them: six Spark jobs."""
+    from gdal_spark.operators.polygonize import polygonize_tiles
+    from gdal_spark.operators.rasterize import rasterize
+    from gdal_spark.operators.zonal import zonal_stats
+
+    grid, polys, zones, values = _raster_algebra_inputs(spark)
+
+    def op():
+        raster = rasterize(spark, polys, grid, burn_col="eas_id",
+                           dtype="int32", tile_size=64).localCheckpoint()
+        assert polygonize_tiles(raster, grid.gt, nodata=0).collect()
+        assert zonal_stats(spark, values, zones, grid,
+                           tile_size=64).collect()
+
+    assert len(_jobs_run(spark, op)) == 6

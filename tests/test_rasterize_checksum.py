@@ -5,6 +5,7 @@ import struct
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from gdal_spark.geometry.pip import points_in_rings
 from gdal_spark.geometry.wkb import polygon_wkb
@@ -133,35 +134,104 @@ def test_replace_clamps_dtype():
     assert grid.max() == 255  # GDALCopyWord clamp
 
 
-def test_distributed_rasterize_equals_single_chunk(spark):
-    rng = np.random.RandomState(5)
-    polys = []
-    for fid in range(12):
-        cx, cy = rng.uniform(10, 90), rng.uniform(10, 90)
+def _star_polygons(n, lo, hi, r, seed):
+    """*n* star-shaped (non-self-intersecting) rings, centres uniform
+    in [lo, hi), vertices within *r* of them."""
+    rng = np.random.RandomState(seed)
+    rings = []
+    for _ in range(n):
+        cx, cy = rng.uniform(lo, hi), rng.uniform(lo, hi)
         pts = np.column_stack([
-            cx + rng.uniform(-9, 9, 6), cy + rng.uniform(-9, 9, 6)])
+            cx + rng.uniform(-r, r, 6), cy + rng.uniform(-r, r, 6)])
         c = pts.mean(axis=0)
-        ang = np.arctan2(pts[:, 1] - c[1], pts[:, 0] - c[0])
-        ring = pts[np.argsort(ang)]
-        polys.append({
-            "fid": fid,
-            "burn": float(fid + 1),
-            "geometry": polygon_wkb([ring]),
-        })
-    pdf = pd.DataFrame(polys)
-    grid = GridSpec(x0=0.0, y1=100.0, px_w=1.0, px_h=1.0,
-                    width=100, height=100)
-    tiles = rasterize(spark, pdf, grid, burn_col="burn", dtype="float32",
-                      tile_size=32, merge_alg="add")
-    got = assemble_raster(tiles.toPandas(), grid)
-    # single-chunk reference with the same kernel
-    geoms = []
-    for p in polys:
-        from gdal_spark.geometry.wkb import parse_wkb
+        ring = pts[np.argsort(np.arctan2(pts[:, 1] - c[1],
+                                         pts[:, 0] - c[0]))]
+        rings.append(np.vstack([ring, ring[:1]]))
+    return [polygon_wkb([ring]) for ring in rings]
 
-        rings = [grid.to_px(r) for r in parse_wkb(p["geometry"]).rings()]
-        geoms.append((rings, p["burn"]))
-    want = rasterize_chunk((100, 100), geoms, "float32", merge_alg="add")
+
+def _layer(case):
+    """(wkbs, grid, rasterize options) for one distributed case."""
+    from gdal_spark.geometry.wkb import linestring_wkb, multipoint_wkb
+
+    square = GridSpec(x0=0.0, y1=100.0, px_w=1.0, px_h=1.0,
+                      width=100, height=100)
+    if case == "add":
+        return (_star_polygons(12, 10, 90, 9, 5), square,
+                {"merge_alg": "add"})
+    if case == "ragged_grid":
+        # 90 x 70 is no multiple of the 32-pixel tile on either axis
+        return (_star_polygons(12, 5, 95, 12, 6),
+                GridSpec(0.0, 100.0, 1.0, 1.0, 90, 70), {})
+    if case == "outside_grid":
+        # centres from -40 to 140: features straddle each edge or lie
+        # wholly outside the grid
+        return _star_polygons(16, -40, 140, 15, 7), square, {}
+    if case == "all_touched":
+        return (_star_polygons(12, 5, 95, 9, 8), square,
+                {"all_touched": True})
+    if case == "points_and_lines":
+        rng = np.random.RandomState(9)
+        wkbs = [multipoint_wkb(rng.uniform(-5, 105, (8, 2)))
+                for _ in range(4)]
+        wkbs += [linestring_wkb(rng.uniform(-5, 105, (4, 2)))
+                 for _ in range(4)]
+        return wkbs, square, {"merge_alg": "add"}
+    raise ValueError(case)
+
+
+@pytest.mark.parametrize("case", ["add", "ragged_grid", "outside_grid",
+                                  "all_touched", "points_and_lines"])
+def test_distributed_rasterize_equals_single_chunk(spark, case):
+    """Tiled rasterize equals one whole-grid chunk of the same kernel."""
+    from gdal_spark.geometry.wkb import parse_wkb
+
+    wkbs, grid, opts = _layer(case)
+    pdf = pd.DataFrame({"fid": np.arange(len(wkbs)),
+                        "burn": np.arange(1.0, len(wkbs) + 1),
+                        "geometry": wkbs})
+    tiles = rasterize(spark, pdf, grid, burn_col="burn", dtype="float32",
+                      tile_size=32, **opts).toPandas()
+    got = assemble_raster(tiles, grid)
+    geoms = []
+    for w, burn in zip(wkbs, pdf["burn"]):
+        g = parse_wkb(w)
+        geoms.append(([grid.to_px(r) for r in g.rings()], burn, g.kind))
+    want = rasterize_chunk((grid.height, grid.width), geoms, "float32",
+                           **opts)
+    assert want.any()
+    np.testing.assert_array_equal(got, want)
+    # one row per covered tile
+    assert not tiles.duplicated(["tile_x", "tile_y"]).any()
+    assert (tiles["zoom"] == -1).all() and (tiles["band"] == 1).all()
+
+
+def test_distributed_rasterize_of_empty_layer(spark):
+    from gdal_spark.operators.tiling import TILE_SCHEMA
+
+    grid = GridSpec(0.0, 100.0, 1.0, 1.0, 100, 100)
+    pdf = pd.DataFrame({"fid": np.zeros(0, np.int64),
+                        "geometry": pd.Series([], dtype=object)})
+    tiles = rasterize(spark, pdf, grid, burn_value=1.0, tile_size=32)
+    assert tiles.schema == TILE_SCHEMA
+    assert tiles.count() == 0
+
+
+def test_features_sharing_a_fid_all_burn(spark):
+    """GDAL burns every feature, whatever its fid: two squares that
+    share fid 1 (burns 5 and 9) both reach the raster."""
+    a = np.array([(2, 2), (10, 2), (10, 10), (2, 10), (2, 2)], dtype=float)
+    b = np.array([(20, 20), (30, 20), (30, 30), (20, 30), (20, 20)],
+                 dtype=float)
+    grid = GridSpec(0.0, 40.0, 1.0, 1.0, 40, 40)
+    pdf = pd.DataFrame({"fid": [1, 1], "burn": [5.0, 9.0],
+                        "geometry": [polygon_wkb([grid.to_px(a)]),
+                                     polygon_wkb([grid.to_px(b)])]})
+    tiles = rasterize(spark, pdf, grid, burn_col="burn", dtype="uint8",
+                      tile_size=16)
+    got = assemble_raster(tiles.toPandas(), grid)
+    want = rasterize_chunk((40, 40), [([a], 5.0), ([b], 9.0)], "uint8")
+    assert (want == 5).sum() == 64 and (want == 9).sum() == 100
     np.testing.assert_array_equal(got, want)
 
 

@@ -95,11 +95,6 @@ LAT_FROM_KEY_SQL = (
 )
 
 
-def tile_res(zoom: int) -> float:
-    """Resolution (m/px) of WebMercatorQuad at *zoom* (256px tiles)."""
-    return 2.0 * ORIGIN / (TILE_SIZE * (1 << zoom))
-
-
 def tile_span(zoom: int) -> float:
     """Width/height in meters of one tile at *zoom*."""
     return 2.0 * ORIGIN / (1 << zoom)

@@ -227,11 +227,6 @@ def _isect_pairs_block(sa: np.ndarray, ca: np.ndarray
     return si, cj, t[si, cj], u[si, cj]
 
 
-def _ring_array(head: _V) -> np.ndarray:
-    return np.array([(v.x, v.y) for v in _iter_ring(head)],
-                    dtype=np.float64)
-
-
 def _point_in(head_arr: np.ndarray, x: float, y: float) -> bool:
     """Single-point inline of points_in_rings' crossing rule
     (ogrlinearring.cpp:452-521 semantics) over an OPEN ring — the

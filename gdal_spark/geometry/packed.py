@@ -78,18 +78,3 @@ def geom_length(geom: Geom) -> float:
         d = np.diff(part, axis=0)
         total += float(np.sqrt((d * d).sum(axis=1)).sum())
     return total
-
-
-def pack_rings(rings: list[np.ndarray]):
-    """Flatten rings -> (coords (n,2), ring_offsets) packed arrays."""
-    offs = np.zeros(len(rings) + 1, dtype=np.int64)
-    for i, r in enumerate(rings):
-        offs[i + 1] = offs[i] + len(r)
-    coords = (
-        np.vstack(rings) if rings else np.zeros((0, 2), dtype=np.float64)
-    )
-    return coords, offs
-
-
-def unpack_rings(coords: np.ndarray, offs: np.ndarray) -> list[np.ndarray]:
-    return [coords[offs[i]:offs[i + 1]] for i in range(len(offs) - 1)]

@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from gdal_spark.geometry.wkb import Geom
-
 # Max elements per broadcast temp (points_chunk * segments).
 _CHUNK_BUDGET = 1 << 22
 
@@ -84,36 +82,4 @@ def points_in_rings(px: np.ndarray, py: np.ndarray,
             j = np.nonzero(sub)[0]
             cross[j] += crossings_in_ring(px[idx[j]], py[idx[j]], ring)
     res[idx] = (cross % 2) != 0
-    return res
-
-
-def points_in_geom(px: np.ndarray, py: np.ndarray, geom: Geom) -> np.ndarray:
-    return points_in_rings(px, py, geom.rings())
-
-
-def points_on_boundary(px: np.ndarray, py: np.ndarray,
-                       rings: list[np.ndarray], eps: float = 0.0) -> np.ndarray:
-    """Point-on-ring-boundary (ogrlinearring.cpp:533): collinear and
-    within the segment's bounding box."""
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    res = np.zeros(len(px), dtype=bool)
-    for ring in rings:
-        n = len(ring)
-        if n < 2:
-            continue
-        nseg = n - 1
-        step = max(1, _CHUNK_BUDGET // max(nseg, 1))
-        for s in range(0, len(px), step):
-            e = min(s + step, len(px))
-            x1 = ring[1:, 0][None, :] - px[s:e, None]
-            y1 = ring[1:, 1][None, :] - py[s:e, None]
-            x2 = ring[:-1, 0][None, :] - px[s:e, None]
-            y2 = ring[:-1, 1][None, :] - py[s:e, None]
-            cross = x1 * y2 - x2 * y1
-            within = (
-                (np.minimum(x1, x2) <= 0) & (np.maximum(x1, x2) >= 0)
-                & (np.minimum(y1, y2) <= 0) & (np.maximum(y1, y2) >= 0)
-            )
-            res[s:e] |= (np.abs(cross) <= eps).__and__(within).any(axis=1)
     return res

@@ -138,14 +138,6 @@ def _node_rings(rings: list[np.ndarray]) -> list[np.ndarray]:
     return out
 
 
-def _ring_nseg(ring: np.ndarray) -> int:
-    r = np.asarray(ring)
-    n = len(r)
-    if np.array_equal(r[0], r[-1]):
-        return n - 1
-    return n
-
-
 def _pt_in_cycle(pts: np.ndarray, px: float, py: float) -> bool:
     """Even-odd point-in-polygon against one face cycle (orientation
     insensitive; pts closed)."""

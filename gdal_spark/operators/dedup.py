@@ -202,39 +202,6 @@ def minhash_lsh_candidates(
     )
 
 
-def minhash_jaccard_estimate(sigs_a: F.Column, sigs_b: F.Column,
-                             num_hashes: int | None = None) -> F.Column:
-    """Estimated Jaccard = fraction of equal signature slots.
-
-    With ``num_hashes`` known the comparison unrolls into a flat sum
-    of slot equalities — plain codegen'd expressions.  The generic
-    path (unknown width) keeps the higher-order zip_with/aggregate
-    form, which Catalyst evaluates INTERPRETED and pays heavy
-    first-run cost (CLAUDE.md lambda lesson)."""
-    if isinstance(sigs_a, str):
-        sigs_a = F.col(sigs_a)
-    if isinstance(sigs_b, str):
-        sigs_b = F.col(sigs_b)
-    if num_hashes:
-        eq = [
-            F.coalesce(
-                (sigs_a[i] == sigs_b[i]).cast("int"), F.lit(0))
-            for i in range(num_hashes)
-        ]
-        total = eq[0]
-        for term in eq[1:]:
-            total = total + term
-        return total.cast("double") / F.lit(float(num_hashes))
-    return (
-        F.aggregate(
-            F.zip_with(sigs_a, sigs_b, lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ).cast("double")
-        / F.size(sigs_a)
-    )
-
-
 def minhash_lsh_dedup(
     df: DataFrame, text_col: str = "text", key_col: str = "doc_id",
     num_hashes: int = 64, shingle: int = 5, bands: int = 16,

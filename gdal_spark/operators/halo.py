@@ -16,8 +16,8 @@ Here a tile's k-pixel neighbourhood crosses ONE exchange:
 Wire format (``_HALO_SCHEMA``): ``rel`` 0 is the centre, 1..8 a block
 from the neighbour at ``-_REL[rel]`` of the destination.  A block
 whose elements are all equal ships as one value with ``h = -1`` (most
-tiles of a sparse density raster or a cutline mask are all-zero, so a
-512 KB tile crosses as 8 bytes).  Any other centre passes the tile's
+tiles of a sparse density raster are all-zero, so a 512 KB tile
+crosses as 8 bytes).  Any other centre passes the tile's
 original payload through, deflate-coded or not, under its codec-aware
 dtype string; other blocks ship raw in the element dtype.
 """
@@ -115,19 +115,12 @@ def emit_halos(tiles: DataFrame, k: int) -> DataFrame:
 
 
 def assemble_halo_canvas(pdf: pd.DataFrame, ts: int, k: int,
-                         fill: float,
-                         allow_missing_center: bool = False
-                         ) -> np.ndarray | None:
+                         fill: float) -> np.ndarray | None:
     """Place one tile's centre and k-halo blocks into a float64
     (ts+2k, ts+2k) canvas; cells no row provides hold ``fill``.
     Returns None for a group with no centre row (a halo addressed to
-    a hole).
-
-    With ``allow_missing_center`` a group holding only neighbour
-    blocks assembles over a fill-valued centre (the cutline path
-    synthesizes all-outside centres this way instead of shipping zero
-    tiles through the exchange)."""
-    if not allow_missing_center and not (pdf["rel"] == 0).any():
+    a hole)."""
+    if not (pdf["rel"] == 0).any():
         return None
     canvas = np.full((ts + 2 * k, ts + 2 * k), fill, dtype=np.float64)
     for rel, data, dts, h in zip(pdf["rel"], pdf["data"], pdf["dtype"],

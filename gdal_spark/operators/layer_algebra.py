@@ -87,23 +87,6 @@ OVERLAY_SCHEMA = StructType([
 ])
 
 
-def _bbox_pairs(input_pdf: pd.DataFrame, method_pdf: pd.DataFrame
-                ) -> pd.DataFrame:
-    """bbox-overlap candidate pairs (the prefilter of
-    ogrlayer.cpp:4004)."""
-    rows = {"fid": [], "method_fid": []}
-    iboxes = [(int(r["fid"]), parse_wkb(bytes(r["geometry"])).bbox())
-              for _, r in input_pdf.iterrows()]
-    mboxes = [(int(r["fid"]), parse_wkb(bytes(r["geometry"])).bbox())
-              for _, r in method_pdf.iterrows()]
-    for fid, (ix0, iy0, ix1, iy1) in iboxes:
-        for mfid, (mx0, my0, mx1, my1) in mboxes:
-            if ix0 <= mx1 and mx0 <= ix1 and iy0 <= my1 and my0 <= iy1:
-                rows["fid"].append(fid)
-                rows["method_fid"].append(mfid)
-    return pd.DataFrame(rows)
-
-
 def intersection(spark: SparkSession, input_df: DataFrame,
                  method_pdf: pd.DataFrame,
                  geom_col: str = "geometry") -> DataFrame:

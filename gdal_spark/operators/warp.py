@@ -365,12 +365,6 @@ def _footprint_stat_loop(patch, lx, ly, stat, nodata, fill):
     return out
 
 
-def _avg_fast_integer(patch, factor_x, factor_y):
-    h, w = patch.shape
-    return patch.reshape(h // factor_y, factor_y, w // factor_x,
-                         factor_x).mean(axis=(1, 3))
-
-
 # --- distributed warp ---------------------------------------------------
 
 def warp_tiles(

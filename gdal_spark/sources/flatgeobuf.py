@@ -104,10 +104,6 @@ _SPARK_TO_CT = {"tinyint": CT_BYTE, "boolean": CT_BOOL,
 
 # ================================================ flatbuffers read
 
-def _u8(b, o):
-    return b[o]
-
-
 def _u16(b, o):
     return struct.unpack_from("<H", b, o)[0]
 

@@ -157,22 +157,34 @@ def test_neighbors_renders_at_default_parallelism(spark):
     assert max(tasks) == spark.sparkContext.defaultParallelism, tasks
 
 
-def test_cutline_renders_at_default_parallelism(spark):
-    """The distributed cutline's alpha render and blend run at
-    defaultParallelism, not max(defaultParallelism, 8)."""
+@pytest.mark.parametrize("blend,build_jobs", [(0.0, 0), (3.0, 3)],
+                         ids=["hard_cut", "feather"])
+def test_cutline_clips_in_one_map_only_kernel(spark, blend, build_jobs):
+    """The cutline clip is one map-only kernel.  On a dense 4x4-tile
+    lattice a hard cut builds with no job and a feather runs only the
+    lattice probe's jobs.  Either collects in one job through exactly
+    one MapInPandas node, the clip kernel."""
     from gdal_spark.operators.cutline import cutline_clip
     from gdal_spark.operators.rasterize import GridSpec
+    from gdal_spark.operators.warp import tiles_from_array
 
-    tiles = _one_partition_raster(spark)
-    grid = GridSpec(0.0, 48.0, 1.0, 1.0, 48, 48)
+    arr = np.random.RandomState(5).randint(0, 9, (64, 64)) \
+        .astype(np.float64)
+    tiles, _w, _h = tiles_from_array(spark, arr, tile_size=16)
+    grid = GridSpec(0.0, 64.0, 1.0, 1.0, 64, 64)
     ring = np.array([(5.5, 5.5), (40.5, 9.5), (37.5, 41.5), (8.5, 30.5),
                      (5.5, 5.5)])
     cut = pd.DataFrame({"fid": [1], "geometry": [polygon_wkb([ring])]})
-    jobs = _jobs_run(spark, lambda: cutline_clip(
-        spark, tiles, cut, grid, blend_px=3.0, tile_size=16,
-        method="distributed").collect())
-    tasks = _stage_tasks(spark, jobs)
-    assert max(tasks) == spark.sparkContext.defaultParallelism, tasks
+    built, rows = [], []
+    jobs = _jobs_run(spark, lambda: built.append(cutline_clip(
+        spark, tiles, cut, grid, blend_px=blend, tile_size=16)))
+    assert len(jobs) == build_jobs, jobs
+    jobs = _jobs_run(spark, lambda: rows.extend(built[0].collect()))
+    assert len(jobs) == 1, jobs
+    assert len(rows) == 16
+    plan = built[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "MapInPandas operators.cutline.clip(" in plan, plan
 
 
 def _gtiff_vrt(tmp_path):

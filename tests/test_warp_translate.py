@@ -122,9 +122,13 @@ def test_warp_4326_3857_samples_correctly(spark):
 
 def test_cutline_clip_blend_matches_single_array(spark):
     """Cutline clip with blend distance (gdalcutline.cpp:397
-    semantics): distributed tiles == the single-array kernel
+    semantics): the tiled clip == the single-array kernel
     (rasterize mask -> signed EDT -> feathered alpha -> blend),
-    for both the hard cut and a fractional blend."""
+    for both the hard cut and a fractional blend, with a one-feature
+    layer and a layer of hundreds of features.  Where alpha saturates
+    the clip selects src or nodata, so a NaN or inf src pixel outside
+    the cut comes out as nodata and a NaN nodata reaches no pixel
+    inside it (a multiply-blend gives NaN for 0 * NaN and 0 * inf)."""
     import numpy as np
     import pandas as pd
 
@@ -140,51 +144,64 @@ def test_cutline_clip_blend_matches_single_array(spark):
     grid = GridSpec(0.0, float(h), 1.0, 1.0, w, h)
     rng = np.random.RandomState(5)
     src = rng.randint(1, 255, (h, w)).astype(np.float64)
-    tiles, _, _ = tiles_from_array(spark, src, tile_size=ts)
+    src_nan = src.copy()
+    src_nan[rng.rand(h, w) < 0.05] = np.nan
+    src_nan[rng.rand(h, w) < 0.02] = np.inf
+    cases = [(arr, tiles_from_array(spark, arr, tile_size=ts)[0], nd)
+             for arr, nd in ((src, -9.0), (src_nan, -9.0),
+                             (src_nan, np.nan))]
 
     ring = np.array([(20.0, 30.0), (170.0, 50.0), (150.0, 160.0),
                      (60.0, 170.0), (20.0, 30.0)])
-    cut = pd.DataFrame({"fid": np.array([0], dtype=np.int64),
-                        "geometry": [polygon_wkb([ring])]})
-
-    # single-array oracle, zero-padded k beyond the raster edge
-    ring_px = np.column_stack([ring[:, 0] - grid.x0,
-                               grid.y1 - ring[:, 1]])
-    mask_arr = rasterize_chunk((h, w), [([ring_px], 1.0)],
-                               "uint8") > 0
-    for blend in (0.0, 3.5):
-        k = max(1, int(np.ceil(blend)))
-        padded = np.zeros((h + 2 * k, w + 2 * k), dtype=bool)
-        padded[k:-k, k:-k] = mask_arr
-        alpha = blend_alpha(padded, blend)[k:-k, k:-k]
-        want = alpha * src + (1 - alpha) * (-9.0)
-
-        for method in ("broadcast", "distributed"):
-            out = cutline_clip(spark, tiles, cut, grid,
-                               blend_px=blend, nodata=-9.0,
-                               tile_size=ts, method=method)
-            got = assemble_raster(out.toPandas(), grid)
-            np.testing.assert_allclose(got, want, rtol=1e-12,
-                                       atol=1e-9, err_msg=method)
-        if blend > 0:
-            frac = (alpha > 0) & (alpha < 1)
-            assert frac.sum() > 100  # feather band actually exercised
+    # a layer of 324 small squares, some across tile and grid edges
+    squares = [np.array([(x, y), (x + 5.0, y), (x + 5.0, y + 5.0),
+                         (x, y + 5.0), (x, y)])
+               for x in range(3, w, 11) for y in range(2, h, 11)]
+    for rings in ([ring], squares):
+        cut = pd.DataFrame({"fid": np.arange(len(rings), dtype=np.int64),
+                            "geometry": [polygon_wkb([r]) for r in rings]})
+        # single-array oracle, zero-padded k beyond the raster edge
+        mask_arr = rasterize_chunk(
+            (h, w), [([np.column_stack([r[:, 0] - grid.x0,
+                                        grid.y1 - r[:, 1]])], 1.0)
+                     for r in rings], "uint8") > 0
+        for blend in (0.0, 3.5):
+            k = max(1, int(np.ceil(blend)))
+            padded = np.zeros((h + 2 * k, w + 2 * k), dtype=bool)
+            padded[k:-k, k:-k] = mask_arr
+            alpha = blend_alpha(padded, blend)[k:-k, k:-k]
+            for arr, tiles, nd in cases:
+                with np.errstate(invalid="ignore"):
+                    want = np.where(alpha >= 1, arr, np.where(
+                        alpha <= 0, nd, alpha * arr + (1 - alpha) * nd))
+                if blend == 0:
+                    np.testing.assert_array_equal(
+                        want, np.where(mask_arr, arr, nd))
+                out = cutline_clip(spark, tiles, cut, grid,
+                                   blend_px=blend, nodata=nd,
+                                   tile_size=ts)
+                got = assemble_raster(out.toPandas(), grid)
+                np.testing.assert_allclose(
+                    got, want, rtol=1e-12, atol=1e-9, equal_nan=True,
+                    err_msg=f"{len(rings)} features, blend {blend}, "
+                            f"nodata {nd}")
+            if blend > 0:
+                frac = (alpha > 0) & (alpha < 1)
+                assert frac.sum() > 100  # feather band exercised
 
 
 def test_cutline_boundary_band_classification(spark):
-    """Boundary-band execution: a big axis-aligned cutline on an 8x8
-    tile lattice yields pure-inside and pure-outside tiles; only the
-    boundary band does distance work, and the full output still
-    matches the single-array kernel."""
+    """A big axis-aligned cutline on an 8x8 tile lattice, whose tiles
+    are pure inside, pure outside or on the boundary: the output
+    matches the single-array kernel, and a blend wider than a tile is
+    rejected."""
     import numpy as np
     import pandas as pd
 
     from gdal_spark.geometry.wkb import polygon_wkb
-    from gdal_spark.operators.cutline import (
-        blend_alpha, classify_cutline_tiles, cutline_clip,
-    )
+    from gdal_spark.operators.cutline import blend_alpha, cutline_clip
     from gdal_spark.operators.rasterize import (
-        GridSpec, assemble_raster, rasterize, rasterize_chunk,
+        GridSpec, assemble_raster, rasterize_chunk,
     )
     from gdal_spark.operators.warp import tiles_from_array
 
@@ -205,27 +222,7 @@ def test_cutline_boundary_band_classification(spark):
     cut = pd.DataFrame({"fid": np.array([0], dtype=np.int64),
                         "geometry": [polygon_wkb([ring])]})
 
-    mask = rasterize(spark, cut, grid, burn_value=1.0,
-                     dtype="uint8", tile_size=ts)
-    keys = tiles.select("zoom", "tile_x", "tile_y",
-                        "tile_size").distinct()
-    cls = classify_cutline_tiles(spark, keys, mask).toPandas()
-    by = {(int(r["tile_x"]), int(r["tile_y"])): r["cls"]
-          for _, r in cls.iterrows()}
-    assert len(by) == n * n
-    # center block pure inside
-    for t in ((2, 2), (3, 3), (4, 4), (2, 4)):
-        assert by[t] == "inside", (t, by[t])
-    # far corner pure outside
-    for t in ((7, 7), (7, 0), (0, 7)):
-        assert by[t] == "outside", (t, by[t])
-    # the rectangle's edge tiles are boundary
-    for t in ((1, 1), (5, 5), (1, 3), (5, 2)):
-        assert by[t] == "boundary", (t, by[t])
-    n_boundary = (cls["cls"] == "boundary").sum()
-    assert 0 < n_boundary < n * n  # band strictly smaller than lattice
-
-    # full output still exact vs the single-array kernel
+    # output exact vs the single-array kernel
     ring_px = np.column_stack([ring[:, 0] - grid.x0,
                                grid.y1 - ring[:, 1]])
     mask_arr = rasterize_chunk((h, w), [([ring_px], 1.0)],
@@ -250,10 +247,9 @@ def test_cutline_boundary_band_classification(spark):
 
 def test_cutline_sparse_lattice(spark):
     """A SPARSE src lattice (missing tiles): mask content on absent
-    tiles must not leak into classification — a tile whose only mask
-    neighbors lie outside the lattice is not 'boundary' (no alpha
-    canvas would exist for it), and the output matches the
-    single-array kernel with the absent region's mask zeroed."""
+    tiles must not leak into their neighbours' windows, so the output
+    matches the single-array kernel with the absent region's mask
+    zeroed, for a hard cut and a feather."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -293,19 +289,6 @@ def test_cutline_sparse_lattice(spark):
     ):
         cut = pd.DataFrame({"fid": np.array([0], dtype=np.int64),
                             "geometry": [polygon_wkb([ring])]})
-        blend = 2.5
-        k = max(1, int(np.ceil(blend)))
-        outs = {
-            method: cutline_clip(spark, sparse, cut, grid,
-                                 blend_px=blend, nodata=-7.0,
-                                 tile_size=ts,
-                                 method=method).toPandas()
-            for method in ("broadcast", "distributed")
-        }
-        out = outs["broadcast"]
-        assert len(out) == n * n - 1  # one row per present tile
-        assert len(outs["distributed"]) == n * n - 1
-
         # oracle: zero the mask on the absent tile, then per-tile
         # compare (assemble_raster can't hold a hole)
         ring_px = np.column_stack([ring[:, 0] - grid.x0,
@@ -313,19 +296,23 @@ def test_cutline_sparse_lattice(spark):
         mask_arr = rasterize_chunk((h, w), [([ring_px], 1.0)],
                                    "uint8") > 0
         mask_arr[2 * ts:3 * ts, 2 * ts:3 * ts] = False
-        padded = np.zeros((h + 2 * k, w + 2 * k), dtype=bool)
-        padded[k:-k, k:-k] = mask_arr
-        alpha = blend_alpha(padded, blend)[k:-k, k:-k]
-        want = alpha * src + (1 - alpha) * (-7.0)
-        for method, mo in outs.items():
-            for _, r in mo.iterrows():
+        for blend in (0.0, 2.5):
+            k = max(1, int(np.ceil(blend)))
+            padded = np.zeros((h + 2 * k, w + 2 * k), dtype=bool)
+            padded[k:-k, k:-k] = mask_arr
+            alpha = blend_alpha(padded, blend)[k:-k, k:-k]
+            want = alpha * src + (1 - alpha) * (-7.0)
+            out = cutline_clip(spark, sparse, cut, grid, blend_px=blend,
+                               nodata=-7.0, tile_size=ts).toPandas()
+            assert len(out) == n * n - 1  # one row per present tile
+            for _, r in out.iterrows():
                 tx, ty = int(r["tile_x"]), int(r["tile_y"])
                 got = decode_tile(r["data"], r["dtype"], ts)
                 np.testing.assert_allclose(
                     got, want[ty * ts:(ty + 1) * ts,
                               tx * ts:(tx + 1) * ts],
                     rtol=1e-12, atol=1e-9,
-                    err_msg=f"{method} tile {tx},{ty}")
+                    err_msg=f"blend {blend} tile {tx},{ty}")
 
 
 def test_footprint_stat_stable_at_world_scale(spark):
@@ -367,11 +354,12 @@ def test_footprint_stat_stable_at_world_scale(spark):
 
 
 def test_cutline_empty_layer_and_multiband(spark, tmp_path):
-    """Review regressions: (a) an EMPTY cutline layer routes through
-    the broadcast path without crashing — every tile is outside
-    (constant nodata); (b) a multi-band raster blends every band
-    with the same per-tile window mask (the kernel's cross-band
-    carry), matching the per-band single-array oracle."""
+    """(a) An EMPTY cutline layer, one wholly off the grid, or one of
+    EMPTY geometries only, clips without crashing — every tile is
+    outside (constant nodata);
+    (b) a multi-band raster clips every band with the same per-tile
+    window mask (the kernel's cross-band carry), matching the
+    per-band single-array oracle, for a hard cut and a feather."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -392,38 +380,50 @@ def test_cutline_empty_layer_and_multiband(spark, tmp_path):
     t2, _, _ = tiles_from_array(spark, band2, tile_size=ts)
     tiles = t1.unionByName(t2.withColumn("band", F.lit(2)))
 
-    # (a) empty cutline: all-outside, no crash, one row per src row
+    # (a) empty / off-grid cutline: all-outside, no crash, one row
+    # per src row
     empty = pd.DataFrame({"fid": pd.Series(dtype=np.int64),
                           "geometry": pd.Series(dtype=object)})
-    out = cutline_clip(spark, tiles, empty, grid, blend_px=2.0,
-                       nodata=-5.0, tile_size=ts).toPandas()
-    assert len(out) == 2 * n * n
-    for _, r in out.iterrows():
-        arr = decode_tile(r["data"], r["dtype"], ts)
-        assert (arr == -5.0).all()
+    off = np.array([(w + 10.0, 10.0), (w + 50.0, 10.0),
+                    (w + 50.0, 50.0), (w + 10.0, 10.0)])
+    off_grid = pd.DataFrame({"fid": np.array([0], dtype=np.int64),
+                             "geometry": [polygon_wkb([off])]})
+    only_empty = pd.DataFrame({"fid": np.array([0], dtype=np.int64),
+                               "geometry": [polygon_wkb([])]})
+    for layer in (empty, off_grid, only_empty):
+        out = cutline_clip(spark, tiles, layer, grid, blend_px=2.0,
+                           nodata=-5.0, tile_size=ts).toPandas()
+        assert len(out) == 2 * n * n
+        for _, r in out.iterrows():
+            arr = decode_tile(r["data"], r["dtype"], ts)
+            assert (arr == -5.0).all()
 
-    # (b) multi-band blend == per-band oracle
+    # (b) multi-band blend == per-band oracle; the layer's EMPTY
+    # feature draws nothing
     ring = np.array([(10.0, 10.0), (80.0, 20.0), (70.0, 85.0),
                      (15.0, 80.0), (10.0, 10.0)])
-    cut = pd.DataFrame({"fid": np.array([0], dtype=np.int64),
-                        "geometry": [polygon_wkb([ring])]})
-    blend = 2.5
-    k = max(1, int(np.ceil(blend)))
+    cut = pd.DataFrame({"fid": np.array([0, 1], dtype=np.int64),
+                        "geometry": [polygon_wkb([]),
+                                     polygon_wkb([ring])]})
     ring_px = np.column_stack([ring[:, 0] - grid.x0,
                                grid.y1 - ring[:, 1]])
     mask_arr = rasterize_chunk((h, w), [([ring_px], 1.0)],
                                "uint8") > 0
-    padded = np.zeros((h + 2 * k, w + 2 * k), dtype=bool)
-    padded[k:-k, k:-k] = mask_arr
-    alpha = blend_alpha(padded, blend)[k:-k, k:-k]
-    got = cutline_clip(spark, tiles, cut, grid, blend_px=blend,
-                       nodata=0.0, tile_size=ts,
-                       method="broadcast").toPandas()
-    for _, r in got.iterrows():
-        tx, ty, b = int(r["tile_x"]), int(r["tile_y"]), int(r["band"])
-        src = (band1 if b == 1 else band2)[
-            ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
-        a = alpha[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
-        np.testing.assert_allclose(
-            decode_tile(r["data"], r["dtype"], ts), a * src,
-            rtol=1e-12, atol=1e-9, err_msg=f"band {b} tile {tx},{ty}")
+    for blend in (0.0, 2.5):
+        k = max(1, int(np.ceil(blend)))
+        padded = np.zeros((h + 2 * k, w + 2 * k), dtype=bool)
+        padded[k:-k, k:-k] = mask_arr
+        alpha = blend_alpha(padded, blend)[k:-k, k:-k]
+        got = cutline_clip(spark, tiles, cut, grid, blend_px=blend,
+                           nodata=0.0, tile_size=ts).toPandas()
+        assert len(got) == 2 * n * n
+        for _, r in got.iterrows():
+            tx, ty = int(r["tile_x"]), int(r["tile_y"])
+            b = int(r["band"])
+            src = (band1 if b == 1 else band2)[
+                ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
+            a = alpha[ty * ts:(ty + 1) * ts, tx * ts:(tx + 1) * ts]
+            np.testing.assert_allclose(
+                decode_tile(r["data"], r["dtype"], ts), a * src,
+                rtol=1e-12, atol=1e-9,
+                err_msg=f"blend {blend} band {b} tile {tx},{ty}")

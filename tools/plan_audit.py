@@ -187,11 +187,13 @@ def main() -> None:
     checks.append(("overlay prefilter uses a broadcast LEFT SEMI",
                    "LeftSemi" in p7_opt))
 
-    # cutline boundary-band: the alpha/EDT stage input is bounded by
-    # the BOUNDARY class — inside/outside tiles never enter the halo
-    # exchange (asserted on the classifier the halo path is keyed by)
-    from gdal_spark.operators.cutline import classify_cutline_tiles
-    from gdal_spark.operators.rasterize import GridSpec, rasterize
+    # cutline: ONE map-only kernel.  Tiles whose window misses every
+    # cutline feature's tile range cross as NULL-payload rows (a CASE
+    # WHEN projection, so their bytes never enter Arrow), never as a
+    # second union arm re-executing the source subtree, and no mask
+    # tiles cross an exchange
+    from gdal_spark.operators.cutline import cutline_clip
+    from gdal_spark.operators.rasterize import GridSpec
     from gdal_spark.operators.warp import tiles_from_array
 
     ts, nt = 32, 8
@@ -203,46 +205,18 @@ def main() -> None:
                       (6.0 * ts, nt * ts - 6.0 * ts),
                       (6.0 * ts, nt * ts - ts), (ts, nt * ts - ts),
                       (ts, nt * ts - 6.0 * ts)])
-    cmask = rasterize(
-        spark,
-        pd.DataFrame({"fid": np.array([0], dtype=np.int64),
-                      "geometry": [polygon_wkb([cring])]}),
-        cgrid, burn_value=1.0, dtype="uint8", tile_size=ts)
-    ckeys = ctiles.select("zoom", "tile_x", "tile_y",
-                          "tile_size").distinct()
-    ccounts = {r["cls"]: r["count"]
-               for r in classify_cutline_tiles(spark, ckeys, cmask)
-               .groupBy("cls").count().collect()}
-    checks.append((
-        "cutline alpha stage input bounded by the boundary band "
-        f"(boundary={ccounts.get('boundary', 0)} < lattice={nt * nt}"
-        f", inside={ccounts.get('inside', 0)} and "
-        f"outside={ccounts.get('outside', 0)} skip distance work)",
-        0 < ccounts.get("boundary", 0) < nt * nt
-        and ccounts.get("inside", 0) > 0
-        and ccounts.get("outside", 0) > 0))
-
-    # cutline broadcast path: ONE arm, one Python kernel.  Tiles
-    # whose haloed window misses the cutline pixel bbox cross as
-    # NULL-payload rows (a CASE WHEN projection — their bytes never
-    # enter Arrow) instead of a second union arm re-executing the
-    # source subtree (r7 fourth session; previously asserted
-    # Union + far literal projection)
-    from gdal_spark.operators import cutline as _cl
-
-    cut_out = _cl.cutline_clip(
+    cut_out = cutline_clip(
         spark, ctiles,
         pd.DataFrame({"fid": np.array([0], dtype=np.int64),
                       "geometry": [polygon_wkb([cring])]}),
-        cgrid, blend_px=2.0, nodata=0.0, tile_size=ts,
-        method="broadcast")
+        cgrid, blend_px=2.0, nodata=0.0, tile_size=ts)
     plan_cut = cut_out._jdf.queryExecution().optimizedPlan().toString()
     n_py = plan_cut.count("MapInPandas")
     # (the NULL-payload CASE WHEN projection constant-folds into this
     # fixture's LocalRelation, so the assertable shape is the arm
     # count: one kernel, no Union re-executing the source)
     checks.append((
-        "cutline broadcast: ONE arm, ONE Python kernel "
+        "cutline: ONE arm, ONE Python kernel "
         f"(MapInPandas x{n_py}, no Union re-executing the source)",
         n_py == 1 and "Union" not in plan_cut))
 

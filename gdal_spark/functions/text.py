@@ -107,26 +107,6 @@ def fingerprint64(col: str) -> Column:
     return F.xxhash64(norm)
 
 
-def passage_windows(text_col: str, window: int = 10) -> Column:
-    """All ``window``-token sliding passages of a document as an
-    array<string> — pure JVM (split + transform/slice), no Python.
-
-    The building block of exact duplicate-PASSAGE detection (the
-    suffix-array substring dedup of the training-data literature,
-    approximated at fixed granularity: any duplicated substring of
-    >= window tokens contains a duplicated window).  Tokens are the
-    whitespace split of the lower-cased text with runs collapsed."""
-    toks = F.split(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)),
-                                r"\s+", " ")), " ")
-    n = F.size(toks)
-    return F.when(n < window, F.array()).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - window + 1),
-            lambda i: F.array_join(
-                F.slice(toks, i, window), " ")))
-
-
 # --- passage-window machinery (shared by stats + removal) -----------
 #
 # Window identity = the space-joined token window string of the

@@ -50,7 +50,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gdal_spark.geometry.wkb import parse_wkb
 from gdal_spark.operators.rasterize import (
     GridSpec, layer_entries, rasterize_chunk,
 )
@@ -165,11 +164,7 @@ def cutline_clip(spark: SparkSession, src_tiles: DataFrame,
             f"blend_px={blend_px} exceeds tile_size={tile_size}: a "
             "window reaches one tile ring, so blend must be <= "
             "tile_size (retile coarser or shrink the blend)")
-    # a feature with no rings (EMPTY) draws nothing
-    drawn = cutline_pdf[np.array(
-        [g is not None and bool(parse_wkb(bytes(g)).parts)
-         for g in cutline_pdf["geometry"]], dtype=bool)]
-    entries = [e for e in layer_entries(drawn, grid, repeat(1.0), ts)
+    entries = [e for e in layer_entries(cutline_pdf, grid, repeat(1.0), ts)
                if e[3] <= e[4] and e[5] <= e[6]]
     const = (np.float64(nodata).tobytes(), "const:float64")
     if not entries:

@@ -1,21 +1,23 @@
-"""Layer algebra: Clip / Intersection / Erase between two layers.
+"""Layer algebra: Clip / Intersection / Erase and the other GDAL layer
+operations between two layers, plus dissolve.
 
-The reference implements these GEOS-backed on OGRLayer
+The reference implements each verb GEOS-backed on OGRLayer
 (Intersection ogr/ogrsf_frmts/generic/ogrlayer.cpp:5385, Clip :7537,
-Erase :7846) with a bbox prefilter + prepared geometries.  This
-engine's v1 scope (no GEOS in the container):
+Erase :7846) as one general implementation over a bbox-prefiltered
+pair set.  So does this engine, with no GEOS in the container:
 
-* method (clip) geometries must be axis rectangles or CONVEX
-  polygons — the rectangle fast path the reference special-cases
-  (ogrlayer.cpp:3922; apps/ogr2ogr_lib.cpp:604-609) plus the
-  Sutherland-Hodgman generalization to convex clips;
-* Erase supports axis-rectangle erasers (the complement is
-  decomposed into 4 half-plane strips, each clipped independently —
-  pieces are disjoint, returned as a multipolygon).
+* ``overlay_general`` runs every polygon verb between arbitrary simple
+  polygons (concave and holed) through the Greiner-Hormann kernel
+  ``geometry.overlay.poly_op``;
+* ``overlay_lines`` / ``overlay_lines_big`` / ``overlay_lines_auto``
+  clip and erase LINE layers against a polygon method layer.
 
-Execution mirrors the spatial join: broadcast cell-cover prefilter
-of the method layer, exact clip kernel in mapInPandas, output rows =
-(input fid, method fid, geometry WKB, area).
+A method layer given as a pandas frame is parsed once on the driver
+and rides in the kernel's closure (PySpark broadcasts a pickled kernel
+above ``spark.broadcast.UDFCompressionThreshold`` by itself); the input
+layer is map-only.  A method layer too big for the driver takes the
+distributed cell-cover pair join (``spatial_join._pair_candidates``).
+Output rows are (input fid, method fid, geometry WKB, area or length).
 """
 
 from __future__ import annotations
@@ -29,54 +31,11 @@ from pyspark.sql.types import (
     BinaryType, DoubleType, LongType, StructField, StructType
 )
 
-from gdal_spark.geometry.packed import geom_area, ring_signed_area
+from gdal_spark.geometry.packed import geom_area
 from gdal_spark.geometry.wkb import (
     multipolygon_wkb, parse_wkb, polygon_wkb,
 )
 from gdal_spark.session import spread_for_kernel
-
-
-def clip_ring_convex(ring: np.ndarray, clip: np.ndarray) -> np.ndarray:
-    """Sutherland-Hodgman against a convex clip ring (CCW)."""
-    poly = np.asarray(ring, dtype=np.float64)
-    if len(poly) and np.array_equal(poly[0], poly[-1]):
-        poly = poly[:-1]
-    cl = np.asarray(clip, dtype=np.float64)
-    if np.array_equal(cl[0], cl[-1]):
-        cl = cl[:-1]
-    if ring_signed_area(np.vstack([cl, cl[:1]])) < 0:
-        cl = cl[::-1]  # ensure CCW so inside = left of each edge
-    for i in range(len(cl)):
-        a = cl[i]
-        b = cl[(i + 1) % len(cl)]
-        if len(poly) == 0:
-            break
-        prev = np.roll(poly, 1, axis=0)
-        edge = b - a
-        cur_in = (edge[0] * (poly[:, 1] - a[1])
-                  - edge[1] * (poly[:, 0] - a[0])) >= 0
-        prev_in = (edge[0] * (prev[:, 1] - a[1])
-                   - edge[1] * (prev[:, 0] - a[0])) >= 0
-        out = []
-        for j in range(len(poly)):
-            if cur_in[j]:
-                if not prev_in[j]:
-                    out.append(_isect_line(prev[j], poly[j], a, b))
-                out.append(poly[j])
-            elif prev_in[j]:
-                out.append(_isect_line(prev[j], poly[j], a, b))
-        poly = np.array(out) if out else np.zeros((0, 2))
-    if len(poly) >= 3:
-        return np.vstack([poly, poly[:1]])
-    return np.zeros((0, 2))
-
-
-def _isect_line(p, q, a, b):
-    d1 = q - p
-    d2 = b - a
-    denom = d1[0] * d2[1] - d1[1] * d2[0]
-    t = ((a[0] - p[0]) * d2[1] - (a[1] - p[1]) * d2[0]) / denom
-    return p + t * d1
 
 
 OVERLAY_SCHEMA = StructType([
@@ -85,107 +44,6 @@ OVERLAY_SCHEMA = StructType([
     StructField("geometry", BinaryType()),
     StructField("area", DoubleType()),
 ])
-
-
-def intersection(spark: SparkSession, input_df: DataFrame,
-                 method_pdf: pd.DataFrame,
-                 geom_col: str = "geometry") -> DataFrame:
-    """Layer Intersection (input x convex method layer).
-
-    ``input_df``: (fid, geometry WKB, ...) distributed layer;
-    ``method_pdf``: small broadcastable layer of convex polygons.
-    """
-    method = {
-        int(r["fid"]): parse_wkb(bytes(r["geometry"])).rings()[0]
-        for _, r in method_pdf.iterrows()
-    }
-    mboxes = {
-        fid: (ring[:, 0].min(), ring[:, 1].min(),
-              ring[:, 0].max(), ring[:, 1].max())
-        for fid, ring in method.items()
-    }
-    bc = spark.sparkContext.broadcast((method, mboxes))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        meth, boxes = bc.value
-        for b in batches:
-            rows = {"fid": [], "method_fid": [], "geometry": [],
-                    "area": []}
-            for fid, wkb in zip(b["fid"], b[geom_col]):
-                g = parse_wkb(bytes(wkb))
-                gx0, gy0, gx1, gy1 = g.bbox()
-                for mfid, (mx0, my0, mx1, my1) in boxes.items():
-                    if not (gx0 <= mx1 and mx0 <= gx1
-                            and gy0 <= my1 and my0 <= gy1):
-                        continue  # bbox reject
-                    clipped = [clip_ring_convex(r, meth[mfid])
-                               for r in g.rings()]
-                    clipped = [c for c in clipped if len(c)]
-                    if not clipped:
-                        continue
-                    out_wkb = polygon_wkb(clipped)
-                    area = geom_area(parse_wkb(out_wkb))
-                    if area <= 0:
-                        continue
-                    rows["fid"].append(int(fid))
-                    rows["method_fid"].append(int(mfid))
-                    rows["geometry"].append(out_wkb)
-                    rows["area"].append(area)
-            if rows["fid"]:
-                yield pd.DataFrame(rows)
-
-    return input_df.mapInPandas(kernel, OVERLAY_SCHEMA)
-
-
-def clip(spark: SparkSession, input_df: DataFrame,
-         method_pdf: pd.DataFrame, geom_col: str = "geometry"
-         ) -> DataFrame:
-    """Clip == Intersection keeping only input attributes
-    (ogrlayer.cpp:7537)."""
-    return intersection(spark, input_df, method_pdf, geom_col)
-
-
-def erase_rect(spark: SparkSession, input_df: DataFrame,
-               rect: tuple[float, float, float, float],
-               geom_col: str = "geometry") -> DataFrame:
-    """Erase by an axis rectangle (ogrlayer.cpp:7846): the rectangle
-    complement is decomposed into 4 strips; each input polygon is
-    clipped against every strip and the surviving pieces form a
-    multipolygon."""
-    x0, y0, x1, y1 = rect
-    big = 1e12
-    strips = [
-        (-big, -big, x0, big),       # west
-        (x1, -big, big, big),        # east
-        (x0, -big, x1, y0),          # south middle
-        (x0, y1, x1, big),           # north middle
-    ]
-
-    from gdal_spark.geometry.ops import clip_ring_rect
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {"fid": [], "method_fid": [], "geometry": [],
-                    "area": []}
-            for fid, wkb in zip(b["fid"], b[geom_col]):
-                g = parse_wkb(bytes(wkb))
-                pieces = []
-                for (sx0, sy0, sx1, sy1) in strips:
-                    for ring in g.rings():
-                        c = clip_ring_rect(ring, sx0, sy0, sx1, sy1)
-                        if len(c):
-                            pieces.append([c])
-                if not pieces:
-                    continue
-                out_wkb = multipolygon_wkb(pieces)
-                rows["fid"].append(int(fid))
-                rows["method_fid"].append(-1)
-                rows["geometry"].append(out_wkb)
-                rows["area"].append(geom_area(parse_wkb(out_wkb)))
-            if rows["fid"]:
-                yield pd.DataFrame(rows)
-
-    return input_df.mapInPandas(kernel, OVERLAY_SCHEMA)
 
 
 # --------------------------------------------------------------------
@@ -202,7 +60,7 @@ LINE_OVERLAY_SCHEMA = StructType([
 
 
 def _method_grid_index(meth):
-    """Uniform grid over the broadcast method layer's extent:
+    """Uniform grid over the driver-side method layer's extent:
     (x0, y0, x1, y1, inv_cw, inv_ch, nc, cells) where cells maps
     (ix, iy) -> method indices whose bbox covers that cell.
     Replaces the O(|method|) per-line scan with an O(cells-covered)
@@ -271,10 +129,10 @@ def overlay_lines(spark: SparkSession, lines_df: DataFrame,
 
     Output: (fid, method_fid, MULTILINESTRING WKB, length).  Lengths
     partition exactly: clip + erase == input length per feature.
-    The method layer is broadcast behind a grid index (each line
-    tests only the candidates of the cells its bbox covers, never the
-    whole layer); the input layer is map-only (no shuffle at any
-    size).  For a method layer too big to broadcast use
+    The method layer rides in the kernel's closure behind a grid index
+    (each line tests only the candidates of the cells its bbox covers,
+    never the whole layer); the input layer is map-only (no shuffle at
+    any size).  For a method layer too big for the driver use
     overlay_lines_big / overlay_lines_auto.
     """
     from gdal_spark.geometry.lines import (
@@ -283,14 +141,12 @@ def overlay_lines(spark: SparkSession, lines_df: DataFrame,
 
     if op not in {"intersection", "clip", "erase", "identity"}:
         raise ValueError(f"unknown line overlay op {op!r}")
-    idx = _method_index(method_pdf, geom_col)
-    bc = spark.sparkContext.broadcast(idx)
+    meth = _method_index(method_pdf, geom_col)
     lines_df = spread_for_kernel(lines_df)
     want_isect = op in {"intersection", "clip", "identity"}
     want_erase = op in {"erase", "identity"}
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        meth = bc.value
         index = _method_grid_index(meth)
         for b in batches:
             rows = {"fid": [], "method_fid": [], "geometry": [],
@@ -351,10 +207,10 @@ def overlay_lines_big(spark: SparkSession, lines_df: DataFrame,
     ever collects to the driver (reference FilterGeometry handles any
     pair at any size, ogrlayer.cpp:4004-4076).
 
-    Shape: both layers explode into the cell cover of their bboxes
-    (the spatial-join machinery), a plain equi-join on cell + JVM
-    bbox-overlap reject + corner-cell pair dedup yields one row per
-    candidate (line, method) pair; pairs then hash-partition by line
+    Shape: spatial_join._pair_candidates (cell cover of both layers'
+    bboxes, equi-join on cell, JVM bbox-overlap reject, corner-cell
+    pair dedup) yields one row per candidate (line, method) pair;
+    pairs then hash-partition by line
     fid and sort within partitions, and a single mapInPandas pass
     with a cross-batch carry runs the split-at-crossings kernel —
     intersection rows per pair, the erase remainder sequentially per
@@ -362,34 +218,19 @@ def overlay_lines_big(spark: SparkSession, lines_df: DataFrame,
     lines).  Lines with NO candidate pair emit their whole geometry
     as the erase remainder via a left-anti join.
     """
-    from gdal_spark.functions import geo
     from gdal_spark.geometry.lines import (
         clip_line_to_rings, erase_line_from_rings, polyline_length,
     )
     from gdal_spark.geometry.wkb import multilinestring_wkb
-    from gdal_spark.operators.spatial_join import _geom_cell_cover
+    from gdal_spark.operators.spatial_join import _pair_candidates
 
     if op not in {"intersection", "clip", "erase", "identity"}:
         raise ValueError(f"unknown line overlay op {op!r}")
     want_isect = op in {"intersection", "clip", "identity"}
     want_erase = op in {"erase", "identity"}
 
-    a = _geom_cell_cover(lines_df, res, "fid", geom_col, "fid_a")
-    b = _geom_cell_cover(method_df, res, "fid",
-                         method_geom_col or geom_col, "fid_b")
-    cand = (
-        a.join(b, "cell")
-        .filter(
-            (F.col("minx_fid_a") <= F.col("maxx_fid_b"))
-            & (F.col("minx_fid_b") <= F.col("maxx_fid_a"))
-            & (F.col("miny_fid_a") <= F.col("maxy_fid_b"))
-            & (F.col("miny_fid_b") <= F.col("maxy_fid_a"))
-        )
-        .withColumn("_cx", F.greatest("minx_fid_a", "minx_fid_b"))
-        .withColumn("_cy", F.least("maxy_fid_a", "maxy_fid_b"))
-        .filter(F.col("cell") == geo.cell_id("_cx", "_cy", res))
-        .select("fid_a", "geom_fid_a", "fid_b", "geom_fid_b")
-    )
+    cand = _pair_candidates(lines_df, method_df, res, "fid", geom_col,
+                            method_geom_col or geom_col)
     par = spark.sparkContext.defaultParallelism
     cand = cand.repartition(par, "fid_a") \
         .sortWithinPartitions("fid_a", "fid_b")
@@ -478,28 +319,18 @@ def overlay_lines_big(spark: SparkSession, lines_df: DataFrame,
     return out
 
 
-# Method layers over either bound take the distributed path; both
-# overridable via spark.conf (gdal_spark.sql.methodBroadcastRowLimit /
-# methodBroadcastByteLimit).
-_LINES_BROADCAST_ROW_LIMIT = 50_000
-_LINES_BROADCAST_BYTE_LIMIT = 128 << 20
-
-
 def overlay_lines_auto(spark: SparkSession, lines_df: DataFrame,
                        method_df: DataFrame, op: str,
                        geom_col: str = "geometry",
                        method_geom_col: str | None = None) -> DataFrame:
-    """Broadcast the method layer when provably small in rows AND
-    bytes (JVM-side probe, nothing unbounded through the driver),
-    else run fully distributed."""
+    """overlay_lines with the method layer collected when it is
+    provably small in rows AND bytes (spatial_join.bounded_layer_pdf:
+    a JVM-side probe, nothing unbounded through the driver), else
+    overlay_lines_big."""
     from gdal_spark.operators.spatial_join import bounded_layer_pdf
 
-    rb = int(spark.conf.get("gdal_spark.sql.methodBroadcastRowLimit",
-                            str(_LINES_BROADCAST_ROW_LIMIT)))
-    bb = int(spark.conf.get("gdal_spark.sql.methodBroadcastByteLimit",
-                            str(_LINES_BROADCAST_BYTE_LIMIT)))
     mcol = method_geom_col or geom_col
-    pdf = bounded_layer_pdf(method_df, rb, bb, mcol)
+    pdf = bounded_layer_pdf(method_df, mcol)
     if pdf is None:
         return overlay_lines_big(spark, lines_df, method_df, op,
                                  geom_col=geom_col,
@@ -636,13 +467,14 @@ def dissolve(spark: SparkSession, df: DataFrame,
 
 
 def _method_index(method_pdf: pd.DataFrame, geom_col: str = "geometry"):
-    """Broadcastable method-layer index: fid -> (rings, bbox)."""
+    """The method layer parsed once on the driver, in row order:
+    [(fid, rings, bbox)]."""
     idx = []
-    for _, r in method_pdf.iterrows():
-        g = parse_wkb(bytes(r[geom_col]))
+    for fid, wkb in zip(method_pdf["fid"], method_pdf[geom_col]):
+        g = parse_wkb(bytes(wkb))
         rings = [np.ascontiguousarray(x, dtype=np.float64)
                  for x in g.rings()]
-        idx.append((int(r["fid"]), rings, g.bbox()))
+        idx.append((int(fid), rings, g.bbox()))
     return idx
 
 
@@ -653,7 +485,7 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
                     remainder_salt: int = 8,
                     options: dict | None = None) -> DataFrame:
     """Layer algebra between ARBITRARY simple polygons (concave and
-    holed), the general path the convex kernels above cannot express.
+    holed).
 
     Reference semantics (ogr/ogrsf_frmts/generic/ogrlayer.cpp):
       Intersection :5385 — one row per crossing (fid, method_fid) pair
@@ -666,8 +498,9 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
                            method features appended whole (method
                            rows carry fid=-1, method_fid=their fid)
 
-    The method layer is broadcast (the reference iterates it per input
-    feature with a prepared-geometry cache — same asymmetry).  The
+    The method layer is parsed once on the driver and rides in the
+    kernels' closures (the reference iterates it per input feature
+    with a prepared-geometry cache — same asymmetry).  The
     input layer is map-only for every op except the method remainder
     of Union, which groups candidate pairs by method fid (a small
     shuffle bounded by |method| x avg overlap).
@@ -706,7 +539,6 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
     if opts:
         raise ValueError(f"unknown overlay options: {sorted(opts)}")
     idx = _method_index(method_pdf, geom_col)
-    bc = spark.sparkContext.broadcast(idx)
 
     if bbox_cols is not None and op in {"intersection", "clip"} and idx:
         x0c, y0c, x1c, y1c = bbox_cols
@@ -737,7 +569,6 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
                            "symdifference", "update"}
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        meth = bc.value
         for b in batches:
             rows = {"fid": [], "method_fid": [], "geometry": [],
                     "area": []}
@@ -774,7 +605,7 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
                                                      dtype=np.float64)
                                 for r in g.rings()]
                     remain = [list(in_rings)]
-                    for mfid, mrings, (mx0, my0, mx1, my1) in meth:
+                    for mfid, mrings, (mx0, my0, mx1, my1) in idx:
                         if not (gx0 <= mx1 and mx0 <= gx1
                                 and gy0 <= my1 and my0 <= gy1):
                             continue
@@ -809,13 +640,13 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
 
     if op == "update":
         # method features pass through whole (ogrlayer.cpp:7188) —
-        # bounded: the method layer is already the broadcast side
+        # bounded: the method layer is already on the driver
         mrows = {"fid": [], "method_fid": [], "geometry": [],
                  "area": []}
-        for _, r in method_pdf.iterrows():
-            wkb = bytes(r[geom_col])
+        for mfid, wkb in zip(method_pdf["fid"], method_pdf[geom_col]):
+            wkb = bytes(wkb)
             mrows["fid"].append(-1)
-            mrows["method_fid"].append(int(r["fid"]))
+            mrows["method_fid"].append(int(mfid))
             mrows["geometry"].append(wkb)
             mrows["area"].append(geom_area(parse_wkb(wkb)))
         mdf = spark.createDataFrame(
@@ -850,6 +681,8 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
               else x0 + w * (ci + 1 + _JIT) / n_salt)
         return lo, hi
 
+    meth_by_fid = {m: (rings, box) for m, rings, box in idx}
+
     def _split_polys(g) -> list[list[np.ndarray]]:
         o = g.part_offsets
         return [g.parts[o[i]:o[i + 1]] for i in range(len(o) - 1)]
@@ -867,8 +700,7 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
             "ci": np.array([ci], dtype=np.int64),
             "geometry": [None],
         })
-        meth = {m: (rings, box) for m, rings, box in bc.value}
-        mrings, mbox = meth[mfid]
+        mrings, mbox = meth_by_fid[mfid]
         lo, hi = _strip_bounds(mbox, ci)
         pad = (mbox[3] - mbox[1]) * 0.25 + 1.0
         strip = np.array([(lo, mbox[1] - pad), (hi, mbox[1] - pad),
@@ -932,15 +764,10 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
             "m_maxy": [b[3] for _, b in boxes],
         }))
 
-    from gdal_spark.geometry.overlay import poly_op  # noqa: F811
-    from pyspark.sql.types import (
-        DoubleType as _D, LongType as _L, StructField as _SF,
-        StructType as _ST,
-    )
-    in_box_schema = _ST([
-        _SF("fid", _L()), _SF(geom_col, BinaryType()),
-        _SF("minx", _D()), _SF("miny", _D()),
-        _SF("maxx", _D()), _SF("maxy", _D()),
+    in_box_schema = StructType([
+        StructField("fid", LongType()), StructField(geom_col, BinaryType()),
+        StructField("minx", DoubleType()), StructField("miny", DoubleType()),
+        StructField("maxx", DoubleType()), StructField("maxy", DoubleType()),
     ])
 
     def with_bbox(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -997,14 +824,12 @@ def overlay_general(spark: SparkSession, input_df: DataFrame,
         bboxes.select("method_fid")
         .join(matched, "method_fid", "left_anti")
     )
-    meth_map = {m: rings for m, rings, _ in idx}
-
     def whole(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             rows = {"fid": [], "method_fid": [], "geometry": [],
                     "area": []}
             for mfid in b["method_fid"]:
-                wkb = multipolygon_wkb([meth_map[int(mfid)]])
+                wkb = multipolygon_wkb([meth_by_fid[int(mfid)][0]])
                 rows["fid"].append(-1)
                 rows["method_fid"].append(int(mfid))
                 rows["geometry"].append(wkb)

@@ -405,13 +405,18 @@ def layer_entries(pdf: pd.DataFrame, grid: GridSpec, burns,
     tx0, tx1, ty0, ty1)``, its rings in grid pixel space, its burn
     value, its WKB kind and the grid tiles its bbox covers (clamped to
     the grid, so none for a feature outside it).  *burns* holds one
-    value per feature."""
+    value per feature.  A NULL or EMPTY geometry burns nothing, so a
+    feature with no rings has no entry."""
     n_tx = -(-grid.width // tile_size)
     n_ty = -(-grid.height // tile_size)
     entries = []
     for wkb, burn in zip(pdf[geom_col], burns):
+        if wkb is None:
+            continue
         g = parse_wkb(bytes(wkb))
         rings = [grid.to_px(ring) for ring in g.rings()]
+        if not rings:
+            continue
         allc = np.vstack(rings)
         entries.append((
             rings, float(burn), g.kind,

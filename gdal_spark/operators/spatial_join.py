@@ -273,24 +273,31 @@ def _exact_pass(b: pd.DataFrame, lon: str, lat: str, fid_col: str,
     return b[keep].drop(columns="_exact")
 
 
-def bounded_layer_pdf(df: DataFrame, row_bound: int,
-                      byte_bound: int, geom_col: str = "geometry"):
-    """Collect a method layer only when it is provably small in ROWS
-    AND BYTES; returns None when the caller must stay distributed.
+# A method layer of at most this many rows AND geometry bytes is
+# collected to the driver; a larger one stays distributed.
+_BROADCAST_ROW_LIMIT = 50_000
+_BROADCAST_BYTE_LIMIT = 128 << 20
 
-    The size probe runs JVM-side on limit(row_bound+1) — count plus
+
+def bounded_layer_pdf(df: DataFrame, geom_col: str = "geometry"):
+    """Collect a method layer only when it is provably small in ROWS
+    AND BYTES (``_BROADCAST_ROW_LIMIT``, ``_BROADCAST_BYTE_LIMIT``);
+    returns None when the caller must stay distributed.
+
+    The size probe runs JVM-side on limit(row limit + 1) — count plus
     sum(length(geom)) — so neither an unbounded row count NOR
     few-but-huge geometries (50k multipolygons at 1 MB WKB = 50 GB)
     ever reach the driver.  The geometry column dominates layer size,
     so its byte sum is the estimate — the analog of
     autoBroadcastJoinThreshold's byte gate (a row gate alone has no
     such analog)."""
-    row = (df.limit(row_bound + 1)
+    row = (df.limit(_BROADCAST_ROW_LIMIT + 1)
            .agg(F.count(F.lit(1)).alias("n"),
                 F.sum(F.length(F.col(geom_col).cast("binary")))
                 .alias("nbytes"))
            .collect()[0])
-    if row["n"] > row_bound or (row["nbytes"] or 0) > byte_bound:
+    if row["n"] > _BROADCAST_ROW_LIMIT \
+            or (row["nbytes"] or 0) > _BROADCAST_BYTE_LIMIT:
         return None
     return df.toPandas()
 
@@ -457,6 +464,32 @@ def _geom_cell_cover(df: DataFrame, res: int, fid_col: str,
     return df.select(fid_col, geom_col).mapInPandas(kernel, schema)
 
 
+def _pair_candidates(input_df: DataFrame, method_df: DataFrame, res: int,
+                     fid_col: str, geom_col: str, method_geom_col: str
+                     ) -> DataFrame:
+    """Candidate (input, method) feature pairs of two distributed
+    layers, one row each: (fid_a, geom_fid_a, fid_b, geom_fid_b).
+
+    Each layer's features explode into the cell cover of their bbox
+    (``_geom_cell_cover``); a plain equi-join on cell (Catalyst/AQE
+    pick the strategy and split skewed cells), the JVM bbox-overlap
+    reject and the CORNER-CELL dedup follow, as one SQL fragment.  A
+    pair survives only in the cell holding the top-left corner of its
+    bbox intersection: both covers enumerate complete cell rectangles
+    of their bboxes and the corner lies inside both, so by floor
+    monotonicity exactly one copy of each pair survives, with no
+    distinct() shuffle."""
+    a = _geom_cell_cover(input_df, res, fid_col, geom_col, "fid_a")
+    b = _geom_cell_cover(method_df, res, fid_col, method_geom_col, "fid_b")
+    corner = geo.cell_id_sql("greatest(minx_fid_a, minx_fid_b)",
+                             "least(maxy_fid_a, maxy_fid_b)", res)
+    return a.join(b, "cell").filter(F.expr(
+        "minx_fid_a <= maxx_fid_b AND minx_fid_b <= maxx_fid_a"
+        " AND miny_fid_a <= maxy_fid_b AND miny_fid_b <= maxy_fid_a"
+        f" AND cell = {corner}")
+    ).select("fid_a", "geom_fid_a", "fid_b", "geom_fid_b")
+
+
 def spatial_join_polygons_intersect_big(
     spark: SparkSession,
     input_df: DataFrame,
@@ -471,16 +504,8 @@ def spatial_join_polygons_intersect_big(
     exceeds the broadcast bound — ogrlayer.cpp:4004 works for any
     pair of layers).
 
-      stage 1 — each layer's features explode into the cell cover of
-        their bbox (a distributed mapInPandas, then a plain shuffle
-        equi-join on cell — Catalyst/AQE pick the strategy, split
-        skewed cells);
-      stage 2 — JVM bbox-overlap reject + CORNER-CELL dedup: a
-        candidate pair survives only in the cell containing the
-        top-left corner of the bbox intersection.  Both covers
-        enumerate complete cell rectangles of their bboxes and the
-        corner lies inside both, so by floor monotonicity exactly one
-        copy of each pair survives — no distinct() shuffle;
+      stages 1-2 — ``_pair_candidates``: cell cover of both layers,
+        equi-join on cell, JVM bbox-overlap reject, corner-cell dedup;
       stage 3 — exact boundary-cross/containment kernel per pair,
         then a join back to the input layer's columns.
 
@@ -489,22 +514,8 @@ def spatial_join_polygons_intersect_big(
     """
     from gdal_spark.geometry.overlay import geoms_intersect
 
-    a = _geom_cell_cover(input_df, res, fid_col, geom_col, "fid_a")
-    b = _geom_cell_cover(method_df, res, fid_col,
-                         method_geom_col or geom_col, "fid_b")
-    cand = (
-        a.join(b, "cell")
-        .filter(
-            (F.col("minx_fid_a") <= F.col("maxx_fid_b"))
-            & (F.col("minx_fid_b") <= F.col("maxx_fid_a"))
-            & (F.col("miny_fid_a") <= F.col("maxy_fid_b"))
-            & (F.col("miny_fid_b") <= F.col("maxy_fid_a"))
-        )
-        .withColumn("_cx", F.greatest("minx_fid_a", "minx_fid_b"))
-        .withColumn("_cy", F.least("maxy_fid_a", "maxy_fid_b"))
-        .filter(F.col("cell") == geo.cell_id("_cx", "_cy", res))
-        .select("fid_a", "fid_b", "geom_fid_a", "geom_fid_b")
-    )
+    cand = _pair_candidates(input_df, method_df, res, fid_col, geom_col,
+                            method_geom_col or geom_col)
     pair_schema = StructType([StructField(fid_col, LongType()),
                               StructField("method_fid", LongType())])
 
@@ -540,7 +551,8 @@ def spatial_join_polygons_intersect(
 
     The general FilterGeometry pair the point-in-polygon join cannot
     express (ogrlayer.cpp:4004-4076 handles any geometry pair): the
-    small method layer is broadcast with bboxes; the kernel runs the
+    small method layer is parsed once on the driver and rides with its
+    bboxes in the kernel's closure; the kernel runs the
     JVM-free but Arrow-batched exact test — boundary cross (vectorized
     segment orientation) or containment either way.
 
@@ -554,15 +566,13 @@ def spatial_join_polygons_intersect(
     from gdal_spark.geometry.overlay import geoms_intersect
 
     idx = []
-    for _, r in polys_pdf.iterrows():
-        g = parse_wkb(bytes(r[geom_col]))
-        idx.append((int(r[fid_col]), g, g.bbox()))
-    bc = spark.sparkContext.broadcast(idx)
+    for fid, wkb in zip(polys_pdf[fid_col], polys_pdf[geom_col]):
+        g = parse_wkb(bytes(wkb))
+        idx.append((int(fid), g, g.bbox()))
     out_schema = input_df.withColumn(
         "method_fid", F.lit(0).cast("long")).schema
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        meth = bc.value
         for b in batches:
             if len(b) == 0:
                 continue
@@ -571,7 +581,7 @@ def spatial_join_polygons_intersect(
             for i, wkb in enumerate(b[geom_col]):
                 g = parse_wkb(bytes(wkb))
                 gx0, gy0, gx1, gy1 = g.bbox()
-                for mfid, mg, (mx0, my0, mx1, my1) in meth:
+                for mfid, mg, (mx0, my0, mx1, my1) in idx:
                     if not (gx0 <= mx1 and mx0 <= gx1
                             and gy0 <= my1 and my0 <= gy1):
                         continue

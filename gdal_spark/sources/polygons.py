@@ -1,6 +1,6 @@
 """Polygon layer fixtures — the join target.
 
-``poly_fixture`` reproduces the shape of the reference's canonical
+``poly_fixture_pdf`` reproduces the shape of the reference's canonical
 vector fixture (autotest/ogr/data/poly.shp: 10 polygons, fields
 AREA:Real EAS_ID:Integer64 PRFEDEA:String; eas_id multiset
 [158,165,166,168,169,170,171,172,173,179] — autotest/ogr/ogr_shape.py:91-151)
@@ -72,10 +72,6 @@ def poly_fixture_pdf() -> pd.DataFrame:
             "geometry": wkb,
         })
     return pd.DataFrame(rows)
-
-
-def poly_fixture(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(poly_fixture_pdf())
 
 
 def random_polygons_pdf(m: int, seed: int = 42) -> pd.DataFrame:

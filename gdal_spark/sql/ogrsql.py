@@ -445,15 +445,6 @@ _SPATIAL_JOIN_RE = re.compile(
     r"^st_intersects\(\s*(\w+)\.(\w+)\s*,\s*(\w+)\.(\w+)\s*\)$", re.I)
 _SJ_COUNTER = [0]
 
-# Method layers up to this many rows AND this many geometry bytes are
-# collected and broadcast (the prepared-geometry path); larger layers
-# take the fully distributed cell-cover join — the driver never holds
-# an unbounded layer (a row gate alone would pass 50k multipolygons at
-# 1 MB WKB each = 50 GB through the driver).  Override with spark.conf
-# "gdal_spark.sql.methodBroadcastRowLimit" / "methodBroadcastByteLimit".
-_METHOD_BROADCAST_ROW_LIMIT = 50_000
-_METHOD_BROADCAST_BYTE_LIMIT = 128 << 20
-
 
 def _rewrite_spatial_joins(spark: SparkSession, sel: _Select,
                            layers: dict[str, DataFrame]) -> None:
@@ -466,9 +457,10 @@ def _rewrite_spatial_joins(spark: SparkSession, sel: _Select,
     layer to carry a ``fid`` column; any non-matching join is left
     untouched.
 
-    The method layer is collected+broadcast only below a row bound
-    (ogrlayer.cpp:4004 works for ANY pair of layers — above the bound
-    the rewrite switches to the distributed cell-cover join,
+    The method layer is collected only when it is provably small in
+    rows AND geometry bytes (``bounded_layer_pdf``; ogrlayer.cpp:4004
+    works for ANY pair of layers — above the bound the rewrite
+    switches to the distributed cell-cover join,
     spatial_join_polygons_intersect_big, and the driver never
     materializes the layer)."""
     from gdal_spark.operators.spatial_join import (
@@ -477,11 +469,6 @@ def _rewrite_spatial_joins(spark: SparkSession, sel: _Select,
         spatial_join_polygons_intersect_big,
     )
 
-    bound = int(spark.conf.get("gdal_spark.sql.methodBroadcastRowLimit",
-                               str(_METHOD_BROADCAST_ROW_LIMIT)))
-    byte_bound = int(spark.conf.get(
-        "gdal_spark.sql.methodBroadcastByteLimit",
-        str(_METHOD_BROADCAST_BYTE_LIMIT)))
     new_joins = []
     for kind, tbl, cond in sel.joins:
         m = _SPATIAL_JOIN_RE.match(cond.strip())
@@ -500,8 +487,7 @@ def _rewrite_spatial_joins(spark: SparkSession, sel: _Select,
         if "fid" not in layers[tbl].columns:
             new_joins.append((kind, tbl, cond))
             continue
-        method_pdf = bounded_layer_pdf(layers[tbl], bound,
-                                       byte_bound, geom_col=methg)
+        method_pdf = bounded_layer_pdf(layers[tbl], geom_col=methg)
         if method_pdf is None:
             pairs = spatial_join_polygons_intersect_big(
                 spark, layers[sel.table], layers[tbl],

@@ -94,6 +94,63 @@ def test_kernel_over_shuffle_builds_without_a_job(spark, build):
     assert _jobs_run(spark, lambda: build(spark)) == []
 
 
+def _square(x0, y0, side):
+    return polygon_wkb([np.array([(x0, y0), (x0 + side, y0),
+                                  (x0 + side, y0 + side), (x0, y0 + side),
+                                  (x0, y0)])])
+
+
+def _big_polygon_join(spark):
+    from gdal_spark.operators.spatial_join import (
+        spatial_join_polygons_intersect_big,
+    )
+
+    rects = spark.createDataFrame(pd.DataFrame({
+        "fid": np.arange(64, dtype=np.int64),
+        "geometry": [_square(i % 8 * 3.0, i // 8 * 3.0, 2.0)
+                     for i in range(64)]}))
+    return spatial_join_polygons_intersect_big(spark, rects, rects)
+
+
+def _big_line_overlay(op):
+    def build(spark):
+        from gdal_spark.operators.layer_algebra import overlay_lines_big
+
+        lines = spark.createDataFrame(pd.DataFrame({
+            "fid": np.arange(8, dtype=np.int64),
+            "geometry": [linestring_wkb(np.array([(i, 0.0), (i, 5.0)]))
+                         for i in range(8)]}))
+        squares = spark.createDataFrame(pd.DataFrame({
+            "fid": np.arange(16, dtype=np.int64),
+            "geometry": [_square(i % 4 * 2.0, i // 4 * 2.0, 1.5)
+                         for i in range(16)]}))
+        return overlay_lines_big(spark, lines, squares, op)
+    return build
+
+
+@pytest.mark.parametrize("build, build_jobs", [
+    (_big_polygon_join, 0),
+    (_big_line_overlay("clip"), 0),
+    # erase and identity localCheckpoint the candidate pairs for the
+    # left-anti remainder, and the checkpoint materialises them
+    (_big_line_overlay("identity"), 2),
+], ids=["polygons_intersect_big", "overlay_lines_big_clip",
+        "overlay_lines_big_identity"])
+def test_distributed_pair_join_plans(spark, build, build_jobs):
+    """Both distributed pair joins pair features through the cell-cover
+    equi-join: their plans have no nested-loop pair scan and no
+    collect to the driver, and building them runs no Spark job beyond
+    the remainder's checkpoint."""
+    built = []
+    jobs = _jobs_run(spark, lambda: built.append(
+        build(spark).groupBy("method_fid").count()))
+    assert len(jobs) == build_jobs
+    plan = built[0]._jdf.queryExecution().executedPlan().toString()
+    for node in ("BroadcastNestedLoopJoin", "CartesianProduct",
+                 "CollectLimit"):
+        assert node not in plan, node
+
+
 def _writers():
     from gdal_spark.sources.flatgeobuf import write_flatgeobuf
     from gdal_spark.sources.geojson import write_geojson

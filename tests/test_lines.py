@@ -186,11 +186,13 @@ def test_method_grid_index_prefilter():
     assert set(range(10)) <= set(got_wide)
 
 
-def test_overlay_lines_big_parity(spark):
+def test_overlay_lines_big_parity(spark, monkeypatch):
     """overlay_lines_big (distributed method layer, cell-cover join +
     per-line carry kernel) matches the broadcast path pair-for-pair
     and length-for-length on a 10^4-feature method layer; the auto
     selector picks each path by the byte/row gate."""
+    import gdal_spark.operators.layer_algebra as la
+    import gdal_spark.operators.spatial_join as sj
     from gdal_spark.operators.layer_algebra import (
         overlay_lines, overlay_lines_auto, overlay_lines_big,
     )
@@ -230,17 +232,27 @@ def test_overlay_lines_big_parity(spark):
         np.testing.assert_allclose(got["length"], want["length"],
                                    rtol=1e-9, atol=1e-9)
 
-    # auto: tiny byte bound -> distributed; default -> broadcast
-    spark.conf.set("gdal_spark.sql.methodBroadcastByteLimit", "64")
-    try:
-        got = overlay_lines_auto(spark, lines, method_df, "clip") \
-            .toPandas().sort_values(["fid", "method_fid"]) \
-            .reset_index(drop=True)
-    finally:
-        spark.conf.unset("gdal_spark.sql.methodBroadcastByteLimit")
+    # auto: tiny byte bound -> distributed; default -> broadcast.  The
+    # arm that must not run is replaced by a stub that fails.
+    def forbidden(*args, **kwargs):
+        raise AssertionError("wrong overlay_lines_auto arm")
+
     want = overlay_lines(spark, lines, method_pdf, "clip") \
         .toPandas().sort_values(["fid", "method_fid"]) \
         .reset_index(drop=True)
+    with monkeypatch.context() as m:
+        m.setattr(sj, "_BROADCAST_BYTE_LIMIT", 64)
+        m.setattr(la, "overlay_lines", forbidden)
+        got = overlay_lines_auto(spark, lines, method_df, "clip") \
+            .toPandas().sort_values(["fid", "method_fid"]) \
+            .reset_index(drop=True)
+    np.testing.assert_allclose(got["length"], want["length"],
+                               rtol=1e-9, atol=1e-9)
+    with monkeypatch.context() as m:
+        m.setattr(la, "overlay_lines_big", forbidden)
+        got = overlay_lines_auto(spark, lines, method_df, "clip") \
+            .toPandas().sort_values(["fid", "method_fid"]) \
+            .reset_index(drop=True)
     np.testing.assert_allclose(got["length"], want["length"],
                                rtol=1e-9, atol=1e-9)
 

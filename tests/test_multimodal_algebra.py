@@ -5,9 +5,7 @@ import pandas as pd
 
 from gdal_spark.geometry.packed import geom_area
 from gdal_spark.geometry.wkb import parse_wkb, polygon_wkb
-from gdal_spark.operators.layer_algebra import (
-    clip_ring_convex, erase_rect, intersection,
-)
+from gdal_spark.operators.layer_algebra import overlay_general
 from gdal_spark.sources.multimodal import (
     decode_any, encode_fakeimg, extract_features, resize_images,
     sample_frames, synth_media_df,
@@ -48,13 +46,26 @@ def test_frame_sampling(spark):
 SQ = np.array([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)], dtype=float)
 
 
-def test_clip_ring_convex_triangle():
-    tri = np.array([(5, -5), (15, 5), (5, 15), (5, -5)])
-    out = clip_ring_convex(SQ, tri)
-    # clipped region area: intersection of square and triangle
-    a = geom_area(parse_wkb(polygon_wkb([out])))
+def _rect(x0, y0, x1, y1):
+    return np.array([(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)],
+                    dtype=float)
+
+
+def _layer(rings_by_fid):
+    return pd.DataFrame({
+        "fid": np.array(list(rings_by_fid), dtype=np.int64),
+        "geometry": [polygon_wkb([r]) for r in rings_by_fid.values()]})
+
+
+def test_clip_ring_convex_triangle(spark):
+    """Square clipped by a triangle equals the triangle clipped by the
+    square's rectangle (symmetric check)."""
+    tri = np.array([(5, -5), (15, 5), (5, 15), (5, -5)], dtype=float)
+    out = overlay_general(spark, spark.createDataFrame(_layer({0: SQ})),
+                          _layer({1: tri}), "clip").toPandas()
+    assert len(out) == 1
+    a = out.iloc[0]["area"]
     assert 0 < a < 100
-    # vs rectangle clip of the triangle (symmetric check)
     from gdal_spark.geometry.ops import clip_ring_rect
 
     out2 = clip_ring_rect(tri, 0, 0, 10, 10)
@@ -63,31 +74,26 @@ def test_clip_ring_convex_triangle():
 
 
 def test_intersection_layer(spark):
-    inputs = pd.DataFrame([
-        {"fid": 0, "geometry": polygon_wkb([SQ])},
-        {"fid": 1, "geometry": polygon_wkb([SQ + 100.0])},
-    ])
-    method = pd.DataFrame([
-        {"fid": 7,
-         "geometry": polygon_wkb([np.array([(5, 5), (20, 5), (20, 20),
-                                            (5, 20), (5, 5)])])},
-    ])
-    out = intersection(spark, spark.createDataFrame(inputs), method) \
-        .toPandas()
+    inputs = _layer({0: SQ, 1: SQ + 100.0})
+    method = _layer({7: _rect(5.0, 5.0, 20.0, 20.0)})
+    out = overlay_general(spark, spark.createDataFrame(inputs), method,
+                          "intersection").toPandas()
     assert len(out) == 1
     assert out.iloc[0]["fid"] == 0 and out.iloc[0]["method_fid"] == 7
     np.testing.assert_allclose(out.iloc[0]["area"], 25.0)  # 5x5 overlap
 
 
 def test_erase_rect(spark):
-    inputs = pd.DataFrame([{"fid": 0, "geometry": polygon_wkb([SQ])}])
-    out = erase_rect(spark, spark.createDataFrame(inputs),
-                     (2.0, 2.0, 8.0, 8.0)).toPandas()
+    inputs = spark.createDataFrame(_layer({0: SQ}))
+    out = overlay_general(spark, inputs,
+                          _layer({9: _rect(2.0, 2.0, 8.0, 8.0)}),
+                          "erase").toPandas()
     assert len(out) == 1
     np.testing.assert_allclose(out.iloc[0]["area"], 100.0 - 36.0)
     # erase with disjoint rect -> full area survives
-    out2 = erase_rect(spark, spark.createDataFrame(inputs),
-                      (50.0, 50.0, 60.0, 60.0)).toPandas()
+    out2 = overlay_general(spark, inputs,
+                           _layer({9: _rect(50.0, 50.0, 60.0, 60.0)}),
+                           "erase").toPandas()
     np.testing.assert_allclose(out2.iloc[0]["area"], 100.0)
 
 

@@ -295,12 +295,9 @@ def test_spatial_join_rewrite_distributed(spark, monkeypatch):
         raise AssertionError("broadcast path (driver collect) used")
 
     monkeypatch.setattr(sj, "spatial_join_polygons_intersect", forbidden)
-    spark.conf.set("gdal_spark.sql.methodBroadcastRowLimit", "4")
-    try:
-        got = execute_ogr_sql(spark, sql, {"a": a, "b": b}) \
-            .toPandas().sort_values(["fid", "name"]).reset_index(drop=True)
-    finally:
-        spark.conf.unset("gdal_spark.sql.methodBroadcastRowLimit")
+    monkeypatch.setattr(sj, "_BROADCAST_ROW_LIMIT", 4)
+    got = execute_ogr_sql(spark, sql, {"a": a, "b": b}) \
+        .toPandas().sort_values(["fid", "name"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, expected)
 
 
@@ -323,12 +320,9 @@ def test_spatial_join_rewrite_byte_bound(spark, monkeypatch):
         raise AssertionError("broadcast path (driver collect) used")
 
     monkeypatch.setattr(sj, "spatial_join_polygons_intersect", forbidden)
-    spark.conf.set("gdal_spark.sql.methodBroadcastByteLimit", "64")
-    try:
-        got = execute_ogr_sql(spark, sql, {"a": a, "b": b}) \
-            .toPandas().sort_values(["fid", "name"]).reset_index(drop=True)
-    finally:
-        spark.conf.unset("gdal_spark.sql.methodBroadcastByteLimit")
+    monkeypatch.setattr(sj, "_BROADCAST_BYTE_LIMIT", 64)
+    got = execute_ogr_sql(spark, sql, {"a": a, "b": b}) \
+        .toPandas().sort_values(["fid", "name"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, expected)
 
 

@@ -1,6 +1,7 @@
 """Focused tests for the r7 rolling-hash passage-window kernel
 (gdal_spark.functions.text): the Arrow kernel must reproduce the
-window-STRING equality law of passage_windows exactly."""
+window-STRING equality law (space-joined token windows of the
+lower-cased, whitespace-collapsed text) exactly."""
 
 import numpy as np
 import pandas as pd

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from gdal_spark.geometry.wkb import polygon_wkb
 from gdal_spark.operators.rasterize import GridSpec, rasterize_chunk
@@ -102,3 +103,38 @@ def test_zonal_stddev_of_constant_zones_is_zero(spark):
         assert got["count"].tolist() == list(sizes)
         assert (got["min"] == value).all() and (got["max"] == value).all()
         assert got["stddev_pop"].tolist() == [0.0] * len(sizes), value
+
+
+@pytest.mark.parametrize("op", ["rasterize", "zonal_stats",
+                                "zonal_value_counts"])
+def test_empty_and_null_features_burn_nothing(spark, op):
+    """A layer holding an EMPTY polygon and a NULL geometry next to a
+    square gives what the square alone gives (GDAL burns nothing for
+    a feature with no rings)."""
+    from gdal_spark.operators.rasterize import rasterize
+
+    square = polygon_wkb([np.array([(4, 4), (40, 4), (40, 28), (4, 28),
+                                    (4, 4)], dtype=float)])
+    empty = bytes.fromhex("010300000000000000")
+    alone = pd.DataFrame({"fid": [2], "geometry": [square]})
+    mixed = pd.DataFrame({"fid": [0, 1, 2],
+                          "geometry": [empty, None, square]})
+    arr = RNG.randint(0, 5, (64, 64)).astype(np.float64)
+    tiles, w, h = tiles_from_array(spark, arr, tile_size=32)
+    grid = GridSpec(0.0, float(h), 1.0, 1.0, w, h)
+
+    def run(layer):
+        if op == "rasterize":
+            out, keys = rasterize(spark, layer, grid, burn_value=1.0,
+                                  tile_size=32), ["tile_x", "tile_y"]
+        elif op == "zonal_stats":
+            out, keys = zonal_stats(spark, tiles, layer, grid,
+                                    tile_size=32), ["zone"]
+        else:
+            out, keys = zonal_value_counts(spark, tiles, layer, grid,
+                                           tile_size=32), ["zone", "value"]
+        return out.toPandas().sort_values(keys).reset_index(drop=True)
+
+    want = run(alone)
+    assert len(want)
+    pd.testing.assert_frame_equal(run(mixed), want)

@@ -126,36 +126,11 @@ def main() -> None:
                    "CartesianProduct" not in p5
                    and "BroadcastNestedLoopJoin" not in p5))
 
-    # polygon x polygon ST_Intersects with a LARGE method layer: the
-    # distributed cell-cover fallback (no driver collect anywhere) —
-    # a shuffle equi-join on cell, never a nested-loop pair scan
     from gdal_spark.geometry.wkb import polygon_wkb
-    from gdal_spark.operators.spatial_join import (
-        spatial_join_polygons_intersect_big,
-    )
 
     def _sq(x0, y0, x1, y1):
         return np.array([(x0, y0), (x1, y0), (x1, y1), (x0, y1),
                          (x0, y0)])
-
-    rect_rows = pd.DataFrame({
-        "fid": np.arange(64, dtype=np.int64),
-        "geometry": [polygon_wkb([_sq(i % 8 * 3.0, i // 8 * 3.0,
-                                      i % 8 * 3.0 + 2.0,
-                                      i // 8 * 3.0 + 2.0)])
-                     for i in range(64)],
-    })
-    big_a = spark.createDataFrame(rect_rows)
-    big_b = spark.createDataFrame(rect_rows)
-    p6 = plan_of(spatial_join_polygons_intersect_big(
-        spark, big_a, big_b).groupBy("method_fid").count())
-    sections.append(("polygon x polygon join, big method layer "
-                     "(cell-cover equi-join, corner-cell dedup)", p6))
-    checks.append(("big polygon join has no nested-loop pair scan",
-                   "BroadcastNestedLoopJoin" not in p6
-                   and "CartesianProduct" not in p6))
-    checks.append(("big polygon join never collects to the driver",
-                   "CollectLimit" not in p6))
 
     # overlay_general's bbox prefilter must stay O(1) in expression
     # size at ANY method count (broadcast LEFT SEMI, not an OR chain)
@@ -221,10 +196,9 @@ def main() -> None:
         n_py == 1 and "Union" not in plan_cut))
 
     # overlay_lines: broadcast path probes a grid index (no per-line
-    # full-method scan), and the big path is a cell-cover equi-join
-    # with no nested-loop pair scan and no driver collect
+    # full-method scan)
     from gdal_spark.operators.layer_algebra import (
-        _grid_candidates, _method_grid_index, overlay_lines_big,
+        _grid_candidates, _method_grid_index,
     )
 
     lmeth = [(i, [_sq(float(i % 100), float(i // 100),
@@ -241,29 +215,6 @@ def main() -> None:
     checks.append((
         "line overlay grid index short-circuits empty regions",
         _grid_candidates(lidx, 500.0, 500.0, 501.0, 501.0) == []))
-
-    from gdal_spark.geometry.wkb import linestring_wkb
-
-    lines_small = spark.createDataFrame(pd.DataFrame({
-        "fid": np.arange(8, dtype=np.int64),
-        "geometry": [linestring_wkb(np.array([(i, 0.0), (i, 5.0)]))
-                     for i in range(8)]}))
-    meth_small = spark.createDataFrame(pd.DataFrame({
-        "fid": np.arange(16, dtype=np.int64),
-        "geometry": [polygon_wkb([_sq(i % 4 * 2.0, i // 4 * 2.0,
-                                      i % 4 * 2.0 + 1.5,
-                                      i // 4 * 2.0 + 1.5)])
-                     for i in range(16)]}))
-    p8 = plan_of(overlay_lines_big(spark, lines_small, meth_small,
-                                   "identity")
-                 .groupBy("method_fid").count())
-    sections.append(("line overlay, big method layer (cell-cover "
-                     "equi-join + per-line carry kernel)", p8))
-    checks.append(("big line overlay has no nested-loop pair scan",
-                   "BroadcastNestedLoopJoin" not in p8
-                   and "CartesianProduct" not in p8))
-    checks.append(("big line overlay never collects to the driver",
-                   "CollectLimit" not in p8))
 
     # format drivers: the read-side pruning the 100TB design
     # depends on — FlatGeobuf ships only R-tree-hit byte ranges to

@@ -267,7 +267,7 @@ def q12_cell_count(spark, sf_dir):
 
 def q13_pip_rect(spark, sf_dir):
     """Rectangle containment through the real two-stage spatial join
-    (broadcast cell prefilter + ray-cast PIP)."""
+    (cell prefilter + ray-cast PIP in one kernel)."""
     from gdal_spark.operators.spatial_join import (
         spatial_join_points_in_polygons,
     )

@@ -6,8 +6,9 @@ Common-Crawl-style web pages:
 
 * geocoding + H3/S2-style cell indexing (web-mercator quadtree cells,
   JVM-side Column expressions; Hilbert codes with GDAL parity)
-* two-stage spatial join: broadcast cell prefilter + exact vectorized
-  ray-cast point-in-polygon over packed coordinate arrays
+* two-stage spatial join: cell prefilter + exact vectorized ray-cast
+  point-in-polygon over packed coordinate arrays, one map-only kernel
+  for a small polygon layer
   (semantics: ogr/ogrlinearring.cpp:452-521)
 * kNN via cell k-ring expansion + per-cell refine
   (semantics: alg/gdalgrid.cpp:905-949 quadtree radius growth)

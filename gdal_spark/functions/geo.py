@@ -4,7 +4,9 @@ Every function here is expressed as a SQL fragment usable verbatim by
 BOTH Spark SQL and DuckDB (the correctness oracle), then wrapped in
 ``F.expr``.  This keeps the engine hot path out of Python entirely
 (the input_hint mandate: no per-row Python) and makes the oracle SQL
-definitionally identical to the Spark plan.
+definitionally identical to the Spark plan.  The one exception is
+``cells_of``, the numpy twin of ``cell_id_sql`` for Python kernels
+and cell covers.
 
 Semantics ported from the reference (cited per function):
 
@@ -23,6 +25,7 @@ Semantics ported from the reference (cited per function):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, functions as F
 
 # WebMercatorQuad TileMatrixSet constants (gcore/tilematrixset.cpp,
@@ -37,7 +40,7 @@ MERC_LAT_MAX = 85.05112877980659
 
 MERC_X_SQL = "(({lon}) * {origin} / 180.0)"
 # lat clamps to the Web-Mercator domain (+-MERC_LAT_MAX) exactly like
-# the Python _merc_y: without it a pole-touching bbox corner computes
+# the numpy cells_of: without it a pole-touching bbox corner computes
 # NULL/inf JVM-side while the Python cell cover clipped, silently
 # dropping the pair at the corner-cell dedup filter.  Shared with the
 # DuckDB oracles through this same template (lockstep by construction).
@@ -133,6 +136,26 @@ def cell_id_sql(lon: str, lat: str, res: int) -> str:
     tx = tile_x_sql(merc_x_sql(lon), res)
     ty = tile_y_sql(merc_y_sql(lat), res)
     return f"(({tx}) * {1 << res} + ({ty}))"
+
+
+def cells_of(lon: np.ndarray, lat: np.ndarray, res: int
+             ) -> tuple[np.ndarray, np.ndarray]:
+    """Tile x and tile y of each lon/lat at resolution *res*: the
+    numpy twin of ``cell_id_sql`` (same mercator, clamp and +1e-3
+    GetTileIndices arithmetic), the one cell law every Python kernel
+    and cell cover uses, so a point and a bbox corner with the same
+    coordinates always land in the same cell."""
+    n = 1 << res
+    span = tile_span(res)
+    lon = np.asarray(lon, dtype=np.float64)
+    la = np.clip(np.asarray(lat, dtype=np.float64),
+                 -MERC_LAT_MAX, MERC_LAT_MAX)
+    mx = lon * ORIGIN / 180.0
+    my = np.log(np.tan((90.0 + la) * np.pi / 360.0)) / np.pi * ORIGIN
+    tx = np.clip(np.floor((mx + ORIGIN) / span + 1e-3), 0, n - 1)
+    ty = np.clip(np.floor((ORIGIN - my) / span + 1e-3), 0, n - 1)
+    return tx.astype(np.int64), ty.astype(np.int64)
+
 
 def lon_from_key_sql(key: str) -> str:
     return LON_FROM_KEY_SQL.format(key=key, m=LCG_M)

@@ -55,17 +55,6 @@ def _haversine_np(lon1, lat1, lon2, lat2):
     return 2.0 * R_EARTH * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
 
 
-def _cells_of(lon: np.ndarray, lat: np.ndarray, res: int):
-    n = 1 << res
-    span = geo.tile_span(res)
-    la = np.clip(lat, -geo.MERC_LAT_MAX, geo.MERC_LAT_MAX)
-    mx = lon * geo.ORIGIN / 180.0
-    my = np.log(np.tan((90.0 + la) * np.pi / 360.0)) / np.pi * geo.ORIGIN
-    tx = np.clip(np.floor((mx + geo.ORIGIN) / span + 1e-3), 0, n - 1)
-    ty = np.clip(np.floor((geo.ORIGIN - my) / span + 1e-3), 0, n - 1)
-    return tx.astype(np.int64), ty.astype(np.int64)
-
-
 def _lat_of_merc_y(y: float) -> float:
     y = min(max(y, -geo.ORIGIN), geo.ORIGIN)
     return float(np.degrees(2.0 * np.arctan(np.exp(y / geo.ORIGIN * np.pi))
@@ -127,7 +116,7 @@ def build_target_index(targets_pdf: pd.DataFrame, res: int,
     ids = targets_pdf[target_id].to_numpy(dtype=np.int64)
     lons = targets_pdf[t_lon].to_numpy(dtype=np.float64)
     lats = targets_pdf[t_lat].to_numpy(dtype=np.float64)
-    tx, ty = _cells_of(lons, lats, res)
+    tx, ty = geo.cells_of(lons, lats, res)
     n = 1 << res
     cell = tx * n + ty
     order = np.argsort(cell, kind="stable")
@@ -202,7 +191,7 @@ def knn_cells(
                 continue
             px = b[lon].to_numpy(dtype=np.float64)
             py = b[lat].to_numpy(dtype=np.float64)
-            tx, ty = _cells_of(px, py, res_)
+            tx, ty = geo.cells_of(px, py, res_)
             cell = tx * n + ty
             out_key, out_id, out_d, out_r = [], [], [], []
             # group points by cell: shared expansion per occupied cell

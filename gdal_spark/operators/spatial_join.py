@@ -1,39 +1,46 @@
-"""Two-stage spatial join: broadcast cell prefilter + exact PIP.
+"""Two-stage spatial join: cell prefilter + exact PIP.
 
 Re-creates the reference's spatial filter/join semantics
 (OGRLayer::FilterGeometry, ogr/ogrsf_frmts/generic/ogrlayer.cpp:4004-4076):
 
-  stage 1 — envelope/bbox reject: here a *broadcast equi-join* of the
-            point's quadtree cell against a precomputed cell->polygon
-            cover of each polygon's bbox (the distributed rendering
-            of the bbox pretest; cells play the role GDAL gives its
-            Hilbert/R-tree indexes, packedrtree.cpp:73-132)
+  stage 1 — envelope/bbox reject: the point's quadtree cell is looked
+            up in a precomputed cell->polygon cover of each polygon's
+            bbox, then the point is tested against the bbox (cells
+            play the role GDAL gives its Hilbert/R-tree indexes,
+            packedrtree.cpp:73-132)
   stage 2 — rectangle fast-accept when the polygon IS a rectangle
-            (ogrlayer.cpp:3922 rectangle detection) — a JVM-side range
-            predicate; a rectangle candidate outside it is dropped
-            before any Python
+            (ogrlayer.cpp:3922 rectangle detection): inside the bbox a
+            rectangle keeps the half-open range, with no ray cast
   stage 2b — interior-cell fast accept: a candidate in a cover cell
             wholly inside its polygon needs no exact test
   stage 3 — exact vectorized ray-cast PIP over packed coordinate
             arrays (ogrlinearring.cpp:452-521 semantics) inside an
             Arrow-batched mapInPandas kernel.
 
-Stages 2 and 2b do not form a separate output arm: they compute an
-``_exact`` flag column, and every surviving candidate goes through
-the ONE stage-3 kernel, which passes unflagged rows through and
-ray-casts only the flagged ones.  A JVM arm unioned beside a Python
-arm would re-run the whole upstream (scan, render, cell assign,
-candidate join) once per arm, since no exchange below a broadcast
-join is reused.
+A small polygon layer (``spatial_join_points_in_polygons``) runs all
+three stages in ONE map-only kernel over the points, like GDAL's
+one pass per feature: the sorted cover rides in the kernel's closure,
+a ``searchsorted`` on it is the cell lookup, and stages 2-2b are
+numpy comparisons.  There is no join, no broadcast job and no
+exchange, and the points are read once at their own width.
+
+A layer too big for the driver (``spatial_join_big_polygons``) keeps
+stages 1-2b JVM-side: a shuffle equi-join of the points' cell against
+the distributed cover, whose SQL condition computes an ``_exact``
+flag column; every surviving candidate goes through the ONE stage-3
+kernel, which passes unflagged rows through and ray-casts only the
+flagged ones.  Both paths share the cover rows (``_cover_pdf``) and
+the stage-3 pass (``_exact_pass``).
 
 Scale notes (100 TB design point):
-* the polygon layer (admin boundaries etc.) is broadcast — the big
+* the small polygon layer ships in the kernel's closure — the big
   pages table is never shuffled for the join itself;
-* stage-1 join fan-out is bounded by cells-per-polygon; resolution
-  trades candidate selectivity vs index size;
-* hot cells (Zipf page skew) do not skew this join because the
-  build side is the small one; downstream groupBys use salted
-  two-phase aggregation (gdal_spark.operators.tiling.salted_agg).
+* stage-1 fan-out is bounded by cells-per-polygon; resolution
+  trades candidate selectivity vs index size, and the kernel expands
+  (point, cover row) pairs in bounded slices;
+* hot cells (Zipf page skew) do not skew the small-layer join, which
+  has no exchange; downstream groupBys use salted two-phase
+  aggregation (gdal_spark.operators.tiling.salted_agg).
 """
 
 from __future__ import annotations
@@ -109,22 +116,15 @@ def _cells_full_in(g, txs: np.ndarray, tys: np.ndarray, res: int
 
 def _cell_range(bbox, res: int) -> tuple[np.ndarray, np.ndarray]:
     """Tile x and tile y (flattened) of every resolution-*res* cell a
-    lon/lat bbox touches: the GetTileIndices math of point->cell
-    assignment (apps/gdalalg_raster_tile.cpp:457-480), so floor
+    lon/lat bbox touches: the bbox's top-left and bottom-right corners
+    go through the point cell law (``geo.cells_of``), so floor
     monotonicity makes it a superset of the cells of any point in the
     bbox."""
-    n = 1 << res
-    span = geo.tile_span(res)
     minx, miny, maxx, maxy = bbox
-
-    def tile(m: float) -> int:
-        return int(np.clip(np.floor(m / span + 1e-3), 0, n - 1))
-
-    txs, tys = np.meshgrid(
-        np.arange(tile(_merc_x(minx) + geo.ORIGIN),
-                  tile(_merc_x(maxx) + geo.ORIGIN) + 1),
-        np.arange(tile(geo.ORIGIN - _merc_y(maxy)),
-                  tile(geo.ORIGIN - _merc_y(miny)) + 1))
+    tx, ty = geo.cells_of(np.array([minx, maxx]), np.array([maxy, miny]),
+                          res)
+    txs, tys = np.meshgrid(np.arange(tx[0], tx[1] + 1),
+                           np.arange(ty[0], ty[1] + 1))
     return txs.ravel(), tys.ravel()
 
 
@@ -166,7 +166,7 @@ def polygon_cell_cover_pdf(polys_pdf: pd.DataFrame, res: int,
 
     Uses the same GetTileIndices math as point->cell assignment
     (``_cell_range``), so the cover is a superset of matching cells.
-    The bbox columns enable the JVM-side envelope reject; ``is_rect``
+    The bbox columns enable the envelope reject; ``is_rect``
     marks polygons whose bbox IS the geometry (fast accept,
     ogrlayer.cpp:3922); ``full_in`` marks INTERIOR cells — every point
     assigned there is inside regardless of ray-cast edge rules, so
@@ -253,24 +253,20 @@ def _candidates(points: DataFrame, cover: DataFrame, res: int, lon: str,
     return cand, StructType(fields + [StructField(fid_col, LongType())])
 
 
-def _exact_pass(b: pd.DataFrame, lon: str, lat: str, fid_col: str,
-                rings_of) -> pd.DataFrame:
-    """Stage 3 on one Arrow batch of flagged candidates: rows whose
-    ``_exact`` is false pass through; flagged rows stay only when the
-    ray cast puts them inside ``rings_of(fid, row)`` (``row`` is the
-    position of that fid's first flagged row).  Drops ``_exact``."""
-    flag = b["_exact"].to_numpy(dtype=bool)
+def _exact_pass(px: np.ndarray, py: np.ndarray, fids: np.ndarray,
+                flag: np.ndarray, rings_of) -> np.ndarray:
+    """Stage 3 over candidate rows: which rows to keep.  Unflagged rows
+    pass through; a flagged row stays only when the ray cast puts its
+    point (*px*, *py*) inside ``rings_of(fid, row)`` (``row`` is the
+    position of that fid's first flagged row)."""
     keep = ~flag
     rows = np.flatnonzero(flag)
     if len(rows):
-        px = b[lon].to_numpy(dtype=np.float64)
-        py = b[lat].to_numpy(dtype=np.float64)
-        fids = b[fid_col].to_numpy()[rows]
-        for fid, idx in pd.Series(rows).groupby(fids).indices.items():
+        for fid, idx in pd.Series(rows).groupby(fids[rows]).indices.items():
             r = rows[idx]
             keep[r] = points_in_rings(px[r], py[r],
                                       rings_of(int(fid), r[0]))
-    return b[keep].drop(columns="_exact")
+    return keep
 
 
 # A method layer of at most this many rows AND geometry bytes is
@@ -302,14 +298,10 @@ def bounded_layer_pdf(df: DataFrame, geom_col: str = "geometry"):
     return df.toPandas()
 
 
-def _merc_x(lon: float) -> float:
-    return lon * geo.ORIGIN / 180.0
-
-
-def _merc_y(lat: float) -> float:
-    lat = min(max(lat, -geo.MERC_LAT_MAX), geo.MERC_LAT_MAX)
-    return float(np.log(np.tan((90.0 + lat) * np.pi / 360.0)) / np.pi
-                 * geo.ORIGIN)
+# At most this many (point, cover row) pairs are expanded, tested and
+# yielded per step of the point-join kernel, so no output frame grows
+# with the number of polygons sharing a cell.
+_PAIR_SLICE = 1 << 17
 
 
 def spatial_join_points_in_polygons(
@@ -321,39 +313,77 @@ def spatial_join_points_in_polygons(
     lat: str = "lat",
 ) -> DataFrame:
     """points ⋈ polygons on containment -> points columns + ``fid``.
-    A ``cell`` column of *points* is replaced by the join key and not
-    returned.
+    A ``cell`` column of *points* is dropped, and a NULL or NaN
+    coordinate matches nothing.
 
-    ``polys_pdf`` is the (small, broadcastable) polygon layer with
-    fid + geometry(WKB) columns.
+    ``polys_pdf`` is the small polygon layer with fid + geometry(WKB)
+    columns.  Its cell cover, sorted by cell, and the rings of its
+    non-rectangles ride in the closure of ONE map-only kernel over the
+    points, which runs stages 1-3 per Arrow batch: a ``searchsorted``
+    cell lookup, the envelope and rectangle rule of ``_CANDIDATE_SQL``
+    and the ``_EXACT_SQL`` flag as numpy comparisons, then the shared
+    ray cast (``_exact_pass``).  Building the frame runs no Spark job.
     """
-    cover = spark.createDataFrame(polygon_cell_cover_pdf(polys_pdf, res))
-    # stage 1 (bbox reject) entirely JVM-side: cell equi-join + the
-    # envelope predicate (ogrlayer.cpp:4004 envelope pretest)
-    flagged, schema = _candidates(points, F.broadcast(cover), res, lon, lat,
-                                  "fid")
-
+    cover = polygon_cell_cover_pdf(polys_pdf, res)
+    cover = cover.iloc[np.argsort(cover["cell"].to_numpy(), kind="stable")]
+    cells = cover["cell"].to_numpy()
+    fids = cover["fid"].to_numpy()
+    minx, miny, maxx, maxy = (cover[c].to_numpy()
+                              for c in ("minx", "miny", "maxx", "maxy"))
+    is_rect = cover["is_rect"].to_numpy()
+    exact = ~is_rect & ~cover["full_in"].to_numpy()
     rings_by_fid = {}
     for fid, wkb in zip(polys_pdf["fid"], polys_pdf["geometry"]):
         g = parse_wkb(bytes(wkb))
         if not _is_axis_rect(g):
             rings_by_fid[int(fid)] = [np.ascontiguousarray(r)
                                       for r in g.rings()]
-    if not rings_by_fid:
-        return flagged.drop("_exact")
+    in_fields = points.schema.fields
+    fields = [f for f in in_fields if f.name != "cell"]
+    has_cell = len(fields) < len(in_fields)
+    schema = StructType(fields + [StructField("fid", LongType())])
+    n = 1 << res
+    pair_slice = _PAIR_SLICE
 
-    # the rings ride in the kernel's closure: PySpark broadcasts a
-    # pickled kernel above spark.broadcast.UDFCompressionThreshold
-    # (1 MB) by itself
+    # the cover and the rings ride in the kernel's closure: PySpark
+    # broadcasts a pickled kernel above
+    # spark.broadcast.UDFCompressionThreshold (1 MB) by itself
     @kernel_name("operators.spatial_join.exact")
-    def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            out = _exact_pass(b, lon, lat, "fid",
-                              lambda fid, row: rings_by_fid[fid])
-            if len(out):
-                yield out
+            if has_cell:
+                b = b.drop(columns="cell")
+            px = b[lon].to_numpy(dtype=np.float64)
+            py = b[lat].to_numpy(dtype=np.float64)
+            pts = np.flatnonzero(~(np.isnan(px) | np.isnan(py)))
+            tx, ty = geo.cells_of(px[pts], py[pts], res)
+            cell = tx * n + ty
+            lo = np.searchsorted(cells, cell, "left")
+            cnt = np.searchsorted(cells, cell, "right") - lo
+            ends = np.cumsum(cnt)
+            total = int(ends[-1]) if len(ends) else 0
+            for s in range(0, total, pair_slice):
+                # pair k is cover row lo[j] + (k - start of j) of point
+                # pts[j]; one point's pairs may span slices
+                k = np.arange(s, min(s + pair_slice, total))
+                j = np.searchsorted(ends, k, "right")
+                row = lo[j] + k - (ends[j] - cnt[j])
+                p = pts[j]
+                x, y = px[p], py[p]
+                # stages 1-2, as _CANDIDATE_SQL
+                ok = ((x >= minx[row]) & (x <= maxx[row])
+                      & (y >= miny[row]) & (y <= maxy[row])
+                      & (~is_rect[row]
+                         | ((x < maxx[row]) & (y < maxy[row]))))
+                p, row = p[ok], row[ok]
+                ok = _exact_pass(px[p], py[p], fids[row], exact[row],
+                                 lambda fid, r: rings_by_fid[fid])
+                if ok.any():
+                    out = b.take(p[ok])
+                    out["fid"] = fids[row[ok]]
+                    yield out
 
-    return flagged.mapInPandas(exact, schema)
+    return points.mapInPandas(kernel, schema)
 
 
 def spatial_join_big_polygons(
@@ -401,11 +431,13 @@ def spatial_join_big_polygons(
 
         for b in batches:
             geoms = b[geom_col]
-            out = _exact_pass(b, lon, lat, fid_col,
-                              lambda fid, row: rings_of(fid, geoms.iat[row])
-                              ).drop(columns=[geom_col])
-            if len(out):
-                yield out
+            keep = _exact_pass(b[lon].to_numpy(dtype=np.float64),
+                               b[lat].to_numpy(dtype=np.float64),
+                               b[fid_col].to_numpy(),
+                               b["_exact"].to_numpy(dtype=bool),
+                               lambda fid, row: rings_of(fid, geoms.iat[row]))
+            if keep.any():
+                yield b[keep].drop(columns=["_exact", geom_col])
 
     return flagged.mapInPandas(exact, schema)
 

@@ -2,8 +2,9 @@
 rasterize and zonal statistics.
 
 A ``get_spark`` session records no Python call site per Column call
-(origin capture), the point-in-polygon join and the zonal aggregation
-build their plans from SQL fragments, and rasterize renders the tile
+(origin capture), the point-in-polygon join is one kernel over the
+points with its polygon layer in the closure, the zonal aggregation
+builds its plan from SQL fragments, and rasterize renders the tile
 cover the driver already holds with no createDataFrame, broadcast or
 shuffle, so building each stays within a fixed number of JVM
 commands.  Commands are counted at ``ClientServerConnection``; the
@@ -27,9 +28,10 @@ from gdal_spark.operators.zonal import zonal_stats
 from gdal_spark.sources.polygons import poly_fixture_pdf, random_polygons_pdf
 
 # building spatial_join_points_in_polygons over a geocoded page frame
-# sends 97 commands; with origin capture and a join predicate of
-# Column operators it sent 592, and with that predicate alone ~200
-JOIN_COMMAND_BOUND = 120
+# sends 31 commands; a createDataFrame of the cell cover and a
+# broadcast-join prefilter sent 97, with origin capture and a join
+# predicate of Column operators 592, and with that predicate alone ~200
+JOIN_COMMAND_BOUND = 40
 # rasterize sends 32 (a createDataFrame of the tile cover, a broadcast
 # and a sorted shuffle sent 95); zonal_stats 76 (Column aggregates with
 # a separate un-offset select sent 180)

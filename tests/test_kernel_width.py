@@ -345,3 +345,39 @@ def test_raster_algebra_op_runs_six_jobs(spark):
                            tile_size=64).collect()
 
     assert len(_jobs_run(spark, op)) == 6
+
+
+def test_geojoin_op_runs_two_jobs(spark):
+    """pages -> geocode -> point-in-polygon join -> kNN -> counts, as
+    the geojoin benchmark runs them: building the join runs no Spark
+    job, and the op runs two, the count's map stage and its result.
+    A broadcast-join prefilter in front of the exact kernel runs a
+    third job of its own, and fails here."""
+    from gdal_spark.operators.knn import knn_cells
+    from gdal_spark.operators.spatial_join import (
+        spatial_join_points_in_polygons,
+    )
+    from gdal_spark.sources.pages import CITIES, pages_df, with_extracted_geo
+    from gdal_spark.sources.polygons import poly_fixture_pdf
+
+    targets = pd.DataFrame({
+        "target_id": np.arange(len(CITIES), dtype=np.int64),
+        "t_lon": [c[0] for c in CITIES],
+        "t_lat": [c[1] for c in CITIES],
+    })
+    pts = with_extracted_geo(pages_df(spark, 4000)).select(
+        "i", F.col("geo_lon").alias("lon"), F.col("geo_lat").alias("lat"))
+    polys = poly_fixture_pdf()
+    joined = []
+    assert _jobs_run(spark, lambda: joined.append(
+        spatial_join_points_in_polygons(spark, pts, polys, res=6))) == []
+
+    def op():
+        nearest = knn_cells(
+            joined[0].select((F.col("i") * 16 + F.col("fid")).alias("k"),
+                             "lon", "lat"),
+            targets, k=1, point_key="k")
+        assert nearest.groupBy((F.col("k") % 16).alias("fid"),
+                               "target_id").count().collect()
+
+    assert len(_jobs_run(spark, op)) == 2

@@ -1,6 +1,7 @@
 """Point-in-polygon joins as ONE kernel arm: the executed plan runs the
-points upstream once, and the JVM accept rules plus the flagged exact
-pass agree with the brute-force PIP oracle on the edge cases."""
+points upstream once, and the accept rules (numpy in the small-layer
+kernel, JVM-side in the shuffle join) plus the flagged exact pass
+agree with the brute-force PIP oracle on the edge cases."""
 
 import numpy as np
 import pandas as pd
@@ -8,14 +9,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark.functions import geo
-from gdal_spark.geometry.wkb import polygon_wkb
+from gdal_spark.geometry.pip import points_in_rings
+from gdal_spark.geometry.wkb import parse_wkb, polygon_wkb
+from gdal_spark.operators import spatial_join
 from gdal_spark.operators.spatial_join import (
     _geom_cell_cover, _polygon_cell_cover, brute_force_join_pdf,
     polygon_cell_cover_pdf, spatial_join_big_polygons,
     spatial_join_points_in_polygons,
 )
 from gdal_spark.sources.pages import pages_df, with_extracted_geo
-from gdal_spark.sources.polygons import poly_fixture_pdf, random_polygons
+from gdal_spark.sources.polygons import (
+    poly_fixture_pdf, random_polygons, random_polygons_pdf,
+)
 
 PTS_SCHEMA = "i long, lon double, lat double"
 
@@ -31,17 +36,22 @@ def _geocoded(spark, n):
         "i", F.col("geo_lon").alias("lon"), F.col("geo_lat").alias("lat"))
 
 
-def test_broadcast_join_runs_upstream_once(spark):
-    """The render kernel, the broadcast join and no Union: one arm.
-    A JVM-accept arm unioned beside the kernel arm (the earlier
-    two-arm join) shows the render kernel and the broadcast join
-    twice, and fails here."""
+def test_point_join_is_one_map_only_kernel(spark):
+    """The small-layer join is the one exact kernel straight over the
+    points: no join, no exchange and no Union under it, and the render
+    kernel runs once.  A broadcast-join prefilter in front of the
+    kernel shows a BroadcastHashJoin and a BroadcastExchange, and a
+    JVM-accept arm unioned beside the kernel arm shows the render
+    kernel twice; both fail here."""
     df = spatial_join_points_in_polygons(
         spark, _geocoded(spark, 2000), poly_fixture_pdf(), res=6)
     assert len(df.collect()) > 0
     plan = _final_plan(df)
     assert plan.count("MapInPandas sources.pages.render(") == 1, plan
-    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert plan.count("MapInPandas operators.spatial_join.exact(") == 1, \
+        plan
+    assert "Join" not in plan, plan
+    assert "Exchange" not in plan, plan
     assert "Union" not in plan, plan
 
 
@@ -174,15 +184,18 @@ def test_hole_boundary(spark, path, res):
 
 @pytest.mark.parametrize("path", ["broadcast", "shuffle"])
 def test_rectangles_only_layer(spark, path):
-    """A layer of rectangles only: the broadcast join returns the
-    filtered candidates with no Python kernel."""
+    """A layer of rectangles only: the rectangle rule alone decides,
+    and the small-layer join runs it in its one kernel."""
     polys = _layer([RECT], [[(x + 10.0, y) for x, y in RECT]])
     pts = _points(_box_edges(1.0, 1.0, 3.0, 2.0)
                   + _box_edges(11.0, 1.0, 13.0, 2.0) + [(5.0, 1.5)])
     out, got = _check_against_oracle(path, spark, pts, polys, res=6)
     assert len(got) == 8
     if path == "broadcast":
-        assert "MapInPandas" not in _final_plan(out)
+        plan = _final_plan(out)
+        assert plan.count("MapInPandas") == 1, plan
+        assert plan.count("MapInPandas operators.spatial_join.exact(") \
+            == 1, plan
 
 
 # an L whose left and bottom edges lie on its bbox, so the envelope
@@ -287,3 +300,76 @@ def test_distributed_covers_match_driver_cover(spark, res):
     pd.testing.assert_frame_equal(
         bbox, want[["cell", "fid", "minx", "miny", "maxx", "maxy"]],
         check_exact=True)
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_cell_law_puts_polygon_points_in_its_cover(seed):
+    """Points on every bbox edge and corner of seeded random polygons,
+    and points inside them, land in a cell of that polygon's cover:
+    the kernel's point cells and the cover's bbox corners go through
+    one cell law (``geo.cells_of``)."""
+    rng = np.random.default_rng(seed)
+    polys = pd.concat([random_polygons_pdf(40, seed), poly_fixture_pdf()],
+                      ignore_index=True)
+    polys["fid"] = np.arange(len(polys), dtype=np.int64)
+    for res in (3, 6, 9, 12):
+        n = 1 << res
+        cover = polygon_cell_cover_pdf(polys, res)
+        for fid, wkb in zip(polys["fid"], polys["geometry"]):
+            g = parse_wkb(bytes(wkb))
+            x0, y0, x1, y1 = g.bbox()
+            t = rng.random(8)
+            xs = np.concatenate([[x0, x1, x1, x0], x0 + t * (x1 - x0),
+                                 x0 + t * (x1 - x0), np.full(8, x0),
+                                 np.full(8, x1)])
+            ys = np.concatenate([[y0, y0, y1, y1], np.full(8, y0),
+                                 np.full(8, y1), y0 + t * (y1 - y0),
+                                 y0 + t * (y1 - y0)])
+            ix = rng.uniform(x0, x1, 64)
+            iy = rng.uniform(y0, y1, 64)
+            inside = points_in_rings(ix, iy, g.rings())
+            xs = np.concatenate([xs, ix[inside]])
+            ys = np.concatenate([ys, iy[inside]])
+            tx, ty = geo.cells_of(xs, ys, res)
+            own = set(cover.loc[cover["fid"] == fid, "cell"])
+            assert set((tx * n + ty).tolist()) <= own, (res, fid)
+
+
+def _overlapping_squares(m):
+    """*m* overlapping 2-degree squares inside one res-6 cell; the odd
+    ones carry an extra top-edge vertex, so they take the ray cast
+    instead of the rectangle rule."""
+    rings = []
+    for k in range(m):
+        x0 = y0 = 0.5 + 0.02 * k
+        ring = [(x0, y0), (x0 + 2.0, y0), (x0 + 2.0, y0 + 2.0)]
+        if k % 2:
+            ring.append((x0 + 1.0, y0 + 2.0))
+        rings.append([ring + [(x0, y0 + 2.0), (x0, y0)]])
+    return _layer(*rings)
+
+
+def test_kernel_output_is_bounded(spark, monkeypatch):
+    """50 polygons share one cell: with the pair slice forced down to
+    97, no frame the kernel yields exceeds 97 rows, and the join still
+    equals brute force, in Spark and called directly."""
+    monkeypatch.setattr(spatial_join, "_PAIR_SLICE", 97)
+    polys = _overlapping_squares(50)
+    cells = polygon_cell_cover_pdf(polys, 6)["cell"]
+    assert cells.nunique() == 1
+    g = np.linspace(0.4, 3.6, 23)
+    pts_pdf = _points([(x, y) for x in g for y in g])
+    kernels = []
+    map_in_pandas = type(spark.range(1)).mapInPandas
+
+    def record(self, fn, schema, *args, **kwargs):
+        kernels.append(fn)
+        return map_in_pandas(self, fn, schema, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark.range(1)), "mapInPandas", record)
+    _, got = _check_against_oracle("broadcast", spark, pts_pdf, polys, 6)
+    assert len(got) > 97
+    frames = list(kernels[0](iter([pts_pdf])))
+    assert len(frames) > 1
+    assert max(len(f) for f in frames) <= 97
+    assert _pairs(pd.concat(frames)) == got

@@ -3,8 +3,6 @@
 Captures `.explain("formatted")` for the flagship operators and
 asserts the plan properties the engine's scale story depends on:
 
-* the spatial-join prefilter is a BroadcastHashJoin (pages never
-  shuffle for the join);
 * page synthesis and cell/tile math run inside WholeStageCodegen;
 * parquet scans push filters and prune columns;
 * the tiling pipeline contains exactly the intended exchanges.
@@ -50,10 +48,6 @@ def main() -> None:
 
     from gdal_spark.session import get_spark
     from gdal_spark.sources.pages import pages_coords_df
-    from gdal_spark.sources.polygons import poly_fixture_pdf
-    from gdal_spark.operators.spatial_join import (
-        spatial_join_points_in_polygons,
-    )
     from gdal_spark.operators.tiling import sparse_pyramid
 
     spark = get_spark("plan-audit", master="local[4]",
@@ -63,14 +57,6 @@ def main() -> None:
     checks = []
 
     pts = pages_coords_df(spark, 100_000)
-    polys = poly_fixture_pdf()
-    joined = spatial_join_points_in_polygons(spark, pts, polys, res=7)
-    p1 = plan_of(joined.groupBy("fid").count())
-    sections.append(("Spatial join (pages x polygons) + rollup", p1))
-    checks.append(("prefilter is BroadcastHashJoin",
-                   "BroadcastHashJoin" in p1))
-    checks.append(("no SortMergeJoin in the join path",
-                   "SortMergeJoin" not in p1))
     # AQE hides codegen stars until the final plan; assert them on
     # the non-adaptive synthesis subplan instead
     checks.append(("page synthesis in WholeStageCodegen",
